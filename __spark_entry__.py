@@ -2108,8 +2108,9 @@ def q_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-dim embeddings -> 8 subspace codes of 3 bits each (m=8, K=8) — the
     compression half of the canonical trillion-scale IVF-PQ ANN layout
     (m bytes/vector instead of 4*dim; scored without decompression by
-    q_pq_adc_topk). MAP-ONLY plan: subcentroids are inlined literals,
-    per-subspace argmin is a sort_array over a transform. Gated in melted
+    q_pq_adc_topk). MAP-ONLY plan: one Arrow-batched kernel carries the
+    subcentroids in its closure and takes the per-subspace argmin on raw
+    distances, exact-rounding only the near-ties. Gated in melted
     (vec_id, subspace, code, dist2) form; dist2 = ROUND(xx - 2*xc + cc, 8)
     where every term is a sequential float fold, so DuckDB reproduces the
     codes AND distances bit-for-bit."""

@@ -6,19 +6,24 @@ part of the training-data-pipeline operator set from the build brief.
 The corpus-scale problem: top-k neighbors over an ``array<float>`` column.
 Brute force is a cross join — O(n·q) dot products; fine for rerank sets,
 fatal at 10^12 rows. The scale path here is **IVF (inverted file)**:
-assign every vector to its nearest of C coarse centroids (one broadcast
-join against a C-row dimension — no shuffle of the corpus), then answer a
-query only within its centroid's bucket (equi-join on ``bucket``), cutting
-the candidate set ~C× per probe. Recall/cost trades by probing the p
-nearest buckets instead of 1.
+assign every vector to its nearest of C coarse centroids (one map-only
+pass with the C-row centroid matrix broadcast in the kernel closure — no
+shuffle of the corpus), then answer a query only within its centroid's
+bucket (equi-join on ``bucket``), cutting the candidate set ~C× per
+probe. Recall/cost trades by probing the p nearest buckets instead of 1.
 
-Two cross-engine-reproducible dot-product forms are used, chosen by plan
-shape:
+Three cross-engine-reproducible dot-product forms are used, chosen by
+plan shape:
 
 * **order-deterministic float fold** (``_fold_dot``): a sequential
   ``F.aggregate(zip_with(...))`` over co-located arrays — bit-identical
   to DuckDB's ``list_dot_product`` (same order, same IEEE arithmetic),
-  zero shuffle, used for all pairwise scoring;
+  zero shuffle, used for pairwise scoring inside the JVM;
+* **index-order numpy accumulation** in Arrow-batched ``mapInPandas``
+  kernels: one vectorized pass per element position, the same IEEE
+  sequence as the fold — used for centroid scoring
+  (``nearest_centroids``), PQ encoding (``pq_encode``) and the block
+  cosine audit path, where one side is a small collected matrix;
 * **order-insensitive exact-decimal sums** over ``posexplode`` elements
   (``_dot``): used when values must survive a grouped aggregation whose
   partial-merge order Spark does not fix (e.g. SRP projections).
@@ -47,22 +52,11 @@ def _dot(df: DataFrame, group_cols: list[str], a: str, b: str, alias: str) -> Da
     )
 
 
-#: Inlined-literal expression budget: plans inline C·dim centroid floats
-#: (or m·K·d PQ codebook floats) as literals; past ~10^6 the generated
-#: plan/codegen blows up (plan-size wall, interpreted fallback). Above
-#: this budget every entry point automatically routes through the
-#: Arrow-batched broadcast-numpy kernel (same map-only plan shape, same
-#: values bit-for-bit — see _nearest_centroids_arrow). Tests override it
-#: per call to force the kernel at small C and assert parity.
-INLINE_LITERAL_BUDGET = 1_000_000
-
-
 def _collect_centroids(centroids: DataFrame) -> list:
-    """[(cid, [float, ...], nb2)] sorted by cid — ONE tiny collect shared
-    by both scoring paths. Norms are driver-side sequential folds
-    (``_seq_dot``), bit-identical to the JVM ``F.aggregate`` fold the
-    literal expressions use everywhere else (cumsum == sequential fold ==
-    DuckDB list_dot_product)."""
+    """[(cid, [float, ...], nb2)] sorted by cid — ONE tiny collect. Norms
+    are driver-side sequential folds (``_seq_dot``), bit-identical to the
+    JVM ``F.aggregate`` fold that computes the corpus-side norms
+    (cumsum == sequential fold == DuckDB list_dot_product)."""
     rows = centroids.select("vec_id", "embedding").collect()
     out = []
     for r in sorted(rows, key=lambda r: r["vec_id"]):
@@ -72,57 +66,18 @@ def _collect_centroids(centroids: DataFrame) -> list:
         e = [float(x) for x in r["embedding"]]
         nb2 = _seq_dot(e, e)
         if nb2 == 0.0:
-            # cosine to a zero vector is undefined; under ANSI SQL the
-            # literal plan's division would abort the whole job at the
-            # first scored row — fail loudly and early instead
+            # cosine to a zero vector is undefined for every scored row —
+            # fail loudly and early instead of emitting NaN assignments
             raise ValueError(
                 f"centroid vec_id={r['vec_id']} has zero norm — cosine "
                 "scoring is undefined; drop or re-seed it")
         out.append((r["vec_id"], e, nb2))
     if not out:
-        # the literal arm would silently emit NULL assignments and the
-        # Arrow arm would crash on an empty (0,) centroid matrix — an
-        # empty centroid frame is always a caller bug, so fail like the
+        # an empty centroid frame is always a caller bug (the kernel would
+        # crash on an empty (0,) centroid matrix) — fail like the
         # zero-norm case: loudly, before any job runs
         raise ValueError("centroids is empty — nothing to score against")
     return out
-
-
-def _centroid_scores(crows: list, dim: int):
-    """Per-corpus-row sorted array of (negcos, cid, cos) centroid scores,
-    computed entirely MAP-SIDE: the C collected centroids are inlined as
-    one array-of-structs literal, so scoring n×C pairs is a projection
-    over the corpus scan — no crossJoin row explosion, no Exchange.
-    Sorting ascending by (negcos, cid) == cosine DESC, cid ASC, the same
-    total order the old per-vid ``row_number`` window produced by
-    shuffling all n×C rows.
-
-    Expression budget: the literal carries C·dim float lits; callers
-    dispatch to the Arrow kernel above INLINE_LITERAL_BUDGET instead of
-    calling this (``nearest_centroids`` is the dispatching entry point).
-    """
-    carr = F.array(*[
-        F.struct(
-            F.array(*[F.lit(float(x)) for x in eb]).alias("eb"),
-            F.lit(float(nb2)).alias("nb2"),
-            F.lit(cid).alias("cid"),
-        )
-        for cid, eb, nb2 in crows
-    ])
-
-    def score(s):
-        cos = F.round(
-            _fold_dot(F.col("ea"), s["eb"], dim) / F.sqrt(F.col("na2") * s["nb2"]), 8
-        )
-        # rank on the RAW value (NaN sorts last, cid-ASC ties) but emit
-        # undefined scores as NULL: the Arrow arm's serializer turns NaN
-        # into null anyway (pandas float NaN == missing), so NULL is the
-        # one representation both arms can produce identically
-        cos_out = F.when(F.isnan(cos), F.lit(None).cast("double")).otherwise(cos)
-        return F.struct((-cos).alias("negcos"), s["cid"].alias("cid"),
-                        cos_out.alias("cos"))
-
-    return F.sort_array(F.transform(carr, score))
 
 
 def _round8_spark_repr(x: float) -> float:
@@ -137,39 +92,55 @@ def _round8_spark_repr(x: float) -> float:
     return float(Decimal(repr(x)).quantize(Decimal("1e-8"), ROUND_HALF_UP))
 
 
-def _nearest_centroids_arrow(v: DataFrame, crows: list, dim: int,
-                             nprobe: int, dot_mode: str = "exact") -> DataFrame:
-    """Arrow-batched broadcast-numpy centroid scorer — the scale path
-    above INLINE_LITERAL_BUDGET (C·dim beyond ~10^6 literals would blow
-    the plan/codegen; a production IVF with C=4096, dim=768 lands here).
-    Same plan shape as the literal path: map-only over the corpus, the
-    C×dim centroid matrix rides the serialized kernel closure (one copy
-    per executor — broadcast semantics), no Exchange, no row explosion.
+def nearest_centroids(v: DataFrame, centroids: DataFrame, nprobe: int = 1,
+                      dot_mode: str = "exact") -> DataFrame:
+    """Map-side centroid assignment: returns ``v``'s columns plus
+    (``__cid`` long, ``__cos`` double) for each of the row's ``nprobe``
+    best centroids (cosine DESC, cid ASC; one output row per probe).
+    ``v`` must carry ``ea`` (vector) and ``na2`` (norm², JVM-folded).
 
-    Bit-parity with the literal path (asserted in tests on identical
-    inputs): dots accumulate in array-INDEX order (one vectorized pass
-    per element position == the sequential JVM fold == DuckDB
-    list_dot_product); ranking runs on RAW doubles first — rounding is
-    monotone, so order can only differ inside a ±1e-8 boundary — and
-    only candidates within 2e-8 of the rank-nprobe raw score are
-    exact-rounded (``_round8_spark_repr``) and re-ranked by
-    (cos DESC, cid ASC), reproducing the literal path's
-    round-then-sort total order including tie-breaks.
+    Plan shape: one Arrow-batched ``mapInPandas`` over the corpus. The
+    C×dim centroid matrix rides the serialized kernel closure (one copy
+    per executor — broadcast semantics), so the plan does not grow with
+    C: no Exchange, no n×C row explosion, and production IVF sizes
+    (C=4096, dim=768) score the same way as the oracle gates.
+
+    Oracle parity (DuckDB ``ROUND(list_dot_product(..) / SQRT(..), 8)``
+    then ``ORDER BY cos DESC, cid ASC``): dots accumulate in array-INDEX
+    order (one vectorized pass per element position == the sequential
+    JVM fold == DuckDB list_dot_product); ranking runs on RAW doubles
+    first — rounding is monotone, so order can only differ inside a
+    ±1e-8 boundary — and only candidates within 2e-8 of the rank-nprobe
+    raw score are exact-rounded (``_round8_spark_repr``) and re-ranked
+    by (cos DESC, cid ASC), reproducing the round-then-sort total order
+    including tie-breaks.
 
     ``dot_mode="gemm"`` is the production-throughput variant: one BLAS
-    matmul per chunk instead of dim element-order passes (~10× on the
-    measured ann_assign cell; the element-order accumulation is memory-
-    bandwidth-bound — it materializes an n×C temporary per element).
-    BLAS sums in a different (pairwise/blocked) order, so raw cosines
-    may differ from the fold by ~1 ulp·dim; ranking still runs raw-
-    then-exact-rounded inside the same ±2e-8 band, so assignments can
-    diverge from the exact arm only when two centroids' true cosines
-    are within ~1e-15 of each other AND straddle a repr-tie — assert-
-    identical on every test fixture. Default stays "exact": it is the
-    oracle-parity arm; opt into "gemm" for bulk assignment at scale."""
+    matmul per chunk instead of dim element-order passes (10.1× the
+    exact mode on the ann_assign scaling cell at local[32]; the element-
+    order accumulation is memory-bandwidth-bound — it materializes an
+    n×C temporary per element). BLAS sums in a different (pairwise/
+    blocked) order, so raw cosines may differ from the fold by ~1
+    ulp·dim; ranking still runs raw-then-exact-rounded inside the same
+    ±2e-8 band, so assignments can diverge from the exact mode only when
+    two centroids' true cosines are within ~1e-15 of each other AND
+    straddle a repr-tie — assert-identical on every test fixture.
+    Default stays "exact": it is the oracle-parity mode; opt into "gemm"
+    for bulk assignment at scale.
+
+    Rows with a NULL or zero-norm vector are filtered (cosine is
+    undefined for them; NotNullCheck / vector-quality checks own
+    flagging). NULL or zero-norm CENTROIDS raise at collect
+    time, as does an empty centroid frame. Vectors carrying NaN elements
+    pass the filter (NaN > 0 in Spark's ordering), rank every centroid
+    LAST with cid-ASC ties, and surface their undefined cosine as NULL."""
     import numpy as np
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
+    if dot_mode not in ("exact", "gemm"):
+        raise ValueError(f"dot_mode must be 'exact' or 'gemm', got {dot_mode!r}")
+    v = v.filter(F.col("ea").isNotNull() & (F.col("na2") > 0))
+    crows = _collect_centroids(centroids)
     cids = np.array([c[0] for c in crows], dtype=np.int64)  # cid-ascending
     Cm = np.array([c[1] for c in crows], dtype=np.float64)
     nb2 = np.array([c[2] for c in crows], dtype=np.float64)
@@ -207,13 +178,12 @@ def _nearest_centroids_arrow(v: DataFrame, crows: list, dim: int,
                 take_cos = np.empty((n, p_eff))
                 for i in range(n):
                     oi = order[i]
-                    # NaN cosines (zero-norm row or centroid) sort LAST:
-                    # Spark's struct sort treats NaN as the largest
-                    # double, tie-broken by cid ASC — np.argsort also
-                    # places NaN last (stable → cid ASC), so padding the
-                    # finite head with NaN columns in oi order exactly
-                    # reproduces the literal path instead of indexing
-                    # into an empty candidate set (IndexError).
+                    # NaN cosines (NaN vector elements) rank LAST with
+                    # cid-ASC ties: np.argsort places NaN last (stable →
+                    # cid ASC), so the finite head is padded with NaN
+                    # columns in oi order instead of indexing into an
+                    # empty candidate set; the serializer emits NaN as
+                    # NULL.
                     nan_row = np.isnan(cos[i, oi])
                     finite = oi[~nan_row]
                     ranked = []
@@ -242,52 +212,7 @@ def _nearest_centroids_arrow(v: DataFrame, crows: list, dim: int,
     return v.mapInPandas(kernel, out_schema)
 
 
-def nearest_centroids(v: DataFrame, centroids: DataFrame, dim: int,
-                      nprobe: int = 1,
-                      literal_budget: int | None = None,
-                      dot_mode: str = "exact") -> DataFrame:
-    """Dispatching entry point for map-side centroid assignment: returns
-    ``v``'s columns plus (``__cid`` long, ``__cos`` double) for each of
-    the row's ``nprobe`` best centroids (cosine DESC, cid ASC; one output
-    row per probe). ``v`` must carry ``ea`` (vector) and ``na2`` (norm²,
-    JVM-folded). Selects the inlined-literal projection while C·dim fits
-    INLINE_LITERAL_BUDGET, else the Arrow-batched broadcast-numpy kernel
-    — identical values either way (parity-tested); mirrors the
-    recommender kernel's k>64 codegen fallback. Rows with a NULL or
-    zero-norm vector are filtered in both arms (cosine is undefined for
-    them, and under ANSI SQL the literal plan's division would abort
-    the job at the first such row; NotNullCheck / vector-quality checks
-    own flagging). Zero-norm CENTROIDS raise at collect time. Vectors
-    carrying NaN elements pass the filter (NaN > 0 in Spark's ordering)
-    and rank LAST with cid-ASC ties; their undefined cosine surfaces as
-    NULL in both arms (the Arrow serializer maps NaN to null, so the
-    literal arm nulls NaN explicitly to match)."""
-    if dot_mode not in ("exact", "gemm"):
-        raise ValueError(f"dot_mode must be 'exact' or 'gemm', got {dot_mode!r}")
-    v = v.filter(F.col("ea").isNotNull() & (F.col("na2") > 0))
-    budget = INLINE_LITERAL_BUDGET if literal_budget is None else literal_budget
-    crows = _collect_centroids(centroids)
-    # an explicit gemm request always takes the Arrow kernel — the BLAS
-    # matmul is the point; the literal plan has no gemm-order analog
-    if dot_mode == "gemm" or len(crows) * dim > budget:
-        return _nearest_centroids_arrow(v, crows, dim, nprobe, dot_mode)
-    if nprobe == 1:
-        best = F.element_at(_centroid_scores(crows, dim), 1)
-        return v.select(
-            "*",
-            best["cid"].cast("long").alias("__cid"),
-            best["cos"].alias("__cos"),
-        )
-    top = F.slice(_centroid_scores(crows, dim), 1, nprobe)
-    return (
-        v.select("*", F.explode(top).alias("__t"))
-        .select(*v.columns, F.col("__t.cid").cast("long").alias("__cid"),
-                F.col("__t.cos").alias("__cos"))
-    )
-
-
 def ivf_assign(emb: DataFrame, centroids: DataFrame,
-               literal_budget: int | None = None,
                dot_mode: str = "exact") -> DataFrame:
     """(vec_id, bucket, cos_to_centroid): nearest centroid by cosine.
 
@@ -295,13 +220,10 @@ def ivf_assign(emb: DataFrame, centroids: DataFrame,
     top-1 pick are both map-side (see ``nearest_centroids``): the corpus
     is never shuffled and never row-multiplied ×C. Ties break on the
     smaller centroid id, matching the oracle's ``ORDER BY cos DESC, cid
-    ASC``. Above INLINE_LITERAL_BUDGET the scorer is the Arrow kernel;
-    ``dot_mode="gemm"`` opts bulk assignment into the BLAS-matmul Arrow
-    variant (see ``_nearest_centroids_arrow`` — throughput mode, not the
-    oracle-parity arm)."""
-    dim = embedding_dim(emb)
-    v = _with_norm(emb, "a", "ea", "na2", dim)
-    out = nearest_centroids(v, centroids, dim, 1, literal_budget, dot_mode)
+    ASC``. ``dot_mode="gemm"`` opts bulk assignment into the BLAS-matmul
+    variant (throughput mode, not the oracle-parity mode)."""
+    v = _with_norm(emb, "a", "ea", "na2")
+    out = nearest_centroids(v, centroids, 1, dot_mode)
     return out.select(
         F.col("a").alias("vec_id"),
         F.col("__cid").alias("bucket"),
@@ -527,18 +449,15 @@ def cosine_near_dup_lsh(emb: DataFrame, spark, threshold: float,
 
 def ivf_probe_buckets(emb: DataFrame, centroids: DataFrame,
                       nprobe: int,
-                      literal_budget: int | None = None,
                       dot_mode: str = "exact") -> DataFrame:
     """(vec_id, bucket) — each vector's ``nprobe`` nearest centroid
     buckets (probe list). nprobe=1 degenerates to ivf_assign's bucket.
 
     Map-side like ``ivf_assign``: a narrow ≤nprobe-row fan-out per
-    vector, not a shuffle of n×C scored pairs; Arrow kernel above the
-    literal budget, BLAS variant via ``dot_mode="gemm"``."""
-    dim = embedding_dim(emb)
-    v = _with_norm(emb, "a", "ea", "na2", dim)
-    out = nearest_centroids(v, centroids, dim, nprobe, literal_budget,
-                            dot_mode)
+    vector, not a shuffle of n×C scored pairs; BLAS variant via
+    ``dot_mode="gemm"``."""
+    v = _with_norm(emb, "a", "ea", "na2")
+    out = nearest_centroids(v, centroids, nprobe, dot_mode)
     return out.select(
         F.col("a").alias("vec_id"), F.col("__cid").alias("bucket")
     )
@@ -589,7 +508,7 @@ def ivf_topk(emb: DataFrame, centroids: DataFrame, query_pred,
 def ivf_centroid_update(emb: DataFrame, centroids: DataFrame,
                         melted: bool = False) -> DataFrame:
     """One Lloyd iteration of IVF centroid training: assign every vector
-    to its nearest current centroid (MAP-SIDE — see ``_centroid_scores``;
+    to its nearest current centroid (MAP-SIDE — see ``nearest_centroids``;
     the corpus is neither joined nor row-multiplied), then each bucket's
     new centroid is the element-wise mean of its members.
 
@@ -614,9 +533,8 @@ def ivf_centroid_update(emb: DataFrame, centroids: DataFrame,
     (non-empty buckets only — the cross-engine-gated form)."""
     if "vec_id" not in centroids.columns and "bucket" in centroids.columns:
         centroids = centroids.withColumnRenamed("bucket", "vec_id")
-    dim = embedding_dim(emb)
-    v = _with_norm(emb, "vec_id", "ea", "na2", dim)
-    tagged = nearest_centroids(v, centroids, dim, 1).select(
+    v = _with_norm(emb, "vec_id", "ea", "na2")
+    tagged = nearest_centroids(v, centroids).select(
         F.col("__cid").alias("bucket"), F.col("ea").alias("emb")
     )
     means = (
@@ -823,24 +741,49 @@ def pq_codebooks(emb: DataFrame, m: int, n_codes: int = 8) -> list:
     ]
 
 
-def _pq_encode_arrow(emb: DataFrame, codebooks: list, m: int,
-                     d: int) -> DataFrame:
-    """Arrow-batched PQ encoder — the scale path above
-    INLINE_LITERAL_BUDGET (m·K·d codebook floats; K=256 production
-    codebooks at dim 768 would inline ~200k lits per subspace × m).
-    Same map-only plan shape and bit-identical output as the literal
-    path (parity-tested): per subspace, xx is the float64 cumsum fold
-    over the subvector slice, xc accumulates in element-index order,
-    d2 = (xx − 2·xc) + cc in the literal expression's association
-    order; the argmin runs on RAW d2 (np.argmin → first index = code
-    ASC on exact ties) and only candidates within 2e-8 of the raw best
-    are exact-rounded (Spark-style shortest-repr HALF_UP) and re-ranked
-    by (d2 ASC, code ASC)."""
+def pq_encode(emb: DataFrame, m: int = 8, n_codes: int = 8,
+              codebooks: list | None = None) -> DataFrame:
+    """Product-quantization encoding: (vec_id, codes array<int>,
+    dist2s array<double>) — per subspace ``s``, ``codes[s]`` is the
+    L2-nearest codebook entry for the vector's ``s``-th subvector and
+    ``dist2s[s]`` the (rounded) squared distance.
+
+    This is the storage path that makes trillion-scale ANN affordable:
+    m bytes per vector instead of 4·dim (here 8 codes for a 64-dim
+    float — 32×), scored without decompression via ADC lookup tables
+    (``pq_adc_topk``). IVF partitions the corpus; PQ compresses what's
+    inside each partition — together they are the canonical IVF-PQ
+    layout.
+
+    Plan shape: MAP-ONLY, one Arrow-batched ``mapInPandas``; the m×K×d
+    codebook floats ride the kernel closure, so the plan does not grow
+    with K (production K=256 at dim 768 scores the same way).
+    Cross-engine exactness: dist² = ROUND(xx − 2·xc + cc, 8) where xx
+    is the float64 cumsum fold over the subvector slice and xc
+    accumulates in element-index order (both bit-identical to DuckDB
+    ``list_dot_product`` on the same slice), cc is the driver-side
+    sequential fold of the codebook entry (``_seq_dot``), and d2 keeps
+    the oracle expression's association order. The argmin runs on RAW
+    d2 (np.argmin → first index = code ASC on exact ties); only
+    candidates within 2e-8 of the raw best are exact-rounded
+    (``_round8_spark_repr``) and re-ranked by (d2 ASC, code ASC).
+    Rows with a NULL embedding are filtered (unencodable)."""
     import numpy as np
     from pyspark.sql.types import (
         ArrayType, DoubleType, IntegerType, StructField, StructType,
     )
 
+    if codebooks is not None:
+        # dim is implied — no extra job over the (possibly expensively
+        # derived) input just to measure array width
+        d = len(codebooks[0][0])
+    else:
+        dim = embedding_dim(emb)
+        if dim % m:
+            raise ValueError(f"dim {dim} not divisible by m={m}")
+        d = dim // m
+        codebooks = pq_codebooks(emb, m, n_codes)
+    emb = emb.filter(F.col("embedding").isNotNull())
     Cbs = np.array(codebooks, dtype=np.float64)          # [m, K, d]
     ccs = np.array([[_seq_dot(cv, cv) for cv in codebooks[s]]
                     for s in range(m)], dtype=np.float64)  # [m, K]
@@ -867,11 +810,11 @@ def _pq_encode_arrow(emb: DataFrame, codebooks: list, m: int,
                     xc += Xs[:, d0][:, None] * Cbs[s][:, d0][None, :]
                 d2 = (xx[:, None] - 2.0 * xc) + ccs[s][None, :]
                 for i in range(n):
-                    # NaN distances (NaN vector elements) sort LAST in
-                    # Spark's struct sort; np.argmin would return the
-                    # first NaN index instead. Rank among finite codes;
-                    # an all-NaN row degrades to (code 0, NaN) — the
-                    # literal path's all-ties-by-code-ASC order.
+                    # NaN distances (NaN vector elements) rank LAST;
+                    # np.argmin would return the first NaN index
+                    # instead. Rank among finite codes; an all-NaN
+                    # subspace degrades to (code 0, NaN) — all ties,
+                    # code ASC — and the serializer emits NaN as NULL.
                     row = d2[i]
                     fin = np.nonzero(~np.isnan(row))[0]
                     if len(fin) == 0:
@@ -894,104 +837,6 @@ def _pq_encode_arrow(emb: DataFrame, codebooks: list, m: int,
     return emb.mapInPandas(kernel, out_schema)
 
 
-def pq_encode(emb: DataFrame, m: int = 8, n_codes: int = 8,
-              codebooks: list | None = None,
-              literal_budget: int | None = None) -> DataFrame:
-    """Product-quantization encoding: (vec_id, codes array<int>,
-    dist2s array<double>) — per subspace ``s``, ``codes[s]`` is the
-    L2-nearest codebook entry for the vector's ``s``-th subvector and
-    ``dist2s[s]`` the (rounded) squared distance.
-
-    This is the storage path that makes trillion-scale ANN affordable:
-    m bytes per vector instead of 4·dim (here 8 codes for a 64-dim
-    float — 32×), scored without decompression via ADC lookup tables
-    (``pq_adc_topk``). IVF partitions the corpus; PQ compresses what's
-    inside each partition — together they are the canonical IVF-PQ
-    layout.
-
-    Plan shape: MAP-ONLY. The m×K subcentroids are inlined as array
-    literals (same expression-budget argument as ``_centroid_scores``);
-    per subspace the K distances are a transform over that literal and
-    the argmin is ``sort_array(...)[1]`` with code-ascending tie-break.
-    Above INLINE_LITERAL_BUDGET (m·K·d floats) encoding automatically
-    routes through the Arrow-batched kernel (``_pq_encode_arrow``) —
-    identical values, no giant literal in the plan.
-    Cross-engine exactness: dist² = ROUND(xx − 2·xc + cc, 8) where xx
-    and xc are sequential folds over the subvector slice (bit-identical
-    to DuckDB ``list_dot_product`` on the same slice) and cc is the
-    driver-side sequential fold of the codebook entry (``_seq_dot``)."""
-    if codebooks is not None:
-        # dim is implied — no extra job over the (possibly expensively
-        # derived) input just to measure array width
-        d = len(codebooks[0][0])
-        dim = d * m
-    else:
-        dim = embedding_dim(emb)
-        if dim % m:
-            raise ValueError(f"dim {dim} not divisible by m={m}")
-        d = dim // m
-        codebooks = pq_codebooks(emb, m, n_codes)
-    # NULL embeddings are unencodable: filtered here so both dispatch
-    # arms share one defined semantic (the Arrow kernel's np.vstack
-    # would die on None; the literal arm would emit useless null codes)
-    emb = emb.filter(F.col("embedding").isNotNull())
-    budget = INLINE_LITERAL_BUDGET if literal_budget is None else literal_budget
-    if m * len(codebooks[0]) * d > budget:
-        return _pq_encode_arrow(emb, codebooks, m, d)
-
-    # slice + per-subspace self-dot projected ONCE (HOF lambda bodies
-    # re-evaluate referenced expressions per element; a projected column
-    # binding survives — see functions/text.py token_shingles)
-    proj = emb.select(
-        "*",
-        *[F.slice(F.col("embedding"), s * d + 1, d).alias(f"__xs_{s}")
-          for s in range(m)],
-    ).select(
-        "*",
-        *[_fold_dot(F.col(f"__xs_{s}"), F.col(f"__xs_{s}")).alias(f"__xx_{s}")
-          for s in range(m)],
-    )
-
-    bests = []
-    for s in range(m):
-        cb = F.array(*[
-            F.struct(
-                F.array(*[F.lit(x) for x in code_vec]).alias("v"),
-                F.lit(_seq_dot(code_vec, code_vec)).alias("cc"),
-                F.lit(c).alias("code"),
-            )
-            for c, code_vec in enumerate(codebooks[s])
-        ])
-
-        def make_dist(s):
-            # single-param closure: a 2-param lambda would receive the
-            # ARRAY INDEX as its second argument, silently shadowing the
-            # default (the F.transform trap — see _seeded_md5 in text.py)
-            def dist(entry):
-                xc = _fold_dot(F.col(f"__xs_{s}"), entry["v"])
-                d2 = F.round(
-                    F.col(f"__xx_{s}") - F.lit(2.0) * xc + entry["cc"], 8)
-                return F.struct(d2.alias("d2"), entry["code"].alias("code"))
-            return dist
-
-        bests.append(
-            F.element_at(F.sort_array(F.transform(cb, make_dist(s))), 1))
-
-    # NaN d2 (NaN vector elements) ranks LAST in the struct sort above,
-    # but the EMITTED value is null: the Arrow arm's serializer turns
-    # NaN into null (pandas float NaN == missing), so null is the one
-    # representation both dispatch arms produce identically
-    return proj.select(
-        *emb.columns,
-        F.array(*[b["code"] for b in bests]).alias("codes"),
-        F.array(*[
-            F.when(F.isnan(b["d2"]), F.lit(None).cast("double"))
-            .otherwise(b["d2"])
-            for b in bests
-        ]).alias("dist2s"),
-    )
-
-
 def pq_train(emb: DataFrame, m: int = 8, n_codes: int = 8,
              n_iter: int = 2, codebooks: list | None = None,
              melted: bool = False):
@@ -1002,11 +847,11 @@ def pq_train(emb: DataFrame, m: int = 8, n_codes: int = 8,
     over the m subvector slices, all subspaces in ONE pass per
     iteration.
 
-    Per iteration: assignment is ``pq_encode`` (map-only inlined-argmin,
-    no shuffle); the update is one narrow (subspace, code, pos) shuffle
+    Per iteration: assignment is ``pq_encode`` (map-only kernel, no
+    shuffle); the update is one narrow (subspace, code, pos) shuffle
     of n·dim decimal partial sums that combine map-side to ≤ m·K·d
     partials per task — the trained codebooks (m·K·d floats, driver-tiny)
-    feed the next iteration's inlined literals. Codes that attract zero
+    feed the next iteration's encoder. Codes that attract zero
     vectors keep their previous entry (same C-preservation rule as
     ``ivf_centroid_update``). Means are exact-decimal sums / counts,
     ROUND 8 — bit-reproducible on any engine.
@@ -1159,20 +1004,19 @@ def write_ivf_layout(emb: DataFrame, centroids: DataFrame, path: str,
     table scan. The Iceberg analog is a table partitioned by
     ``bucket`` (identity transform on the assigned centroid id).
 
-    Bucket assignment is the same map-side inlined-centroid argmax as
+    Bucket assignment is the same map-side centroid kernel as
     ``ivf_assign``/``ivf_pq_topk`` — writing the layout is ONE pass over
     the corpus, no shuffle except the write's own file distribution.
     With ``m`` set, PQ codes (``pq_encode``) are materialized alongside,
     so the serving scan can read the m-byte ``codes`` column and skip
     the float vectors entirely. Reuses the staged-bucket write pattern
     of checkpoint.py (stage once, prune every read)."""
-    dim = embedding_dim(emb)
     base = emb.select(
         "vec_id", "embedding",
         F.col("embedding").alias("ea"),
         _fold_dot(F.col("embedding"), F.col("embedding")).alias("na2"),
     )
-    out = nearest_centroids(base, centroids, dim, 1).select(
+    out = nearest_centroids(base, centroids).select(
         "vec_id", "embedding", F.col("__cid").alias("bucket")
     )
     if m is not None:
@@ -1219,8 +1063,8 @@ def ivf_pq_topk(emb: DataFrame, query_id: int, k: int = 10,
     centroid, probe the query's ``n_probe`` nearest buckets, ADC-score
     only the vectors inside them.
 
-    Plan shape: ONE map-only projection computes the bucket (inlined
-    centroid scores, as ``ivf_assign``) AND the PQ codes; the probe
+    Plan shape: ONE map-only pass computes the bucket (the centroid
+    kernel, as ``ivf_assign``) AND the PQ codes; the probe
     filter is a plain scan predicate (on bucket-partitioned storage it
     becomes partition pruning — the scan itself shrinks to
     n_probe/n_buckets of the table); ADC scoring is a projection; the
@@ -1231,8 +1075,8 @@ def ivf_pq_topk(emb: DataFrame, query_id: int, k: int = 10,
     SAME rounding as the engine expressions (HALF_UP at 8dp on
     sequential-fold cosines), so an independent engine reproduces the
     probe set, the candidate set, and every score bit-for-bit."""
-    dim = embedding_dim(emb)
-    centroids = emb.filter(F.col("vec_id") < n_buckets)         .select("vec_id", "embedding")
+    centroids = emb.filter(F.col("vec_id") < n_buckets) \
+        .select("vec_id", "embedding")
     codebooks = pq_codebooks(emb, m, n_codes)
     q = _query_vector(emb, query_id)
     probe = _probe_ids(centroids, q, n_probe)
@@ -1243,7 +1087,7 @@ def ivf_pq_topk(emb: DataFrame, query_id: int, k: int = 10,
         _fold_dot(F.col("embedding"), F.col("embedding")).alias("na2"),
     )
     pruned = (
-        nearest_centroids(base, centroids, dim, 1)
+        nearest_centroids(base, centroids)
         .select("vec_id", "embedding", F.col("__cid").alias("bucket"))
         .filter(F.col("bucket").isin([int(p) for p in probe]))
     )

@@ -885,6 +885,11 @@ def line_dedup(docs: DataFrame, min_docs: int = 2,
     )
 
 
+#: Gopher's top-n-gram character-mass bounds (Rae et al. 2021, §A1.1),
+#: in percent of document characters, keyed by n.
+_TOP_NGRAM_PCT = {2: 20, 3: 18, 4: 16, 5: 15}
+
+
 def repetition_signals(docs: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text",
                        ngram_ns: tuple = (2, 3)) -> DataFrame:
@@ -911,9 +916,10 @@ def repetition_signals(docs: DataFrame, id_col: str = "doc_id",
       denominator (display/threshold columns);
     * ``rep_pass`` — Gopher-shaped bounds evaluated in INTEGER
       cross-multiplied form (``dup_lines·100 ≤ 30·n_lines``,
-      ``dup_line_chars·100 ≤ 20·line_chars``,
-      ``top2·100 ≤ 20·text_chars``, ``top3·100 ≤ 18·text_chars``)
-      so boundary docs can never flip on float rounding.
+      ``dup_line_chars·100 ≤ 20·line_chars``, and per n
+      ``top{n}·100 ≤ _TOP_NGRAM_PCT[n]·text_chars``) so boundary docs
+      can never flip on float rounding. An n with no Gopher bound
+      raises ``ValueError``.
 
     Scale shape: line metrics are one (id, line)-keyed aggregation with
     map-side combine, n-gram metrics one (id, n, gram)-keyed aggregation
@@ -924,8 +930,10 @@ def repetition_signals(docs: DataFrame, id_col: str = "doc_id",
     ids/texts are dropped (keyed per-document metrics are undefined for
     them; NotNullCheck owns flagging)."""
     for n in ngram_ns:
-        if n < 1:
-            raise ValueError(f"ngram sizes must be >= 1: {ngram_ns}")
+        if n not in _TOP_NGRAM_PCT:
+            raise ValueError(
+                f"ngram size {n} has no top-n-gram bound; supported "
+                f"ngram_ns are {sorted(_TOP_NGRAM_PCT)}")
     base = docs.filter(
         F.col(id_col).isNotNull() & F.col(text_col).isNotNull()
     ).select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
@@ -987,8 +995,9 @@ def repetition_signals(docs: DataFrame, id_col: str = "doc_id",
         den > 0, F.round(num.cast("double") / den, 8)
     ).otherwise(F.lit(0.0))
     gram_pass = [
-        ints[f"top{n}gram_chars"] * 100 <= lim * F.col("text_chars")
-        for n, lim in zip(ngram_ns, (20, 18, 16, 15))
+        ints[f"top{n}gram_chars"] * 100
+        <= _TOP_NGRAM_PCT[n] * F.col("text_chars")
+        for n in ngram_ns
     ]
     passed = (
         (ints["dup_lines"] * 100 <= 30 * ints["n_lines"])

@@ -95,16 +95,3 @@ def render_scorecard(rows: Iterable[Mapping], out_dir: str,
                 + f"<td class='tot'>{grand}</td></tr>\n</table>\n")
     return csv_path, html_path
 
-
-def write_scorecard(verdicts, out_dir: str, name: str = "scorecard",
-                    row_col: str = "partition") -> tuple[str, str]:
-    """DataFrame convenience wrapper: collect the (tiny — one row per
-    check × partition × metric) verdict frame and render. Use the
-    row-based :func:`render_scorecard` when the rows are already local
-    (the checkpoint runner's case)."""
-    rows = [
-        {"row_key": r[row_col] or "", "check": r["check"],
-         "passed": bool(r["passed"])}
-        for r in verdicts.collect()
-    ]
-    return render_scorecard(rows, out_dir, name=name, row_label=row_col)

@@ -65,16 +65,6 @@ def load_csv(
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:
-    return {t: load_table(spark, t, sf_dir) for t in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Register every testdata table as a temp view for spark.sql paths."""
-    for name, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def write_table(df: DataFrame, path_or_name: str, mode: str = "overwrite") -> None:
     """Sink: Iceberg ``writeTo(...).append()`` when cataloged, else parquet.
 

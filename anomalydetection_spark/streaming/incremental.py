@@ -121,27 +121,6 @@ def running_column_stats_stream(
     )
 
 
-def watermarked_rate_metrics(
-    images_stream: DataFrame,
-    window: str = "1 minute",
-    watermark: str = "2 minutes",
-    ts_col: str = "ingest_ts",
-) -> DataFrame:
-    """Per-(window, fmt) arrival metrics with late-data handling — the
-    streaming analog of the suite's per-partition metrics rows. Late rows
-    beyond the watermark are dropped from their window (documented
-    trade-off; the batch suite re-derives exact numbers)."""
-    return (
-        images_stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("time_window"), "fmt")
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.avg("w").alias("mean_width"),
-            F.sum(F.col("caption").isNull().cast("long")).alias("null_captions"),
-        )
-    )
-
-
 def dedup_stream(
     spark: SparkSession,
     input_path: str,

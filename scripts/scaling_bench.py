@@ -87,10 +87,10 @@ def run():
 """
 
 # Large-C IVF assignment: C=4096 centroids x dim 256 = 1,048,576 floats
-# > INLINE_LITERAL_BUDGET, so this cell exercises the Arrow-batched
-# broadcast-numpy scorer (the production-ANN path) — map-only Python
-# compute, the closest analog to the decode cell but with a dense
-# O(C*dim) per-row kernel. The _gemm variant runs the same job with
+# through the Arrow-batched broadcast-numpy scorer (the one centroid
+# scoring path, at production-ANN size) — map-only Python compute, the
+# closest analog to the decode cell but with a dense O(C*dim) per-row
+# kernel. The _gemm variant runs the same job with
 # dot_mode="gemm" (one BLAS matmul per chunk instead of dim element-
 # order passes — the bulk-throughput mode).
 _ANN_BODY = r"""
@@ -475,7 +475,7 @@ TITLES = {
     "kernel_ts": "K2 packed-series forecast-band kernel (shuffle + "
                  "explicitly-repartitioned vectorized Python scoring)",
     "ann_assign": "Large-C IVF assignment (C=4096 × dim 256 — the "
-                  "Arrow broadcast-numpy scorer above the literal budget)",
+                  "Arrow broadcast-numpy scorer)",
     "ann_assign_gemm": "Large-C IVF assignment, dot_mode=\"gemm\" (same "
                        "job, one BLAS matmul per chunk — the bulk-"
                        "throughput mode)",
@@ -663,8 +663,8 @@ def write_markdown(result: dict, cpus: list[int], pairs: list) -> None:
     if "ann_assign" in ws:
         lines += [
             "The `ann_assign` workload is the Arrow broadcast-numpy centroid",
-            "scorer above the inlined-literal budget — the production-ANN",
-            f"path (C=4096 × dim 256): {eff('ann_assign', lo0, hi0):.2f} at"
+            "scorer at production-ANN size",
+            f"(C=4096 × dim 256): {eff('ann_assign', lo0, hi0):.2f} at"
             f" {lo0}→{hi0} (ideal — per-task numpy compute with zero",
             f"coordination) and {eff('ann_assign', lo1, hi1):.2f} at"
             f" {lo1}→{hi1}, tracking the scan control"

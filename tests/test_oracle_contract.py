@@ -20,6 +20,15 @@ FAST_SUBSET = [
     "asof_join_clicks",
     "session_stats",
     "set_intersect_except",
+    # ANN / PQ gates: the DuckDB oracle checks the Arrow centroid and PQ
+    # kernels (the only scoring path) directly
+    "ivf_centroid_update",
+    "ann_ivf_topk",
+    "pq_encode",
+    "pq_adc_topk",
+    "ivf_pq_topk",
+    "pq_train",
+    "ivf_pq_pruned",
 ]
 
 

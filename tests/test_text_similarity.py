@@ -723,60 +723,72 @@ def test_vocabulary_matches_python_and_uses_topk_plan(spark):
     assert got == [("c", 4, 2, 1), ("b", 3, 2, 2)]
 
 
-def test_arrow_centroid_scorer_bit_parity_with_literal_path(spark):
-    """VERDICT r04 #1: above INLINE_LITERAL_BUDGET (C·dim literals) the
-    centroid scorer must route through the Arrow broadcast-numpy kernel
-    and produce BIT-EQUAL output to the inlined-literal plan — same
-    index-order dots, same ROUND-8 cosine, same (cos DESC, cid ASC)
-    tie-breaks. Forced here with literal_budget=0 on identical inputs
-    (mirrors kernels/recommender.py's k>64 codegen fallback pattern)."""
+def _duckdb_centroid_ranks(emb, n_centroids: int, nprobe: int) -> list:
+    """(vid, cid, cos) for each vector's ``nprobe`` best centroids among
+    ``vec_id < n_centroids``, computed independently by DuckDB over the
+    parquet files behind ``emb`` with the oracle gates' semantics:
+    sequential-fold ``list_dot_product``, ``ROUND(.., 8)``,
+    ``ORDER BY cos DESC, cid ASC``."""
+    from urllib.parse import urlparse
+
+    import duckdb
+
+    files = [urlparse(f).path for f in emb.inputFiles()]
+    return duckdb.sql(f"""
+        WITH e AS (
+          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+          FROM read_parquet({files!r})
+        ), cdots AS (
+          SELECT x.vec_id AS vid, c.vec_id AS cid,
+                 ROUND(list_dot_product(x.v, c.v)
+                       / SQRT(list_dot_product(x.v, x.v)
+                              * list_dot_product(c.v, c.v)), 8) AS cos
+          FROM e x JOIN e c ON c.vec_id < {n_centroids}
+        )
+        SELECT vid, cid, cos FROM (
+          SELECT vid, cid, cos,
+                 ROW_NUMBER() OVER (PARTITION BY vid
+                                    ORDER BY cos DESC, cid ASC) AS rk
+          FROM cdots
+        ) WHERE rk <= {nprobe}
+    """).fetchall()
+
+
+def test_centroid_scorer_matches_duckdb_oracle(spark):
+    """The Arrow centroid kernel against an independent DuckDB ranking
+    on the sf0.001 corpus: ivf_assign's (bucket, ROUND-8 cosine) and the
+    nprobe=2/3 probe lists of ivf_probe_buckets equal the oracle's
+    (cos DESC, cid ASC) top-nprobe, tie-breaks included. (The Lloyd
+    step and IVF-PQ compositions are gated in the oracle fast subset.)"""
     from anomalydetection_spark.functions.similarity import (
         ivf_assign,
-        ivf_centroid_update,
         ivf_probe_buckets,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     centroids = emb.filter(F.col("vec_id") < 8).select("vec_id", "embedding")
 
-    lit = {r["vec_id"]: (r["bucket"], r["cos_to_centroid"])
+    got = {r["vec_id"]: (r["bucket"], r["cos_to_centroid"])
            for r in ivf_assign(emb, centroids).collect()}
-    arr = {r["vec_id"]: (r["bucket"], r["cos_to_centroid"])
-           for r in ivf_assign(emb, centroids, literal_budget=0).collect()}
-    assert arr == lit and len(lit) > 0
+    want = {vid: (cid, cos)
+            for vid, cid, cos in _duckdb_centroid_ranks(emb, 8, 1)}
+    assert got == want and len(want) > 0
 
     for nprobe in (2, 3):
-        plit = {(r["vec_id"], r["bucket"])
-                for r in ivf_probe_buckets(emb, centroids, nprobe).collect()}
-        parr = {(r["vec_id"], r["bucket"])
-                for r in ivf_probe_buckets(emb, centroids, nprobe,
-                                           literal_budget=0).collect()}
-        assert parr == plit and len(plit) > 0
-
-    # one Lloyd step composes the scorer: means must match bit-for-bit
-    import anomalydetection_spark.functions.similarity as sim
-    upd_lit = {(r["bucket"], r["pos"]): (r["mean"], r["n"])
-               for r in ivf_centroid_update(emb, centroids,
-                                            melted=True).collect()}
-    orig = sim.INLINE_LITERAL_BUDGET
-    sim.INLINE_LITERAL_BUDGET = 0
-    try:
-        upd_arr = {(r["bucket"], r["pos"]): (r["mean"], r["n"])
-                   for r in ivf_centroid_update(emb, centroids,
-                                                melted=True).collect()}
-    finally:
-        sim.INLINE_LITERAL_BUDGET = orig
-    assert upd_arr == upd_lit
+        got_p = sorted((r["vec_id"], r["bucket"]) for r in
+                       ivf_probe_buckets(emb, centroids, nprobe).collect())
+        want_p = sorted((vid, cid) for vid, cid, _ in
+                        _duckdb_centroid_ranks(emb, 8, nprobe))
+        assert got_p == want_p and len(want_p) == nprobe * len(want)
 
 
 def test_gemm_dot_mode_matches_exact_arm(spark):
     """dot_mode="gemm" (the BLAS-matmul throughput variant of the Arrow
     scorer) must produce the SAME assignments and probe lists as the
     exact element-order arm, and cosines within the ~1 ulp·dim BLAS
-    reordering bound; an explicit gemm request routes through the Arrow
-    kernel even below the literal budget. Assignments only diverge when
-    two true cosines sit within ~1e-15 AND straddle a repr-tie — never
-    on real data; this fixture asserts exact equality."""
+    reordering bound. Assignments only diverge when two true cosines
+    sit within ~1e-15 AND straddle a repr-tie — never on real data;
+    this fixture asserts exact equality."""
     from anomalydetection_spark.functions.similarity import (
         ivf_assign,
         ivf_probe_buckets,
@@ -786,7 +798,7 @@ def test_gemm_dot_mode_matches_exact_arm(spark):
     centroids = emb.filter(F.col("vec_id") < 8).select("vec_id", "embedding")
 
     exact = {r["vec_id"]: (r["bucket"], r["cos_to_centroid"])
-             for r in ivf_assign(emb, centroids, literal_budget=0).collect()}
+             for r in ivf_assign(emb, centroids).collect()}
     gemm = {r["vec_id"]: (r["bucket"], r["cos_to_centroid"])
             for r in ivf_assign(emb, centroids, dot_mode="gemm").collect()}
     assert len(gemm) == len(exact) > 0
@@ -798,8 +810,7 @@ def test_gemm_dot_mode_matches_exact_arm(spark):
         assert gcos == pytest.approx(cos, abs=2e-8)
 
     pexact = {(r["vec_id"], r["bucket"])
-              for r in ivf_probe_buckets(emb, centroids, 2,
-                                         literal_budget=0).collect()}
+              for r in ivf_probe_buckets(emb, centroids, 2).collect()}
     pgemm = {(r["vec_id"], r["bucket"])
              for r in ivf_probe_buckets(emb, centroids, 2,
                                         dot_mode="gemm").collect()}
@@ -808,36 +819,24 @@ def test_gemm_dot_mode_matches_exact_arm(spark):
     with pytest.raises(ValueError, match="dot_mode"):
         ivf_assign(emb, centroids, dot_mode="fast").collect()
 
-    # empty centroids must fail loudly in EVERY arm (the literal plan
-    # would emit NULL assignments, the Arrow matrix would be 1-D empty)
+    # empty centroids must fail loudly in both dot modes, before any job
     none = centroids.filter(F.col("vec_id") < 0)
-    for kw in ({}, {"dot_mode": "gemm"}, {"literal_budget": 0}):
+    for kw in ({}, {"dot_mode": "gemm"}):
         with pytest.raises(ValueError, match="empty"):
             ivf_assign(emb, none, **kw)
 
 
-def test_arrow_pq_encoder_bit_parity_with_literal_path(spark):
-    """pq_encode above the m·K·d literal budget routes through
-    _pq_encode_arrow; forced via literal_budget=0 — codes AND rounded
-    dist² bit-equal to the literal plan, including code-ascending
-    tie-breaks on raw-equal distances."""
-    from anomalydetection_spark.functions.similarity import pq_encode
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    lit = {r["vec_id"]: (list(r["codes"]), list(r["dist2s"]))
-           for r in pq_encode(emb, m=8, n_codes=8).collect()}
-    arr = {r["vec_id"]: (list(r["codes"]), list(r["dist2s"]))
-           for r in pq_encode(emb, m=8, n_codes=8,
-                              literal_budget=0).collect()}
-    assert arr == lit and len(lit) > 0
-
-
-def test_arrow_scorer_handles_exact_ties_and_round_boundary(spark):
-    """Tie semantics parity on ADVERSARIAL inputs: duplicate centroids
+def test_centroid_scorer_exact_ties_and_round_boundary(spark):
+    """Tie semantics on ADVERSARIAL inputs: duplicate centroids
     (raw-equal cosines → cid ASC must win) and centroids whose cosines
-    differ by <1e-8 (ROUND-8 collapses them — the literal path then
-    tie-breaks on cid, and the kernel's boundary refinement must too)."""
-    from anomalydetection_spark.functions.similarity import ivf_assign
+    differ by <1e-8 (ROUND-8 collapses them, so the tie-break falls to
+    cid — the kernel's ±2e-8 boundary refinement must see it). Expected
+    values are the round-then-sort reference order (cos DESC, cid ASC
+    over ROUND(cos, 8)), fixed as literals."""
+    from anomalydetection_spark.functions.similarity import (
+        ivf_assign,
+        ivf_probe_buckets,
+    )
 
     base = [1.0, 2.0, 3.0, 4.0]
     rows = [
@@ -851,36 +850,43 @@ def test_arrow_scorer_handles_exact_ties_and_round_boundary(spark):
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     centroids = emb.filter(F.col("vec_id") < 4).select("vec_id", "embedding")
-    lit = {r["vec_id"]: (r["bucket"], r["cos_to_centroid"])
+    got = {r["vec_id"]: (r["bucket"], r["cos_to_centroid"])
            for r in ivf_assign(emb, centroids).collect()}
-    arr = {r["vec_id"]: (r["bucket"], r["cos_to_centroid"])
-           for r in ivf_assign(emb, centroids, literal_budget=0).collect()}
-    assert arr == lit
-    assert lit[10][0] == 0      # cid ASC among raw-equal 0/1/2
+    assert got == {
+        0: (0, 1.0), 1: (0, 1.0), 2: (0, 1.0), 3: (3, 1.0),
+        10: (0, 1.0),                # cid ASC among raw-equal 0/1/2
+        11: (0, 1.0),
+        12: (3, -0.66666667),
+    }
+
+    def probes(nprobe):
+        return sorted((r["vec_id"], r["bucket"]) for r in
+                      ivf_probe_buckets(emb, centroids, nprobe).collect())
+
+    assert probes(2) == [
+        (0, 0), (0, 1), (1, 0), (1, 1), (2, 0), (2, 1), (3, 0), (3, 3),
+        (10, 0), (10, 1), (11, 0), (11, 1), (12, 0), (12, 3),
+    ]
+    assert probes(3) == [
+        (0, 0), (0, 1), (0, 2), (1, 0), (1, 1), (1, 2), (2, 0), (2, 1),
+        (2, 2), (3, 0), (3, 1), (3, 3), (10, 0), (10, 1), (10, 2),
+        (11, 0), (11, 1), (11, 2), (12, 0), (12, 1), (12, 3),
+    ]
 
 
-def test_arrow_scorer_degenerate_inputs_match_literal_path(spark):
-    """Degenerate-input parity (review r05). Under ANSI SQL the literal
-    plan's division ABORTS the job on a zero divisor, so the defined
-    contract is: NULL / zero-norm corpus rows are filtered in both arms,
-    a zero-norm centroid raises loudly at collect time, and NaN-element
-    vectors (which pass the na2>0 filter — NaN > 0 in Spark's ordering)
-    score NaN ranked LAST with cid-ASC ties — where the Arrow kernel
-    previously died on an empty candidate set."""
-    import math
-
-    import pytest as _pytest
-
+def test_centroid_scorer_degenerate_inputs(spark):
+    """Degenerate-input contract: NULL / zero-norm corpus
+    rows are filtered, a zero-norm centroid raises loudly at collect
+    time, and NaN-element vectors (which pass the na2>0 filter — NaN > 0
+    in Spark's ordering) score NaN, rank LAST with cid-ASC ties, and
+    surface a NULL cosine. PQ encoding filters NULL embeddings and maps
+    a NaN subspace to (code 0, NULL dist²). Expected values are fixed
+    literals of the reference semantics."""
     from anomalydetection_spark.functions.similarity import (
         ivf_assign,
         ivf_probe_buckets,
         pq_encode,
     )
-
-    def eq(a, b):
-        if isinstance(a, float) and isinstance(b, float):
-            return (math.isnan(a) and math.isnan(b)) or a == b
-        return a == b
 
     rows = [
         (0, [1.0, 2.0, 3.0, 4.0]),
@@ -893,31 +899,22 @@ def test_arrow_scorer_degenerate_inputs_match_literal_path(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     centroids = emb.filter(F.col("vec_id") < 2).select("vec_id", "embedding")
 
-    lit = {r["vec_id"]: (r["bucket"], r["cos_to_centroid"])
+    got = {r["vec_id"]: (r["bucket"], r["cos_to_centroid"])
            for r in ivf_assign(emb, centroids).collect()}
-    arr = {r["vec_id"]: (r["bucket"], r["cos_to_centroid"])
-           for r in ivf_assign(emb, centroids, literal_budget=0).collect()}
-    assert set(arr) == set(lit) == {0, 1, 2, 10}   # NULL + zero-norm dropped
-    for k in lit:
-        assert eq(arr[k][0], lit[k][0]) and eq(arr[k][1], lit[k][1]), k
-    # the NaN-element row survives; its undefined cosine is NULL in both
-    # arms (ranked last, cid-ASC tie pick)
-    assert lit[2][1] is None and lit[2][0] == 0
+    # NULL + zero-norm dropped; the NaN row's cosine is NULL, cid-ASC pick
+    assert got == {0: (0, 1.0), 1: (1, 1.0), 2: (0, None), 10: (0, 1.0)}
 
-    # nprobe=2 probe lists agree, NaN row's probes padded cid ASC
-    plit = sorted(
-        ((r["vec_id"], r["bucket"]) for r in
-         ivf_probe_buckets(emb, centroids, 2).collect()))
-    parr = sorted(
-        ((r["vec_id"], r["bucket"]) for r in
-         ivf_probe_buckets(emb, centroids, 2, literal_budget=0).collect()))
-    assert parr == plit and len(plit) == 4 * 2
+    # nprobe=2 probe lists; the NaN row's probes padded cid ASC
+    probes = sorted((r["vec_id"], r["bucket"]) for r in
+                    ivf_probe_buckets(emb, centroids, 2).collect())
+    assert probes == [(0, 0), (0, 1), (1, 0), (1, 1), (2, 0), (2, 1),
+                      (10, 0), (10, 1)]
 
-    # zero-norm CENTROID: loud ValueError, not an ANSI abort mid-job
+    # zero-norm CENTROID: loud ValueError, not a NaN assignment
     zc = spark.createDataFrame(
         [(0, [1.0, 2.0, 3.0, 4.0]), (1, [0.0, 0.0, 0.0, 0.0])],
         "vec_id long, embedding array<double>")
-    with _pytest.raises(ValueError, match="zero norm"):
+    with pytest.raises(ValueError, match="zero norm"):
         ivf_assign(emb, zc)
 
     pq_rows = [
@@ -928,18 +925,13 @@ def test_arrow_scorer_degenerate_inputs_match_literal_path(spark):
     ]
     pemb = spark.createDataFrame(
         pq_rows, "vec_id long, embedding array<double>")
-    plit2 = {r["vec_id"]: (list(r["codes"]), list(r["dist2s"]))
-             for r in pq_encode(pemb, m=2, n_codes=2).collect()}
-    parr2 = {r["vec_id"]: (list(r["codes"]), list(r["dist2s"]))
-             for r in pq_encode(pemb, m=2, n_codes=2,
-                                literal_budget=0).collect()}
-    assert set(parr2) == set(plit2) and 3 not in plit2  # NULL filtered
-    for k in plit2:
-        assert plit2[k][0] == parr2[k][0], k
-        assert all(eq(x, y)
-                   for x, y in zip(plit2[k][1], parr2[k][1])), k
-    # NaN subspace: code 0 (all-ties code-ASC), dist² NULL in both arms
-    assert plit2[2][0][1] == 0 and plit2[2][1][1] is None
+    enc = {r["vec_id"]: (list(r["codes"]), list(r["dist2s"]))
+           for r in pq_encode(pemb, m=2, n_codes=2).collect()}
+    assert enc == {
+        0: ([0, 0], [0.0, 0.0]),
+        1: ([1, 1], [0.0, 0.0]),
+        2: ([0, 0], [1.0, None]),   # NaN subspace: code 0, dist² NULL
+    }
 
 
 def test_lang_id_accepts_externally_trained_profiles(spark):
@@ -969,7 +961,8 @@ def test_repetition_signals_hand_computed(spark):
     """Gopher within-doc repetition family (repetition_signals): every
     count verified against hand-computed values on a fixture with a
     known duplicate line, a one-token doc (no 2-grams), a NULL text
-    (dropped) and a blank-only doc (all-zero row, passes)."""
+    (dropped) and a blank-only doc (all-zero row, passes); the top-n-gram
+    bounds are keyed by n, and an n without a bound raises."""
     from anomalydetection_spark.functions.text import repetition_signals
 
     df = spark.createDataFrame(
@@ -995,3 +988,25 @@ def test_repetition_signals_hand_computed(spark):
 
     with pytest.raises(ValueError, match="ngram"):
         repetition_signals(df, ngram_ns=(2, 0))
+    with pytest.raises(ValueError, match="ngram size 6"):
+        repetition_signals(df, ngram_ns=(2, 6))
+
+    # each n is checked against ITS Gopher bound (3 → 18 %, 4 → 16 %),
+    # not the bound at the same position of (2, 3, 4, 5) — a positional
+    # zip would apply 20 % and 18 % here and pass docs 5 and 6.
+    # Single-char tokens on one line: k tokens are 2k-1 chars, a 3-gram
+    # is 5 chars, a 4-gram 7 chars.
+    tri = "a b c x a b c " + " ".join("defghijklmnopqrstuv")
+    quad = "a b c d x a b c d " + " ".join("efghijklmnopqrstuvw0123456789yzA")
+    clean = " ".join("abcdefghijklmnopqrstuvwxyz")
+    df34 = spark.createDataFrame(
+        [(5, tri), (6, quad), (7, clean)], "doc_id long, text string")
+    r = {x["doc_id"]: x.asDict()
+         for x in repetition_signals(df34, ngram_ns=(3, 4)).collect()}
+    # 'a b c' twice: 10/51 = 19.6 % — over 18 %, under 20 %
+    assert (r[5]["text_chars"], r[5]["top3gram_chars"],
+            r[5]["top4gram_chars"], r[5]["rep_pass"]) == (51, 10, 7, False)
+    # 'a b c d' twice: 14/81 = 17.3 % — over 16 %, under 18 %
+    assert (r[6]["text_chars"], r[6]["top3gram_chars"],
+            r[6]["top4gram_chars"], r[6]["rep_pass"]) == (81, 10, 14, False)
+    assert r[7]["rep_pass"] is True
