@@ -3445,9 +3445,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "skew_salted_counts": q_skew_salted_counts,
         "dedup_exact": q_dedup_exact,
         "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "dedup_simhash": q_dedup_simhash,
         # ---- positions 51+ (outside the driver's 50-entry window) ----
         # Rotated out in round 5 (driver-green r01-r04):
+        "dedup_simhash": q_dedup_simhash,
         "text_quality_buckets": q_text_quality_buckets,
         "column_stats_by_group": q_column_stats_by_group,
         # (drift_ks rotated below with its drift family block)

@@ -45,6 +45,7 @@ from typing import Any, Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from anomalydetection_spark.session import local_frame
 from anomalydetection_spark.suite import ValidationSuite
 
 LEDGER_DIR = "_ledger"
@@ -478,13 +479,14 @@ class CheckpointedRunner:
             except Exception:
                 pass  # scorecard is best-effort for resumed units
         if lineage_rows:
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [
                     (p["unit"], p["snapshot"], p["rows"], p["checks"], p["verdicts"],
                      p["failed"], p["violation_rows"], p["elapsed_sec"], p["committed_at"])
                     for p in lineage_rows
                 ],
-                schema=LINEAGE_SCHEMA,
+                LINEAGE_SCHEMA,
             ).write.mode("append").parquet(os.path.join(self.out_dir, "lineage"))
         if scorecard_rows:
             # reviewer-facing artifact beside the parquet sinks: the

@@ -21,6 +21,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from anomalydetection_spark.session import local_frame
+
 #: bucket space; 10^6 gives ppm-granular fractions while keeping the
 #: boundary arithmetic exact in int64
 _BUCKETS = 1_000_000
@@ -165,10 +167,7 @@ def packed_shards(df: DataFrame, budget: int,
     for r in sorted(totals, key=lambda r: r["pid"]):
         offsets.append((r["pid"], acc))
         acc += r["t"]
-    if not offsets:
-        offsets_df = spark.createDataFrame([], "pid int, off bigint")
-    else:
-        offsets_df = spark.createDataFrame(offsets, "pid int, off bigint")
+    offsets_df = local_frame(spark, offsets, "pid int, off bigint")
     from pyspark.sql import Window
 
     w_in = Window.partitionBy("pid").orderBy(id_col)

@@ -5,13 +5,20 @@ ship on a 1000-executor cluster: AQE on (runtime re-plan + skew-join
 splitting), Arrow on (all pandas-UDF traffic is Arrow batches), UTC
 session timezone (bit-stable vs external oracles), and shuffle
 partitions sized to the parallelism at hand rather than the 200 default.
+
+``local_frame`` is the one way engine code turns rows the driver already
+holds (verdicts, lineage, offsets, parsed XLSX cells) into a DataFrame.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -25,6 +32,11 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, fallback all
     cores).  On a real cluster the caller passes master via spark-submit and
     this function leaves it untouched.
+
+    The driver heap is one value: ``extra_conf["spark.driver.memory"]`` if
+    given, else ``$SPARK_DRIVER_MEM`` (default 12g). It sets both
+    ``spark.driver.memory`` (-Xmx) and -Xms; an -Xms above -Xmx would stop
+    the JVM at launch.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -36,7 +48,9 @@ def get_spark(
         else:
             shuffle_partitions = 200
 
-    driver_mem = os.environ.get("SPARK_DRIVER_MEM", "12g")
+    driver_mem = (extra_conf or {}).get("spark.driver.memory") or os.environ.get(
+        "SPARK_DRIVER_MEM", "12g"
+    )
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -74,3 +88,27 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[Sequence], schema: str | StructType
+) -> DataFrame:
+    """Driver-held rows -> a DataFrame planned as a ``LocalRelation``.
+
+    ``schema`` is a DDL string or a ``StructType``. The rows go to the JVM
+    as one Arrow table typed by the schema, so writing or collecting the
+    frame needs no Python worker, and ``collect()`` runs no Spark job. A
+    list passed to ``createDataFrame`` instead becomes a Python RDD that
+    starts Python-worker tasks on every action. The pandas path is avoided
+    too: its null mask reads a float NaN as NULL, while ``pa.array`` keeps
+    ``float("nan")`` and ``None`` apart."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows, strict=True)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type)
+         for c, f in zip(columns, arrow_schema, strict=True)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

@@ -17,6 +17,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from anomalydetection_spark.session import local_frame
+
 TESTDATA_TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -107,7 +109,7 @@ def load_xlsx(
 
     DRIVER-SIDE by design, with a loud ``max_bytes`` bound: the
     reference reads interactive uploads (a single workbook per run), so
-    the honest Spark analog is parse-on-driver → ``createDataFrame`` →
+    the honest Spark analog is parse-on-driver → ``local_frame`` →
     distributed from there. Bulk tabular data at scale belongs in
     parquet/CSV (``load_csv`` is the distributed tier); a workbook past
     the bound raises instead of silently serializing through the
@@ -218,7 +220,7 @@ def load_xlsx(
     if n_rows is not None:
         data = data[:n_rows]
     schema = StructType([StructField(c, StringType()) for c in cols])
-    df = spark.createDataFrame([tuple(r) for r in data], schema=schema)
+    df = local_frame(spark, data, schema)
     for c in normalize_empty:
         df = df.withColumn(c, F.nullif(F.col(c), F.lit("")))
     return df

@@ -7,6 +7,10 @@ tiny collected stats → join/group-class checks run their own O(1) jobs →
 verdicts / violations / metrics come back as DataFrames for the caller to
 write to its sink tables.
 
+The verdicts frame is built on the driver, from rows the driver already
+holds, as a local relation (``session.local_frame``): collecting it runs
+no Spark job, and writing it starts no Python worker.
+
 The reference's equivalent is the reactive graph of eager data.frames and
 shinyalert asserts (``/root/reference/PRIME_App/server.R:951-1092``); the
 scan-count discipline here (SURVEY.md §4.2.1) is what makes the same
@@ -24,10 +28,16 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from anomalydetection_spark.checks.base import Check, VERDICT_SCHEMA
+from anomalydetection_spark.session import local_frame
 
 
 @dataclass
 class SuiteResult:
+    """One run's outputs. ``verdicts`` is a driver-local relation (one row
+    per partition, check and metric): ``collect()`` on it, or ``passed``,
+    is free — no Spark job. ``violations`` is a lazy frame over the input
+    and costs a scan when written or collected."""
+
     verdicts: DataFrame      # one row per (partition, check, metric)
     violations: DataFrame | None  # offending rows, tagged with check name
     metrics: dict[str, Any]  # raw collected stats (global slice)
@@ -36,7 +46,7 @@ class SuiteResult:
 
     @property
     def passed(self) -> bool:
-        return self.verdicts.filter(~F.col("passed")).limit(1).count() == 0
+        return not self.verdicts.filter(~F.col("passed")).take(1)
 
     def release(self) -> None:
         """Free check-held persisted intermediates (the decode verdict
@@ -184,7 +194,8 @@ class ValidationSuite:
                     v.update(table=self.table_name, partition="")
                     verdict_rows.append(v)
 
-            verdicts = spark.createDataFrame(
+            verdicts = local_frame(
+                spark,
                 [
                     (
                         r["table"], r["partition"], r["check"], r["column"],
@@ -192,7 +203,7 @@ class ValidationSuite:
                     )
                     for r in verdict_rows
                 ],
-                schema=VERDICT_SCHEMA,
+                VERDICT_SCHEMA,
             )
 
             violations = None

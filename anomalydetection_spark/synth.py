@@ -30,6 +30,7 @@ import numpy as np
 import pandas as pd
 
 from anomalydetection_spark.functions.png import encode_lossy, encode_png
+from anomalydetection_spark.session import local_frame
 
 SEED = 42
 FMTS = ("jpeg", "png", "webp")          # skewed: jpeg ~80%
@@ -202,6 +203,7 @@ def generate_distributed(spark, n: int, with_payload: bool = False,
 
 
 def fmt_dimension(spark):
-    return spark.createDataFrame(
-        [("jpeg", True), ("png", False), ("webp", True)], "fmt string, lossy boolean"
+    return local_frame(
+        spark, [("jpeg", True), ("png", False), ("webp", True)],
+        "fmt string, lossy boolean",
     )

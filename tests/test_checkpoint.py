@@ -7,7 +7,13 @@ import time
 
 import pytest
 
-from anomalydetection_spark.checkpoint import CheckpointedRunner, input_fingerprint
+from pyspark.sql.types import StructType
+
+from anomalydetection_spark.checkpoint import (
+    LINEAGE_SCHEMA,
+    CheckpointedRunner,
+    input_fingerprint,
+)
 from anomalydetection_spark.checks import (
     ColumnStatsCheck,
     InSetCheck,
@@ -81,6 +87,11 @@ def test_partial_resume_runs_only_missing_units(spark, image_table, tmp_path):
     # totals across buckets still cover the whole table exactly once
     rows = {u.unit: u.rows for u in r2.units}
     assert sum(rows.values()) == 2000
+    # the fresh run and the resumed run both appended lineage rows, and
+    # the appended parquet keeps the declared schema
+    lineage = spark.read.parquet(os.path.join(out, "lineage"))
+    assert lineage.schema == StructType.fromDDL(LINEAGE_SCHEMA)
+    assert lineage.count() == 5
 
 
 def test_staged_bucket_mode_matches_unstaged_and_prunes(spark, image_table, tmp_path):

@@ -5,16 +5,21 @@ at 10^12 rows, asserted on `.explain` output so regressions are caught.
 - small dimensions broadcast (no shuffle of the fact side)
 - the bytes column never crosses a shuffle (decode is map-only)
 - skew helpers produce the two-level plan they promise
+- driver-built result frames are local relations (no job, no Python RDD)
 """
 
+import math
 import re
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql.types import StructType
 
 from anomalydetection_spark.checks import InSetCheck, RangeCheck, ReferentialCheck
+from anomalydetection_spark.checks.base import VERDICT_SCHEMA, Check, verdict
 from anomalydetection_spark.functions.skew import heavy_hitters, salted_group_count
 from anomalydetection_spark.image_udfs import decode_results
+from anomalydetection_spark.suite import ValidationSuite
 from anomalydetection_spark.synth import generate_pandas, to_spark
 
 
@@ -321,3 +326,54 @@ def test_repetition_signals_plan_two_level_aggs_no_cross_product(spark):
     # two-level aggregation: partial_count before the exchange for both
     # the (id, line) and (id, n, gram) groupings
     assert plan.count("partial_count") >= 2
+
+
+class _ConstVerdicts(Check):
+    """Emits fixed verdicts: a NaN value and a NULL value."""
+
+    name = "const"
+
+    def verdicts(self, stats):
+        return [verdict("nan_value", "c", "m", float("nan")),
+                verdict("null_value", "c", "m", None)]
+
+
+def _job_ids(sc) -> set[int]:
+    return set(sc.statusTracker().getJobIdsForGroup())
+
+
+def test_verdicts_are_a_local_relation_collected_without_a_job(spark, images_path):
+    """The verdicts frame holds rows the driver built: it must plan as a
+    LocalRelation (not a Python-RDD LogicalRDD), and collecting it — or
+    asking ``passed`` — must start no Spark job."""
+    df = spark.read.parquet(images_path)
+    suite = ValidationSuite(
+        [RangeCheck("w", 16, 2048, keys=["image_id"]), _ConstVerdicts()],
+        table_name="images",
+    )
+    res = suite.run(df, spark, with_violations=False)
+    optimized = res.verdicts._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in optimized and "LogicalRDD" not in optimized, optimized
+
+    sc = spark.sparkContext
+    before = _job_ids(sc)
+    rows = res.verdicts.collect()
+    assert not res.passed  # the NULL verdict fails
+    assert _job_ids(sc) == before
+    # control: the tracker does see jobs started on this thread
+    spark.range(3).count()
+    assert _job_ids(sc) != before
+
+    # NaN and NULL stay apart through the driver-to-JVM transfer
+    by_check = {r["check"]: r for r in rows}
+    assert math.isnan(by_check["nan_value"]["value"])
+    assert by_check["null_value"]["value"] is None
+    assert len(by_check) > 2  # the range check's verdicts are there too
+
+
+def test_empty_verdict_list_yields_empty_frame_with_verdict_schema(spark, images_path):
+    res = ValidationSuite([]).run(spark.read.parquet(images_path), spark,
+                                  with_violations=False)
+    assert res.verdicts.schema == StructType.fromDDL(VERDICT_SCHEMA)
+    assert res.verdicts.collect() == []
+    assert res.passed
