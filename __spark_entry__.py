@@ -1847,13 +1847,14 @@ def o_dedup_simhash() -> str:
 
 def q_text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     from anomalydetection_spark.functions.text import lang_id, lang_profiles
+    from anomalydetection_spark.session import local_frame
 
     d = _td(spark, sf_dir)
     # profiles are a tiny (langs × top_n) dimension: materialize once so
     # the scoring join broadcasts a literal instead of re-running the
     # whole corpus trigram pipeline on the build side
     prof_rows = lang_profiles(d, top_n=20).collect()
-    profiles = spark.createDataFrame(prof_rows, "lang string, tg string")
+    profiles = local_frame(spark, prof_rows, "lang string, tg string")
     guesses = lang_id(d, profiles)
     return (
         guesses.groupBy("lang", "guess")
@@ -2275,6 +2276,7 @@ def q_audio_wav_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         audio_wav_int_features,
         pcm16_wav_bytes,
     )
+    from anomalydetection_spark.session import local_frame
 
     keys = sorted(
         int(r[0])
@@ -2286,7 +2288,7 @@ def q_audio_wav_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         s = ((np.int64(2 * k + 3) * np.arange(n, dtype=np.int64) + 7 * k)
              % 65536) - 32768
         rows.append((str(k), pcm16_wav_bytes(s.astype(np.int16), 8000)))
-    audio = spark.createDataFrame(rows, "media_id string, bytes binary")
+    audio = local_frame(spark, rows, "media_id string, bytes binary")
     return audio_wav_int_features(audio)
 
 
@@ -3249,6 +3251,7 @@ def q_url_domain_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         registrable_domain,
         url_normalize,
     )
+    from anomalydetection_spark.session import local_frame
 
     d = _td(spark, sf_dir).filter(F.col("doc_id").isNotNull())
     k = F.pmod(F.col("doc_id"), F.lit(5))
@@ -3270,8 +3273,8 @@ def q_url_domain_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.withColumn("url_norm", url_normalize("url"))
         .withColumn("domain", registrable_domain(host_of("url_norm")))
     )
-    bl = d.sparkSession.createDataFrame(
-        [("example2.com",), ("example.co.uk",)], "domain string")
+    bl = local_frame(spark, [("example2.com",), ("example.co.uk",)],
+                     "domain string")
     return domain_blocklist_filter(out, bl).select(
         "doc_id", "url_norm", "domain")
 

@@ -160,11 +160,9 @@ class MahalanobisCheck(Check):
     """Dense Mahalanobis distance over ``cols`` with χ²(alpha, k) cutoff.
 
     Mirrors ``PRIME_App/utils.R:228-232`` (MD + qchisq flag) but with a
-    proper covariance (centered, n−1) by default.  ``compat_df_quirk``
-    reproduces the reference's degrees-of-freedom bug — it passes the
-    TOTAL column count of its working frame (keys + indicators + the MD
-    column just added) minus 1 instead of k; we expose it so compat
-    fixtures can match bit-for-bit (SURVEY.md §2.11 K1 stage 7).
+    proper covariance (centered, n−1) and df = k. The reference's
+    degrees-of-freedom quirk (SURVEY.md §2.11 K1 stage 7) is reproduced
+    only by the K1 kernel, ``run_rec_analysis``.
     """
 
     def __init__(
@@ -173,7 +171,6 @@ class MahalanobisCheck(Check):
         alpha: float = 0.95,
         max_violation_rate: float = 0.01,
         keys: Sequence[str] | None = None,
-        compat_df_quirk: int | None = None,
     ):
         self.cols = list(cols)
         self.alpha = alpha
@@ -181,8 +178,7 @@ class MahalanobisCheck(Check):
         self.keys = list(keys) if keys else list(cols)
         self.name = f"mahalanobis:{','.join(self.cols)}"
         self._slug = "md_" + "_".join(self.cols)
-        df_ = compat_df_quirk if compat_df_quirk is not None else len(self.cols)
-        self.cutoff = chi2_ppf(alpha, df_)
+        self.cutoff = chi2_ppf(alpha, len(self.cols))
         self._mu: np.ndarray | None = None
         self._sinv: np.ndarray | None = None
         self._sev: tuple[float, float] | None = None  # (q80, q90) of MD²

@@ -17,11 +17,9 @@ once and reused. Rounds needed = graph diameter. For DEDUP graphs this
 is small by construction: duplicate clusters are near-cliques (every
 member shares most shingles/bits with every other, so LSH emits most of
 the clique edges), giving diameters of 1-3 regardless of corpus size.
-For adversarial long-chain graphs the alternating large-star/small-star
-scheme (Kiveris et al., "Connected Components in MapReduce and Beyond")
-converges in O(log²n) rounds with the same per-round plan shape — the
-propagation loop here is the right tool for the dedup workload, not a
-general graph engine.
+This is the right tool for the dedup workload, not a general graph
+engine: a graph whose diameter exceeds ``max_rounds`` (an adversarial
+long chain) raises instead of returning partial labels.
 
 The driver loop is iteration control only (the brief's "no driver-side
 loops over collect()" anti-pattern moves DATA through the driver; here
@@ -96,103 +94,12 @@ def min_label_components(pairs: DataFrame, a: str = "a", b: str = "b",
         # (multiple keepers per component) — refuse to return them
         raise RuntimeError(
             f"min_label_components did not converge in {max_rounds} rounds "
-            f"(component diameter exceeds max_rounds); raise max_rounds or "
-            f"use algorithm='star' (O(log^2 n) on any topology)")
+            f"(component diameter exceeds max_rounds); raise max_rounds")
     return labels
 
 
-def _canon(e: DataFrame) -> DataFrame:
-    """Undirected edge set in canonical (hi, lo) form, self-loops dropped."""
-    return (
-        e.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def _same_edges(a: DataFrame, b: DataFrame) -> bool:
-    """EXACT fixpoint test: both inputs are distinct canonical edge sets,
-    so equality ⇔ same count and empty difference. Two small jobs per
-    round — rounds are O(log²n), so exactness costs almost nothing and a
-    signature-collision false stop is ruled out by construction."""
-    return a.count() == b.count() and a.subtract(b).isEmpty()
-
-
-def star_components(pairs: DataFrame, a: str = "a", b: str = "b",
-                    max_rounds: int = 50) -> DataFrame:
-    """(node, label) — connected components via alternating
-    large-star / small-star (Kiveris et al., "Connected Components in
-    MapReduce and Beyond"): converges in O(log² n) rounds on ANY graph,
-    including the adversarial long-chain topologies where min-label
-    propagation needs O(diameter) rounds.
-
-    Per round each operation is one symmetric-neighborhood min-agg plus
-    a join back — the same distributed primitives as the propagation
-    loop, with edges rewired toward component minima instead of labels
-    copied along edges. Output contract is identical to
-    :func:`min_label_components` (label = minimum member id), asserted
-    equal on randomized graphs in ``tests/test_graph.py`` — pick this
-    variant when cluster diameter is unbounded; dedup graphs
-    (near-clique clusters, diameter 1-3) converge faster under plain
-    propagation."""
-    raw = pairs.select(
-        F.col(a).cast("long").alias("u"), F.col(b).cast("long").alias("v")
-    )
-    # node set from the RAW pairs: a node whose only edges are self-loops
-    # must still appear in the output (as its own singleton), matching
-    # min_label_components — _canon drops the loops before iteration
-    nodes = (
-        raw.select(F.col("u").alias("node"))
-        .union(raw.select(F.col("v").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    edges = _canon(raw).localCheckpoint()
-    converged = False
-    # +1 as in min_label_components: the fixpoint is observed one round
-    # after the edge set stops changing
-    for _ in range(max_rounds + 1):
-        prev = edges
-        # large-star: every neighbor LARGER than u rewires to
-        # m = min(Γ(u) ∪ {u}); keeps big neighborhoods shrinking
-        sym = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        m = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        large = (
-            sym.join(m, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        edges = _canon(large).localCheckpoint()
-        # small-star: u and its SMALLER neighbors rewire to the same min
-        grp = edges  # canonical (hi, lo): exactly "smaller neighbors keyed by larger"
-        m = grp.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        small = (
-            grp.join(m, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(m.select(F.col("u"), F.col("m").alias("v")))
-        )
-        edges = _canon(small).localCheckpoint()
-        if _same_edges(edges, prev):
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"star_components did not reach its edge-set fixpoint in "
-            f"{max_rounds} rounds; raise max_rounds")
-    # fixpoint: edges form stars (child, root=min member); roots label
-    # themselves, nodes isolated by self-loop removal keep their own id
-    labels = edges.select(F.col("u").alias("node"), F.col("v").alias("label"))
-    return (
-        nodes.join(labels, "node", "left")
-        .select("node", F.coalesce("label", "node").alias("label"))
-    )
-
-
 def near_dup_clusters(pairs: DataFrame, a: str = "a", b: str = "b",
-                      max_rounds: int = 50,
-                      algorithm: str = "propagation") -> DataFrame:
+                      max_rounds: int = 50) -> DataFrame:
     """(doc_id, cluster, cluster_size, is_keeper) for every node in the
     pair graph: ``cluster`` = min member id (the canonical keeper),
     ``is_keeper`` marks it, ``cluster_size`` counts members.
@@ -200,18 +107,8 @@ def near_dup_clusters(pairs: DataFrame, a: str = "a", b: str = "b",
     This is the keep/drop policy stage of a dedup pipeline: feed it any
     pair generator's output and anti-join the non-keepers out of the
     corpus. Cluster sizes come from one narrow count over the labels.
-
-    ``algorithm``: ``"propagation"`` (default — O(diameter) rounds,
-    fastest on dedup graphs whose clusters are near-cliques) or
-    ``"star"`` (:func:`star_components` — O(log²n) rounds on any
-    topology; pick it when cluster diameter is unbounded). Both produce
-    identical labels (tested)."""
-    if algorithm == "star":
-        labels = star_components(pairs, a, b, max_rounds)
-    elif algorithm == "propagation":
-        labels = min_label_components(pairs, a, b, max_rounds)
-    else:
-        raise ValueError(f"unknown algorithm {algorithm!r}")
+    Labels come from :func:`min_label_components` (O(diameter) rounds)."""
+    labels = min_label_components(pairs, a, b, max_rounds)
     sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (
         labels.join(sizes, "label")

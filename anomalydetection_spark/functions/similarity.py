@@ -231,7 +231,7 @@ def ivf_assign(emb: DataFrame, centroids: DataFrame,
     )
 
 
-def _fold_dot(x, y, dim: int | None = None):
+def _fold_dot(x, y):
     """Sequential float64 dot product over two array columns.
 
     Unlike the grouped decimal sums above (order-INSENSITIVE, for values
@@ -240,11 +240,10 @@ def _fold_dot(x, y, dim: int | None = None):
     ``list_dot_product`` (also a sequential fold). Use it when the pair of
     arrays is already co-located on one row: no explode, no shuffle.
 
-    ``dim`` is accepted for call-site symmetry but unused: unrolling the
-    fold into a 64-term left-chained codegen sum was MEASURED 3× SLOWER
-    than the HOF fold here (giant expression trees fall out of JIT-able
-    codegen and re-evaluate per consumer), so the fold stays the fast
-    deterministic form."""
+    Unrolling the fold into a 64-term left-chained codegen sum was
+    MEASURED 3× SLOWER than the HOF fold here (giant expression trees fall
+    out of JIT-able codegen and re-evaluate per consumer), so the fold
+    stays the fast deterministic form."""
     return F.aggregate(
         F.zip_with(x, y, lambda a, b: a.cast("double") * b.cast("double")),
         F.lit(0.0),
@@ -257,15 +256,15 @@ def embedding_dim(emb: DataFrame) -> int:
     return emb.select(F.max(F.size("embedding"))).first()[0]
 
 
-def _with_norm(emb: DataFrame, id_alias: str, vec_alias: str, n_alias: str,
-               dim: int | None = None) -> DataFrame:
+def _with_norm(emb: DataFrame, id_alias: str, vec_alias: str,
+               n_alias: str) -> DataFrame:
     """(id, embedding, norm2) — norm folded ONCE per vector, not per pair
     (higher-order-function folds are interpreted, so fold count dominates
     the O(n²) stage's cost)."""
     return emb.select(
         F.col("vec_id").alias(id_alias),
         F.col("embedding").alias(vec_alias),
-        _fold_dot(F.col("embedding"), F.col("embedding"), dim).alias(n_alias),
+        _fold_dot(F.col("embedding"), F.col("embedding")).alias(n_alias),
     )
 
 
@@ -285,8 +284,7 @@ def _dot_seq_kernel(ea, eb):
     return pd.Series(np.cumsum(A * B, axis=1)[:, -1])
 
 
-def _pair_cosine(pairs: DataFrame, threshold: float,
-                 dim: int | None = None) -> DataFrame:
+def _pair_cosine(pairs: DataFrame, threshold: float) -> DataFrame:
     """(a, b, ea, eb, na2, nb2) → (a, b, cosine >= threshold)."""
     from pyspark.sql.functions import pandas_udf
 
@@ -336,8 +334,7 @@ def cosine_near_dup_pairs(emb: DataFrame, threshold: float,
     half-up rounding can never drop a qualifying pair."""
     import numpy as np
 
-    dim = embedding_dim(emb)
-    b_rows = _with_norm(emb, "b", "eb", "nb2", dim).limit(
+    b_rows = _with_norm(emb, "b", "eb", "nb2").limit(
         max_rerank_rows + 1
     ).collect()
     if len(b_rows) > max_rerank_rows:
@@ -350,7 +347,7 @@ def cosine_near_dup_pairs(emb: DataFrame, threshold: float,
     bid = np.array([r["b"] for r in b_rows], dtype=np.int64)
     Bm = np.array([r["eb"] for r in b_rows], dtype=np.float64)
     nb2 = np.array([r["nb2"] for r in b_rows], dtype=np.float64)
-    a = _with_norm(emb, "a", "ea", "na2", dim)
+    a = _with_norm(emb, "a", "ea", "na2")
 
     def blocks(batches):
         import pandas as pd
@@ -441,10 +438,10 @@ def cosine_near_dup_lsh(emb: DataFrame, spark, threshold: float,
         .filter(F.col("a") < F.col("b"))
         .select("a", "b").distinct()
     )
-    ea = _with_norm(emb, "a", "ea", "na2", dim)
-    eb = _with_norm(emb, "b", "eb", "nb2", dim)
+    ea = _with_norm(emb, "a", "ea", "na2")
+    eb = _with_norm(emb, "b", "eb", "nb2")
     # same verifier as cosine_near_dup_pairs => identical values per pair
-    return _pair_cosine(cand.join(ea, "a").join(eb, "b"), threshold, dim)
+    return _pair_cosine(cand.join(ea, "a").join(eb, "b"), threshold)
 
 
 def ivf_probe_buckets(emb: DataFrame, centroids: DataFrame,
@@ -469,7 +466,6 @@ def ivf_topk(emb: DataFrame, centroids: DataFrame, query_pred,
     ``nprobe`` nearest IVF buckets (corpus vectors stay single-bucket —
     probing widens the QUERY's candidate set, the standard IVF
     recall/cost dial). Returns (qid, cid, cosine, rk, bucket)."""
-    dim = embedding_dim(emb)
     assign = ivf_assign(emb, centroids).select("vec_id", "bucket")
     tagged = emb.join(assign, "vec_id")
     probes = (
@@ -480,18 +476,18 @@ def ivf_topk(emb: DataFrame, centroids: DataFrame, query_pred,
         .filter(query_pred(F.col("vec_id")))
         .select(F.col("vec_id").alias("a"), F.col("embedding").alias("ea"),
                 F.col("bucket"))
-        .withColumn("na2", _fold_dot(F.col("ea"), F.col("ea"), dim))
+        .withColumn("na2", _fold_dot(F.col("ea"), F.col("ea")))
     )
     c = (
         tagged.select(F.col("vec_id").alias("b"), F.col("embedding").alias("eb"),
                       F.col("bucket"))
-        .withColumn("nb2", _fold_dot(F.col("eb"), F.col("eb"), dim))
+        .withColumn("nb2", _fold_dot(F.col("eb"), F.col("eb")))
     )
     # query set is small by construction — broadcast it; the corpus stays
     # where it is and only same-bucket candidates pay the fold
     pairs = c.join(F.broadcast(q), "bucket").filter(F.col("a") != F.col("b"))
     cos = F.round(
-        _fold_dot(F.col("ea"), F.col("eb"), dim) / F.sqrt(F.col("na2") * F.col("nb2")), 8
+        _fold_dot(F.col("ea"), F.col("eb")) / F.sqrt(F.col("na2") * F.col("nb2")), 8
     )
     scored = pairs.select(
         F.col("a").alias("qid"), F.col("b").alias("cid"),
@@ -623,7 +619,6 @@ def hamming_near_pairs(df: DataFrame, id_col: str, sig_col: str,
 
 def hamming_near_dup_clusters(df: DataFrame, id_col: str, sig_col: str,
                               bits: int = 64, max_hamming: int = 2,
-                              algorithm: str = "propagation",
                               max_rounds: int = 50) -> DataFrame:
     """Skew-proof hamming dedup end-to-end: (doc_id, cluster,
     cluster_size, is_keeper) — identical output to
@@ -648,21 +643,13 @@ def hamming_near_dup_clusters(df: DataFrame, id_col: str, sig_col: str,
     pigeonhole equi-join over DISTINCT signatures only, component
     labeling over the (much smaller) rep graph, then one sig-keyed join
     to fan labels back out to members."""
-    from anomalydetection_spark.functions.graph import (
-        min_label_components,
-        star_components,
-    )
+    from anomalydetection_spark.functions.graph import min_label_components
 
     s = df.select(F.col(id_col).alias("id"), F.col(sig_col).alias("sig"))
     ex = s.groupBy("sig").agg(F.min("id").alias("rep"))
     reps = ex.select(F.col("rep").alias("id"), "sig")
     rep_pairs = hamming_near_pairs(reps, "id", "sig", bits, max_hamming)
-    if algorithm == "star":
-        labels = star_components(rep_pairs, "id_a", "id_b", max_rounds)
-    elif algorithm == "propagation":
-        labels = min_label_components(rep_pairs, "id_a", "id_b", max_rounds)
-    else:
-        raise ValueError(f"unknown algorithm {algorithm!r}")
+    labels = min_label_components(rep_pairs, "id_a", "id_b", max_rounds)
     # reps untouched by any cross-signature pair label themselves
     rep_lab = (
         ex.join(labels, ex["rep"] == labels["node"], "left")

@@ -244,7 +244,6 @@ def run_rec_analysis(
     collinearity: str | None = "drop",
     collinear_cutoff: float | None = None,
     salt_buckets: int = 64,
-    persist: bool = True,
 ) -> DataFrame:
     """Full K1 pipeline. Returns keys + x + E_/D_ + MD + outlier_sp.
 
@@ -268,30 +267,174 @@ def run_rec_analysis(
     driver-side. The scored frame is persisted and materialized before
     the final sort so the range-partitioner's sampling pass and the sort
     itself share a single execution of the scoring UDF (an unpersisted
-    global sort runs the whole UDF stage twice). ``persist=False``
-    restores the fully-lazy multi-pass behavior. The scored cache backs
-    the RETURNED frame, so it cannot be freed here — the previous call's
-    cache is released on the next call, and ``release_rec_analysis()``
-    frees the last one explicitly (long-lived drivers)."""
-    cached_input = None
-    if persist:
-        release_rec_analysis()
-        # cache only what the kernel reads — keys + indicators; the
-        # caller's frame may be hundreds of columns wide
-        narrow = list(dict.fromkeys([*keys, *indicator_cols]))
-        df = cached_input = df.select(*narrow).persist()
-        try:
-            return _run_rec_analysis_body(
-                df, keys, indicator_cols, min_presence, min_row_obs, alpha,
-                compat_df_quirk, estimates_for_flagged_only, collinearity,
-                collinear_cutoff, salt_buckets, persist, cached_input)
-        except BaseException:
-            cached_input.unpersist(blocking=False)
-            raise
-    return _run_rec_analysis_body(
-        df, keys, indicator_cols, min_presence, min_row_obs, alpha,
-        compat_df_quirk, estimates_for_flagged_only, collinearity,
-        collinear_cutoff, salt_buckets, persist, cached_input)
+    global sort runs the whole UDF stage twice). The input cache is
+    released once the scored frame is materialized; on error both are.
+
+    The persist is not a ``localCheckpoint()``: measured on a 2k-row ×
+    4-indicator input at local[4] (4-core host), a checkpointed pass took
+    5.0–7.3 s against 2.9–3.8 s persisted. The checkpoint job ran 3.4 s
+    over 5 tasks where the persisted ``count`` ran 1.26 s over 8 —
+    without a cached plan to read, AQE coalesces the scoring stage into
+    one task.
+
+    The scored cache backs the RETURNED frame, so it cannot be freed
+    here — the previous call's cache is released on the next call, and
+    ``release_rec_analysis()`` frees the last one explicitly (long-lived
+    drivers)."""
+    global _SCORED_CACHE
+    release_rec_analysis()
+    # cache only what the kernel reads — keys + indicators; the caller's
+    # frame may be hundreds of columns wide
+    narrow = list(dict.fromkeys([*keys, *indicator_cols]))
+    df = cached_input = df.select(*narrow).persist()
+    scored = None
+    try:
+        aggs = [F.count(F.lit(1)).alias("__rows")]
+        for c in indicator_cols:
+            aggs.append(F.count(F.col(c)).alias(f"scr_n_{c}"))
+            aggs.append(F.var_samp(F.col(c).cast("double")).alias(f"scr_v_{c}"))
+            aggs.append(F.stddev_samp(F.col(c).cast("double")).alias(f"scr_sd_{c}"))
+        # the O(k^2) pairwise moments (6 sums/pair) ride the SAME job only
+        # when the collinearity stage will consume them AND the column
+        # count keeps the fused expression set codegen-friendly; past the
+        # threshold (or with collinearity=None) they are skipped here —
+        # pairwise-complete correlations are unaffected by screening, so a
+        # deferred survivors-only pass (one extra job) is exactly equivalent
+        fuse_pairwise = (collinearity is not None
+                         and len(indicator_cols) <= _FUSE_PAIRWISE_MAX_COLS)
+        if fuse_pairwise:
+            aggs += _pairwise_corr_aggs(indicator_cols)
+        srow = df.agg(*aggs).first()
+        total = srow["__rows"] or 1
+        # stages 1-2 (exact screen_columns semantics — see its docstring)
+        cols = [c for c in indicator_cols
+                if (srow[f"scr_n_{c}"] or 0) / total > min_presence
+                and (srow[f"scr_v_{c}"] is None or srow[f"scr_v_{c}"] != 0)]
+        if fuse_pairwise:
+            C_full = _corr_from_row(srow, len(indicator_cols))
+            idx = [indicator_cols.index(c) for c in cols]
+            C_sub = C_full[np.ix_(idx, idx)]
+        elif collinearity is not None and len(cols) > 1:
+            C_sub = pairwise_correlations(df, cols)
+        else:
+            C_sub = None
+        if collinearity == "drop" and len(cols) > 1:
+            cols = screen_collinear_drop(df, cols, collinear_cutoff or 0.95,
+                                         C=C_sub)
+        elif collinearity == "noise" and len(cols) > 1:
+            noisy = flag_collinear_prime(df, cols, collinear_cutoff or 0.99,
+                                         C=C_sub)
+            if noisy:
+                df = inject_noise(df, keys, noisy,
+                                  {c: float(srow[f"scr_sd_{c}"] or 0.0)
+                                   for c in noisy})
+        k = len(cols)
+        if k == 0:
+            raise ValueError("no indicator columns survive the screens")
+
+        # stage 4 row screen — pure scan predicate
+        obs_count = sum(F.col(c).isNotNull().cast("int") for c in cols)
+        base = df.filter(obs_count >= min_row_obs).select(*keys, *cols)
+
+        mu, R, _N = sparse_moments(base, cols)
+
+        # df quirk: reference passes ncol(frame-with-keys-and-MD) - 1
+        dof = (len(keys) + k + 1) - 1 if compat_df_quirk else k
+        cutoff = chi2_ppf(alpha, dof)
+
+        # pattern bitmask: which indicator cells are observed
+        pattern = sum(
+            F.col(c).isNotNull().cast("long") * F.lit(1 << i)
+            for i, c in enumerate(cols)
+        )
+        tagged = base.withColumn("__pattern", pattern)
+
+        out_schema = (
+            ", ".join(f"`{c}` {t}" for c, t in
+                      [(kcol, dict(base.dtypes)[kcol]) for kcol in keys])
+            + ", " + ", ".join(f"`{c}` double" for c in cols)
+            + ", " + ", ".join(f"`E_{c}` double" for c in cols)
+            + ", " + ", ".join(f"`D_{c}` double" for c in cols)
+            + ", MD double, outlier_sp int"
+        )
+
+        mu_b = mu.copy()
+        R_b = R.copy()
+        kk = k
+        flagged_only = estimates_for_flagged_only
+
+        def score(pdf: pd.DataFrame) -> pd.DataFrame:
+            """One missingness pattern: vectorized MDmiss + conditional
+            means. R_yy⁻¹ computed ONCE per pattern (utils.R computes per
+            row)."""
+            pat = int(pdf["__pattern"].iloc[0])
+            obs = [i for i in range(kk) if pat & (1 << i)]
+            X = pdf[cols].to_numpy(dtype=float)
+            Xo = X[:, obs]
+            mo = mu_b[obs]
+            Ro = R_b[np.ix_(obs, obs)]
+            p_obs = len(obs)
+            try:
+                Rinv = np.linalg.inv(Ro)
+            except np.linalg.LinAlgError:
+                Rinv = np.linalg.pinv(Ro)
+            d = Xo - mo
+            md = np.einsum("ij,jk,ik->i", d, Rinv, d) * (kk / max(p_obs, 1))
+            flag = (md > cutoff).astype(int)
+
+            E = np.full_like(X, np.nan)
+            D = np.full_like(X, np.nan)
+            rows_to_estimate = np.where(flag == 1)[0] if flagged_only else np.arange(len(X))
+            for j_pos, j in enumerate(obs):
+                others = [o for o in obs if o != j]
+                if not others or not rows_to_estimate.size:
+                    continue
+                o_pos = [obs.index(o) for o in others]
+                Ryy = R_b[np.ix_(others, others)]
+                Rjy = R_b[j, others]
+                try:
+                    Ryy_inv = np.linalg.inv(Ryy)
+                except np.linalg.LinAlgError:
+                    Ryy_inv = np.linalg.pinv(Ryy)
+                w = Rjy @ Ryy_inv
+                # one matrix product per (pattern, j) — not a Python loop
+                # per row (flagged rows can be O(rows) at alpha→0)
+                Y = Xo[np.ix_(rows_to_estimate, o_pos)] - mu_b[others]
+                E[rows_to_estimate, j] = Y @ w + mu_b[j]
+                denom = R_b[j, j] if R_b[j, j] else np.nan
+                D[rows_to_estimate, j] = (
+                    np.abs(E[rows_to_estimate, j] - X[rows_to_estimate, j]) / denom
+                )
+
+            out = pdf[keys].copy()
+            for i, c in enumerate(cols):
+                out[c] = X[:, i]
+            for i, c in enumerate(cols):
+                out[f"E_{c}"] = E[:, i]
+            for i, c in enumerate(cols):
+                out[f"D_{c}"] = D[:, i]
+            out["MD"] = md
+            out["outlier_sp"] = flag
+            return out
+
+        salt = F.pmod(F.xxhash64(*[F.col(c) for c in keys]), F.lit(salt_buckets))
+        # one UDF execution serves both the sort's sampling pass and the sort
+        scored = (
+            tagged.withColumn("__salt", salt)
+            .groupBy("__pattern", "__salt")
+            .applyInPandas(score, out_schema)
+            .persist()
+        )
+        scored.count()
+    except BaseException:
+        cached_input.unpersist(blocking=False)
+        if scored is not None:
+            scored.unpersist(blocking=False)
+        raise
+    cached_input.unpersist()
+    with _CACHE_LOCK:
+        _SCORED_CACHE = scored
+    return scored.orderBy(F.desc("outlier_sp"), F.desc("MD"))
 
 
 _SCORED_CACHE = None
@@ -300,171 +443,15 @@ _CACHE_LOCK = threading.Lock()
 
 def release_rec_analysis() -> None:
     """Unpersist the scored-frame cache left by the most recent
-    ``run_rec_analysis(persist=True)`` call (it backs the returned
-    DataFrame, so the kernel cannot free it before returning). Called
-    automatically on the NEXT ``persist=True`` run — an earlier run's
-    returned frame stays CORRECT afterwards, it just recomputes its
-    scoring stage if re-executed; drivers interleaving live results from
-    multiple runs should pass ``persist=False``."""
+    ``run_rec_analysis`` call (it backs the returned DataFrame, so the
+    kernel cannot free it before returning). Called automatically on the
+    NEXT run — an earlier run's returned frame stays CORRECT afterwards,
+    it just recomputes its scoring stage if re-executed."""
     global _SCORED_CACHE
     with _CACHE_LOCK:
         cache, _SCORED_CACHE = _SCORED_CACHE, None
     if cache is not None:
         cache.unpersist(blocking=False)
-
-
-def _run_rec_analysis_body(
-    df, keys, indicator_cols, min_presence, min_row_obs, alpha,
-    compat_df_quirk, estimates_for_flagged_only, collinearity,
-    collinear_cutoff, salt_buckets, persist, cached_input,
-) -> DataFrame:
-    global _SCORED_CACHE
-    aggs = [F.count(F.lit(1)).alias("__rows")]
-    for c in indicator_cols:
-        aggs.append(F.count(F.col(c)).alias(f"scr_n_{c}"))
-        aggs.append(F.var_samp(F.col(c).cast("double")).alias(f"scr_v_{c}"))
-        aggs.append(F.stddev_samp(F.col(c).cast("double")).alias(f"scr_sd_{c}"))
-    # the O(k^2) pairwise moments (6 sums/pair) ride the SAME job only
-    # when the collinearity stage will consume them AND the column count
-    # keeps the fused expression set codegen-friendly; past the threshold
-    # (or with collinearity=None) they are skipped here — pairwise-
-    # complete correlations are unaffected by screening, so a deferred
-    # survivors-only pass (one extra job) is exactly equivalent
-    fuse_pairwise = (collinearity is not None
-                     and len(indicator_cols) <= _FUSE_PAIRWISE_MAX_COLS)
-    if fuse_pairwise:
-        aggs += _pairwise_corr_aggs(indicator_cols)
-    srow = df.agg(*aggs).first()
-    total = srow["__rows"] or 1
-    # stages 1-2 (exact screen_columns semantics — see its docstring)
-    cols = [c for c in indicator_cols
-            if (srow[f"scr_n_{c}"] or 0) / total > min_presence
-            and (srow[f"scr_v_{c}"] is None or srow[f"scr_v_{c}"] != 0)]
-    if fuse_pairwise:
-        C_full = _corr_from_row(srow, len(indicator_cols))
-        idx = [indicator_cols.index(c) for c in cols]
-        C_sub = C_full[np.ix_(idx, idx)]
-    elif collinearity is not None and len(cols) > 1:
-        C_sub = pairwise_correlations(df, cols)
-    else:
-        C_sub = None
-    if collinearity == "drop" and len(cols) > 1:
-        cols = screen_collinear_drop(df, cols, collinear_cutoff or 0.95,
-                                     C=C_sub)
-    elif collinearity == "noise" and len(cols) > 1:
-        noisy = flag_collinear_prime(df, cols, collinear_cutoff or 0.99,
-                                     C=C_sub)
-        if noisy:
-            df = inject_noise(df, keys, noisy,
-                              {c: float(srow[f"scr_sd_{c}"] or 0.0)
-                               for c in noisy})
-    k = len(cols)
-    if k == 0:
-        raise ValueError("no indicator columns survive the screens")
-
-    # stage 4 row screen — pure scan predicate
-    obs_count = sum(F.col(c).isNotNull().cast("int") for c in cols)
-    base = df.filter(obs_count >= min_row_obs).select(*keys, *cols)
-
-    mu, R, _N = sparse_moments(base, cols)
-
-    # df quirk: reference passes ncol(frame-with-keys-and-MD) - 1
-    dof = (len(keys) + k + 1) - 1 if compat_df_quirk else k
-    cutoff = chi2_ppf(alpha, dof)
-
-    # pattern bitmask: which indicator cells are observed
-    pattern = sum(
-        F.col(c).isNotNull().cast("long") * F.lit(1 << i)
-        for i, c in enumerate(cols)
-    )
-    tagged = base.withColumn("__pattern", pattern)
-
-    out_schema = (
-        ", ".join(f"`{c}` {t}" for c, t in
-                  [(kcol, dict(base.dtypes)[kcol]) for kcol in keys])
-        + ", " + ", ".join(f"`{c}` double" for c in cols)
-        + ", " + ", ".join(f"`E_{c}` double" for c in cols)
-        + ", " + ", ".join(f"`D_{c}` double" for c in cols)
-        + ", MD double, outlier_sp int"
-    )
-
-    mu_b = mu.copy()
-    R_b = R.copy()
-    kk = k
-    flagged_only = estimates_for_flagged_only
-
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        """One missingness pattern: vectorized MDmiss + conditional means.
-        R_yy⁻¹ computed ONCE per pattern (utils.R computes per row)."""
-        pat = int(pdf["__pattern"].iloc[0])
-        obs = [i for i in range(kk) if pat & (1 << i)]
-        X = pdf[cols].to_numpy(dtype=float)
-        Xo = X[:, obs]
-        mo = mu_b[obs]
-        Ro = R_b[np.ix_(obs, obs)]
-        p_obs = len(obs)
-        try:
-            Rinv = np.linalg.inv(Ro)
-        except np.linalg.LinAlgError:
-            Rinv = np.linalg.pinv(Ro)
-        d = Xo - mo
-        md = np.einsum("ij,jk,ik->i", d, Rinv, d) * (kk / max(p_obs, 1))
-        flag = (md > cutoff).astype(int)
-
-        E = np.full_like(X, np.nan)
-        D = np.full_like(X, np.nan)
-        rows_to_estimate = np.where(flag == 1)[0] if flagged_only else np.arange(len(X))
-        for j_pos, j in enumerate(obs):
-            others = [o for o in obs if o != j]
-            if not others or not rows_to_estimate.size:
-                continue
-            o_pos = [obs.index(o) for o in others]
-            Ryy = R_b[np.ix_(others, others)]
-            Rjy = R_b[j, others]
-            try:
-                Ryy_inv = np.linalg.inv(Ryy)
-            except np.linalg.LinAlgError:
-                Ryy_inv = np.linalg.pinv(Ryy)
-            w = Rjy @ Ryy_inv
-            # one matrix product per (pattern, j) — not a Python loop per
-            # row (flagged rows can be O(rows) at alpha→0)
-            Y = Xo[np.ix_(rows_to_estimate, o_pos)] - mu_b[others]
-            E[rows_to_estimate, j] = Y @ w + mu_b[j]
-            denom = R_b[j, j] if R_b[j, j] else np.nan
-            D[rows_to_estimate, j] = (
-                np.abs(E[rows_to_estimate, j] - X[rows_to_estimate, j]) / denom
-            )
-
-        out = pdf[keys].copy()
-        for i, c in enumerate(cols):
-            out[c] = X[:, i]
-        for i, c in enumerate(cols):
-            out[f"E_{c}"] = E[:, i]
-        for i, c in enumerate(cols):
-            out[f"D_{c}"] = D[:, i]
-        out["MD"] = md
-        out["outlier_sp"] = flag
-        return out
-
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in keys]), F.lit(salt_buckets))
-    scored = (
-        tagged.withColumn("__salt", salt)
-        .groupBy("__pattern", "__salt")
-        .applyInPandas(score, out_schema)
-    )
-    if persist:
-        # one UDF execution serves both the sort's sampling pass and the
-        # sort; the input cache is released once results are materialized
-        scored = scored.persist()
-        try:
-            scored.count()
-        except BaseException:
-            scored.unpersist(blocking=False)
-            raise
-        cached_input.unpersist()
-        with _CACHE_LOCK:
-            _SCORED_CACHE = scored
-    return scored.orderBy(F.desc("outlier_sp"), F.desc("MD"))
 
 
 def deviation_severity_cells(scored: DataFrame, keys: list[str],

@@ -102,7 +102,6 @@ def drift_baseline_histograms(
 
 def build_image_suite(
     fmt_dim: DataFrame | list,
-    drift_baseline: dict | None = None,
     with_decode: bool = True,
     partition_by: list[str] = ("fmt",),
     drift_baselines: dict[str, dict] | None = None,
@@ -125,8 +124,6 @@ def build_image_suite(
         RobustZScoreCheck("w", threshold=6.0, max_violation_rate=0.01, keys=KEYS),
         MahalanobisCheck(["w", "h"], alpha=0.999, max_violation_rate=0.01, keys=KEYS),
     ]
-    if drift_baseline is not None:  # legacy single-feature (w) form
-        drift_baselines = {"w": drift_baseline, **(drift_baselines or {})}
     for feat, base in (drift_baselines or {}).items():
         cfg = DRIFT_FEATURES[feat]
         checks.append(
@@ -152,13 +149,12 @@ def run_image_validation(
     spark: SparkSession,
     images: DataFrame,
     fmt_dim: DataFrame | list | None = None,
-    drift_baseline: dict | None = None,
     with_decode: bool = True,
     drift_baselines: dict[str, dict] | None = None,
     with_violations: bool = True,
 ) -> SuiteResult:
     if fmt_dim is None:
         fmt_dim = ["jpeg", "png", "webp"]
-    suite = build_image_suite(fmt_dim, drift_baseline, with_decode,
+    suite = build_image_suite(fmt_dim, with_decode,
                               drift_baselines=drift_baselines)
     return suite.run(images, spark, with_violations=with_violations)

@@ -120,11 +120,9 @@ class ValidationSuite:
     def _stats_frame(self, df: DataFrame) -> DataFrame:
         """Narrow projection feeding every stats/post/extra job.
 
-        Column pruning must survive the cache: persisting the raw frame
-        would materialize payload columns (``bytes``!) that only map-only
-        ``use_original`` checks touch. At 10^12 rows this is the
-        difference between caching ~50 B/row of metadata and ~100 KB/row
-        of pixels."""
+        Payload columns (``bytes``!) are read only by map-only
+        ``use_original`` checks, so the stats, post and extra jobs scan
+        ~50 B/row of metadata instead of ~100 KB/row of pixels."""
         needed: set[str] = set(self.partition_by)
         for c in self.checks:
             if c.use_original:
@@ -141,13 +139,12 @@ class ValidationSuite:
         df: DataFrame,
         spark: SparkSession | None = None,
         with_violations: bool = True,
-        cache: bool = False,
     ) -> SuiteResult:
-        # cache=False default: the fused design already keeps the suite to
-        # ~4 narrow scans + 1 shuffle, and re-scanning a pruned parquet/
-        # Iceberg projection (vectorized, pushed-down) is usually cheaper
-        # than materializing a columnar cache — and at 10^12 rows caching
-        # is not an option at all. Opt in for small-but-remote inputs.
+        # the stats frame is never cached: the fused design already keeps
+        # the suite to ~4 narrow scans + 1 shuffle, re-scanning a pruned
+        # parquet/Iceberg projection (vectorized, pushed-down) is usually
+        # cheaper than materializing a columnar cache, and at 10^12 rows
+        # caching is not an option at all
         spark = spark or df.sparkSession
         t0 = time.time()
         for c in self.checks:
@@ -156,8 +153,6 @@ class ValidationSuite:
             # nothing will re-read them, so building the cache is pure cost
             c.cache_intermediates = with_violations
         stats_df = self._stats_frame(df)
-        if cache:
-            stats_df = stats_df.persist()
         try:
             global_stats, per_part = self._fused_stats(stats_df)
 
@@ -225,8 +220,6 @@ class ValidationSuite:
                 suite=self,
             )
         finally:
-            if cache:
-                stats_df.unpersist()
             if not with_violations:
                 # nothing downstream will re-read check-held intermediates
                 # (decode-result caches etc.) — free them now; otherwise

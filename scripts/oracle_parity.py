@@ -17,10 +17,16 @@ import argparse
 import datetime
 import hashlib
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+# Python workers start in the JVM's working directory: point them at the
+# same checkout so kernels import the code under test from any cwd
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (REPO, os.environ.get("PYTHONPATH")) if p)
 
 
 def canon(v) -> str:

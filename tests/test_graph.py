@@ -8,7 +8,6 @@ import pytest
 from anomalydetection_spark.functions.graph import (
     min_label_components,
     near_dup_clusters,
-    star_components,
 )
 
 
@@ -22,6 +21,24 @@ def spark():
 
 def _pairs_df(spark, pairs):
     return spark.createDataFrame(pairs, "a long, b long")
+
+
+def _union_find_labels(edges) -> dict[int, int]:
+    """Reference labeling: node -> min member of its union-find component."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for e in edges for n in e}
 
 
 def test_path_graph_needs_multiple_rounds(spark):
@@ -49,31 +66,11 @@ def test_matches_union_find_on_random_graph(spark):
     rng = random.Random(7)
     edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(45)]
     edges = [(a, b) for a, b in edges if a != b]
-
-    parent = list(range(60))
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    nodes = {n for e in edges for n in e}
-    # canonical label = min member of each union-find component
-    comp = {}
-    for n in nodes:
-        comp.setdefault(find(n), []).append(n)
-    want = {n: min(members) for members in comp.values() for n in members}
-
     got = {
         r["node"]: r["label"]
         for r in min_label_components(_pairs_df(spark, edges)).collect()
     }
-    assert got == want
+    assert got == _union_find_labels(edges)
 
 
 def test_label_monotone_and_converged(spark):
@@ -95,11 +92,9 @@ def test_label_monotone_and_converged(spark):
     assert joined.filter(F.col("la") != F.col("lb")).count() == 0
 
 
-def test_star_components_matches_union_find_and_propagation(spark):
-    from anomalydetection_spark.functions.graph import star_components
-
+def test_propagation_matches_union_find_on_chain_mixed_random(spark):
     cases = {
-        # adversarial for propagation: one long chain (diameter 19)
+        # long chain (diameter 19): needs the most propagation rounds
         "chain": [(i, i + 1) for i in range(19)],
         # two cliques bridged by a chain + noise ids
         "mixed": [(0, 1), (1, 2), (0, 2), (2, 50), (50, 51), (51, 52),
@@ -112,45 +107,19 @@ def test_star_components_matches_union_find_and_propagation(spark):
 
     for name, edges in cases.items():
         edges = [(a, b) for a, b in edges if a != b]
-        parent = list(range(100))
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        nodes = {n for e in edges for n in e}
-        comp = {}
-        for n in nodes:
-            comp.setdefault(find(n), []).append(n)
-        want = {n: min(members) for members in comp.values() for n in members}
-
-        df = _pairs_df(spark, edges)
-        got_star = {
-            r["node"]: r["label"] for r in star_components(df).collect()
-        }
-        assert got_star == want, name
-        got_prop = {
+        got = {
             r["node"]: r["label"]
-            for r in min_label_components(df).collect()
+            for r in min_label_components(_pairs_df(spark, edges)).collect()
         }
-        assert got_prop == got_star, name
+        assert got == _union_find_labels(edges), name
 
 
-def test_self_loop_only_nodes_survive_both_algorithms(spark):
+def test_self_loop_only_nodes_survive(spark):
     """A node whose only edges are self-loops must appear as its own
-    singleton in BOTH algorithms (star_components derives its node set
-    before self-loop canonicalization)."""
+    singleton."""
     df = _pairs_df(spark, [(7, 7), (1, 2)])
-    want = {7: 7, 1: 1, 2: 1}
-    for fn in (min_label_components, star_components):
-        got = {r["node"]: r["label"] for r in fn(df).collect()}
-        assert got == want, fn.__name__
+    got = {r["node"]: r["label"] for r in min_label_components(df).collect()}
+    assert got == {7: 7, 1: 1, 2: 1}
 
 
 def test_propagation_raises_on_non_convergence(spark):
@@ -161,6 +130,3 @@ def test_propagation_raises_on_non_convergence(spark):
     df = _pairs_df(spark, chain)
     with pytest.raises(RuntimeError, match="did not converge"):
         min_label_components(df, max_rounds=3)
-    # star handles the same chain within its O(log^2 n) budget
-    got = {r["node"]: r["label"] for r in star_components(df).collect()}
-    assert got == {i: 0 for i in range(9)}

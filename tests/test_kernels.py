@@ -284,6 +284,38 @@ def test_rec_scoring_salt_spreads_dense_pattern_and_preserves_output(spark, rec_
     pd.testing.assert_frame_equal(a, b)
 
 
+def _persisted_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_rec_analysis_cache_lifecycle(spark, rec_data):
+    """One call leaves exactly one cache, the scored frame behind the
+    returned DataFrame: the narrowed input cache is gone.
+    ``release_rec_analysis()`` frees it, and a call that raises leaves
+    nothing cached."""
+    from anomalydetection_spark.kernels import recommender
+
+    df = _to_df(spark, rec_data)
+    cols = ["i1", "i2", "i3", "i4"]
+    recommender.release_rec_analysis()
+    before = _persisted_rdds(spark)
+
+    out = run_rec_analysis(df, ["site"], cols, alpha=0.95, min_row_obs=3)
+    assert len(_persisted_rdds(spark) - before) == 1
+    assert recommender._SCORED_CACHE.storageLevel.useMemory
+    assert out.count() == len(rec_data)
+
+    recommender.release_rec_analysis()
+    assert recommender._SCORED_CACHE is None
+    assert _persisted_rdds(spark) == before
+
+    # presence must be strictly above min_presence: no column survives
+    with pytest.raises(ValueError, match="no indicator columns survive"):
+        run_rec_analysis(df, ["site"], cols, min_presence=1.0)
+    assert recommender._SCORED_CACHE is None
+    assert _persisted_rdds(spark) == before
+
+
 def test_stl_forecast_recovers_exact_seasonal_line():
     """Analytic golden: y[t] = a + b*t + s[t % 4] (noise-free). The
     centered 2x4 MA of a linear trend is the trend itself, so classical

@@ -4,10 +4,12 @@ scripts/oracle_parity.py; the driver runs its own copy)."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
 SF = "/root/testdata/sf0.001"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 FAST_SUBSET = [
     "groupby_pricing_summary",
@@ -29,6 +31,8 @@ FAST_SUBSET = [
     "ivf_pq_topk",
     "pq_train",
     "ivf_pq_pruned",
+    # connected-components labeling (min-label propagation)
+    "dedup_clusters",
 ]
 
 
@@ -56,7 +60,8 @@ def test_queries_oracle_keys_align():
 
 def test_oracle_parity_fast_subset():
     proc = subprocess.run(
-        [sys.executable, "scripts/oracle_parity.py", "--sf", SF, *FAST_SUBSET],
-        capture_output=True, text=True, timeout=900, cwd="/root/repo",
+        [sys.executable, os.path.join(REPO, "scripts", "oracle_parity.py"),
+         "--sf", SF, *FAST_SUBSET],
+        capture_output=True, text=True, timeout=900, cwd=REPO,
     )
     assert proc.returncode == 0, proc.stdout[-3000:] + proc.stderr[-2000:]

@@ -188,6 +188,43 @@ def test_ivf_probe_join_broadcasts_query_side(spark):
     assert "BroadcastExchange" in plan  # query side is broadcast by construction
 
 
+def test_ivf_topk_and_cosine_pairs_plan_with_one_job(spark, tmp_path):
+    """Building the ``ivf_topk`` and ``cosine_near_dup_pairs`` plans runs
+    exactly one job each: the centroid collect and the rerank-side
+    collect. No array-length probe runs first — under AQE that
+    aggregate costs two more jobs."""
+    import numpy as np
+    import pyspark.sql.functions as F2
+
+    from anomalydetection_spark.functions.similarity import (
+        cosine_near_dup_pairs,
+        ivf_topk,
+    )
+
+    rng = np.random.default_rng(5)
+    # one file, one split: the rerank side's limit-collect then needs no
+    # second job to scan further partitions
+    spark.createDataFrame(
+        [(i, rng.normal(size=16).astype(float).tolist()) for i in range(64)],
+        "vec_id long, embedding array<float>",
+    ).coalesce(1).write.parquet(str(tmp_path / "emb"))
+    emb = spark.read.parquet(str(tmp_path / "emb"))
+    centroids = emb.filter(F2.col("vec_id") < 4)
+    builds = {
+        "plan_ivf_topk": lambda: ivf_topk(emb, centroids, lambda v: v < 8, k=3),
+        "plan_cosine_pairs": lambda: cosine_near_dup_pairs(emb, 0.35),
+    }
+    sc = spark.sparkContext
+    for group, build in builds.items():
+        sc.setJobGroup(group, "plan-time job count")
+        try:
+            build()  # plan only, no action
+        finally:
+            sc.setJobGroup(None, None)
+        jobs = list(sc._jsc.sc().statusTracker().getJobIdsForGroup(group))
+        assert len(jobs) == 1, (group, jobs)
+
+
 def test_ivf_assignment_is_map_side_no_exchange(spark):
     """Centroid assignment must not shuffle the n×C pair set: scoring and
     the top-1/top-p pick are a projection over the corpus scan (centroids

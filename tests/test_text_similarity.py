@@ -340,13 +340,6 @@ def test_hamming_grouped_clusters_bound_hot_signature_pair_volume(spark):
     assert all(d == c and sz == 1 and k for d, c, sz, k in singles)
     assert len(got) == 260
 
-    # both algorithms agree
-    got_star = {(r["doc_id"], r["cluster"], r["cluster_size"], r["is_keeper"])
-                for r in hamming_near_dup_clusters(
-                    df, "id", "phash", max_hamming=2,
-                    algorithm="star").collect()}
-    assert got_star == got
-
 
 def test_phash_hamming_near_pairs_exact_and_equi_join(spark):
     """64-bit pigeonhole near-dup on an int signature column (the phash
