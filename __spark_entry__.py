@@ -2100,7 +2100,7 @@ def o_dedup_embedding_cosine() -> str:
 
 # ---------------------------------------------------------------------------
 # model kernels (SURVEY.md §2.11) — genuinely non-SQL-expressible
-# (driver-side matrix inverses / per-series model fits inside grouped-map
+# (driver-side matrix inverses / per-series model fits inside Arrow-batched
 # pandas UDFs), so no oracle_sql entries: the driver records the weaker
 # rows-only check for these two, by design.
 

@@ -709,7 +709,8 @@ def bpe_tokens(docs: DataFrame, merges: list[tuple[str, str]],
     result of an earlier merge — what BPE training always produces)
     this is equivalent to applying the merges once each in rank order,
     which is what makes the DuckDB oracle expressible as a chain of
-    boundary-anchored ``replace`` calls.
+    boundary-anchored ``replace`` calls. A table with any other side
+    raises ``ValueError`` before a job is planned.
 
     Returns ``docs``'s columns plus ``bpe_tokens array<string>`` and
     ``n_bpe_tokens long`` (plus ``bpe_ids array<int>`` / ``n_unk
@@ -734,6 +735,14 @@ def bpe_tokens(docs: DataFrame, merges: list[tuple[str, str]],
         StructType,
     )
 
+    made: set[str] = set()
+    for rank, (a, b) in enumerate(merges):
+        for side in (a, b):
+            if len(side) != 1 and side not in made:
+                raise ValueError(
+                    f"merges[{rank}] = ({a!r}, {b!r}): {side!r} is neither a "
+                    "single character nor the result of an earlier merge")
+        made.add(a + b)
     ranks = {(a, b): i for i, (a, b) in enumerate(merges)}
     if pre_split == "whitespace":
         rx = None

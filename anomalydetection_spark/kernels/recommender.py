@@ -24,15 +24,18 @@ Stage map (R loop → Spark):
        reference bug where df = n_keys + k + 1 (the MD column itself
        counted) minus 1, instead of k                  (:231-232)
   8.   estimates for flagged rows: E[x_j|y] = R_jy R_yy⁻¹ (y−μ_y) + μ_j
-       over the OTHER observed cells y; missingness-pattern grouping with
-       driver-precomputed inverses (patterns ≪ rows)   (:240-272)
+       over the OTHER observed cells y; rows grouped by missingness
+       pattern inside each batch, one inverse per pattern (:240-272)
   9.   D_j = |E_j − x_j| / R_jj; output keys + x + E_ + D_ + MD +
        outlier_sp, sorted worst-first                  (:283-292, :38-39)
 
-Scale design: moments are one DataFrame agg (k≈20 → ~210 pair sums);
-scoring/estimation is a grouped-map pandas UDF over the missingness
-pattern bitmask — per-pattern numpy is vectorized over all rows sharing
-the pattern, and R_yy⁻¹ is computed once per pattern, not per row.
+Scale design: moments are one DataFrame agg (k≈20 → ~210 pair sums).
+A row's score depends only on the row and the driver-fitted μ and R, so
+scoring/estimation is one Arrow-batched ``mapInPandas`` with no shuffle.
+Spark tags each row with its missingness-pattern bitmask; inside a batch
+the kernel groups rows by it, so per-pattern numpy is vectorized over the
+batch's rows sharing the pattern and R_yy⁻¹ is computed once per pattern
+per batch (at most 2^k), not per row.
 """
 
 from __future__ import annotations
@@ -82,6 +85,24 @@ def sparse_moments(df: DataFrame, cols: list[str]) -> tuple[np.ndarray, np.ndarr
     return mu, R, N
 
 
+def _screen_aggs(cols: list[str]) -> list:
+    """Aggregation expressions for the stage 1-2 column screens — split
+    out so ``run_rec_analysis`` can fuse them with its other per-column
+    stats into ONE job."""
+    aggs = [F.count(F.lit(1)).alias("scr_rows")]
+    for c in cols:
+        aggs.append(F.count(F.col(c)).alias(f"scr_n_{c}"))
+        aggs.append(F.var_samp(F.col(c).cast("double")).alias(f"scr_v_{c}"))
+    return aggs
+
+
+def _screened_from_row(row, cols: list[str], min_presence: float) -> list[str]:
+    total = row["scr_rows"] or 1
+    return [c for c in cols
+            if (row[f"scr_n_{c}"] or 0) / total > min_presence
+            and (row[f"scr_v_{c}"] is None or row[f"scr_v_{c}"] != 0)]
+
+
 def screen_columns(df: DataFrame, cols: list[str],
                    min_presence: float = 0.10) -> list[str]:
     """Stages 1-2: drop sparse and zero-variance columns (utils.R:111-122)
@@ -90,19 +111,8 @@ def screen_columns(df: DataFrame, cols: list[str],
     single-observation column (``var`` = NA in R, NULL here) is KEPT —
     R's ``var_inds == 0`` comparison is NA for it, and ``names[NA] %in%``
     matches nothing, so the reference never drops it."""
-    aggs = [F.count(F.lit(1)).alias("__rows")]
-    for c in cols:
-        aggs.append(F.count(F.col(c)).alias(f"n_{c}"))
-        aggs.append(F.var_samp(F.col(c).cast("double")).alias(f"v_{c}"))
-    row = df.agg(*aggs).first()
-    total = row["__rows"] or 1
-    keep = []
-    for c in cols:
-        present = (row[f"n_{c}"] or 0) / total
-        var = row[f"v_{c}"]
-        if present > min_presence and (var is None or var != 0):
-            keep.append(c)
-    return keep
+    row = df.agg(*_screen_aggs(cols)).first()
+    return _screened_from_row(row, cols, min_presence)
 
 
 def _pairwise_corr_aggs(cols: list[str]) -> list:
@@ -243,7 +253,6 @@ def run_rec_analysis(
     estimates_for_flagged_only: bool = True,
     collinearity: str | None = "drop",
     collinear_cutoff: float | None = None,
-    salt_buckets: int = 64,
 ) -> DataFrame:
     """Full K1 pipeline. Returns keys + x + E_/D_ + MD + outlier_sp.
 
@@ -252,30 +261,22 @@ def run_rec_analysis(
     variant, seeded noise into findCorrelation-flagged columns, default
     cutoff 0.99), or None to skip.
 
-    ``salt_buckets``: the scoring shuffle keys on (pattern, salt), not
-    the missingness pattern alone — on dense data ONE pattern holds ~all
-    rows and an unsalted groupBy would land the whole table on a single
-    task. Scoring is row-independent given the pattern, so salting is
-    output-identical while spreading each pattern over ``salt_buckets``
-    tasks.
-
     Pass discipline: the input matrix is persisted for the kernel's
     lifetime and every screen statistic (presence, variance, stddev,
     pairwise correlation moments) comes from ONE fused aggregation —
     pairwise-complete correlations don't change when other columns are
     screened out, so the full matrix is computed once and subset
     driver-side. The scored frame is persisted and materialized before
-    the final sort so the range-partitioner's sampling pass and the sort
-    itself share a single execution of the scoring UDF (an unpersisted
-    global sort runs the whole UDF stage twice). The input cache is
-    released once the scored frame is materialized; on error both are.
+    the final sort: the global sort's range partitioner first samples
+    its input, and without the persist that sampling pass runs the
+    scoring kernel a second time. The input cache is released once the
+    scored frame is materialized; on error both are.
 
-    The persist is not a ``localCheckpoint()``: measured on a 2k-row ×
-    4-indicator input at local[4] (4-core host), a checkpointed pass took
-    5.0–7.3 s against 2.9–3.8 s persisted. The checkpoint job ran 3.4 s
-    over 5 tasks where the persisted ``count`` ran 1.26 s over 8 —
-    without a cached plan to read, AQE coalesces the scoring stage into
-    one task.
+    Measured on a 2k-row × 4-indicator input at local[4] (4-core host,
+    12 warm passes each): persisted 1.38–1.83 s a pass, unpersisted
+    1.69–2.29 s, ``localCheckpoint()`` 1.26–1.78 s. The persist stays
+    rather than a local checkpoint because ``unpersist()`` frees it when
+    asked; a checkpoint's blocks live until the JVM collects its RDD.
 
     The scored cache backs the RETURNED frame, so it cannot be freed
     here — the previous call's cache is released on the next call, and
@@ -289,11 +290,9 @@ def run_rec_analysis(
     df = cached_input = df.select(*narrow).persist()
     scored = None
     try:
-        aggs = [F.count(F.lit(1)).alias("__rows")]
-        for c in indicator_cols:
-            aggs.append(F.count(F.col(c)).alias(f"scr_n_{c}"))
-            aggs.append(F.var_samp(F.col(c).cast("double")).alias(f"scr_v_{c}"))
-            aggs.append(F.stddev_samp(F.col(c).cast("double")).alias(f"scr_sd_{c}"))
+        aggs = _screen_aggs(indicator_cols) + [
+            F.stddev_samp(F.col(c).cast("double")).alias(f"scr_sd_{c}")
+            for c in indicator_cols]
         # the O(k^2) pairwise moments (6 sums/pair) ride the SAME job only
         # when the collinearity stage will consume them AND the column
         # count keeps the fused expression set codegen-friendly; past the
@@ -305,11 +304,7 @@ def run_rec_analysis(
         if fuse_pairwise:
             aggs += _pairwise_corr_aggs(indicator_cols)
         srow = df.agg(*aggs).first()
-        total = srow["__rows"] or 1
-        # stages 1-2 (exact screen_columns semantics — see its docstring)
-        cols = [c for c in indicator_cols
-                if (srow[f"scr_n_{c}"] or 0) / total > min_presence
-                and (srow[f"scr_v_{c}"] is None or srow[f"scr_v_{c}"] != 0)]
+        cols = _screened_from_row(srow, indicator_cols, min_presence)
         if fuse_pairwise:
             C_full = _corr_from_row(srow, len(indicator_cols))
             idx = [indicator_cols.index(c) for c in cols]
@@ -342,7 +337,9 @@ def run_rec_analysis(
         dof = (len(keys) + k + 1) - 1 if compat_df_quirk else k
         cutoff = chi2_ppf(alpha, dof)
 
-        # pattern bitmask: which indicator cells are observed
+        # pattern bitmask: which indicator cells are observed — computed
+        # in Spark, where a NaN value is non-null and so counts as observed
+        # (in pandas it would look missing)
         pattern = sum(
             F.col(c).isNotNull().cast("long") * F.lit(1 << i)
             for i, c in enumerate(cols)
@@ -364,9 +361,9 @@ def run_rec_analysis(
         flagged_only = estimates_for_flagged_only
 
         def score(pdf: pd.DataFrame) -> pd.DataFrame:
-            """One missingness pattern: vectorized MDmiss + conditional
-            means. R_yy⁻¹ computed ONCE per pattern (utils.R computes per
-            row)."""
+            """One missingness pattern's rows of a batch: vectorized
+            MDmiss + conditional means. R_yy⁻¹ computed ONCE per pattern
+            (utils.R computes per row)."""
             pat = int(pdf["__pattern"].iloc[0])
             obs = [i for i in range(kk) if pat & (1 << i)]
             X = pdf[cols].to_numpy(dtype=float)
@@ -417,14 +414,14 @@ def run_rec_analysis(
             out["outlier_sp"] = flag
             return out
 
-        salt = F.pmod(F.xxhash64(*[F.col(c) for c in keys]), F.lit(salt_buckets))
+        def score_batches(batches):
+            for pdf in batches:
+                yield pd.concat([score(g) for _, g in
+                                 pdf.groupby("__pattern", sort=False)],
+                                ignore_index=True)
+
         # one UDF execution serves both the sort's sampling pass and the sort
-        scored = (
-            tagged.withColumn("__salt", salt)
-            .groupBy("__pattern", "__salt")
-            .applyInPandas(score, out_schema)
-            .persist()
-        )
+        scored = tagged.mapInPandas(score_batches, out_schema).persist()
         scored.count()
     except BaseException:
         cached_input.unpersist(blocking=False)

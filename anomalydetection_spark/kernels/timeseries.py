@@ -92,29 +92,6 @@ def _snaive(y: np.ndarray, m: int) -> tuple[float, float]:
     return pred, _sd_floor(pred, sd)
 
 
-def _holt_winters(y: np.ndarray, m: int, a: float = 0.3, b: float = 0.1,
-                  g: float = 0.2) -> tuple[float, float]:
-    """Additive Holt-Winters with fixed smoothing; one-step residual sd."""
-    n = len(y)
-    if n < 2 * m:
-        return _snaive(y, m)
-    level = float(np.mean(y[:m]))
-    trend = float((np.mean(y[m:2 * m]) - np.mean(y[:m])) / m)
-    season = list(y[:m] - level)
-    resid = []
-    for t in range(m, n):
-        s = season[t % m]
-        pred = level + trend + s
-        resid.append(y[t] - pred)
-        new_level = a * (y[t] - s) + (1 - a) * (level + trend)
-        trend = b * (new_level - level) + (1 - b) * trend
-        season[t % m] = g * (y[t] - new_level) + (1 - g) * s
-        level = new_level
-    pred = level + trend + season[n % m]
-    sd = float(np.std(resid, ddof=1)) if len(resid) > 1 else 0.0
-    return float(pred), _sd_floor(float(pred), sd)
-
-
 def _ar1_drift(y: np.ndarray, m: int) -> tuple[float, float]:
     """AR(1)+drift on the seasonal-difference (auto.arima-lite)."""
     if len(y) <= m + 2:

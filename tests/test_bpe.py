@@ -77,6 +77,28 @@ def test_bpe_greedy_order_is_rank_not_position(spark):
     assert list(out["bpe_tokens"]) == ["w", "n", "es"]
 
 
+def test_bpe_rejects_malformed_merges_before_any_job(spark):
+    """A merge side that is neither one character nor an earlier merge's
+    result breaks the greedy == in-order equivalence the oracle relies
+    on: the table is refused while planning, before any job runs."""
+    sc = spark.sparkContext
+    docs = spark.createDataFrame([("d0", "lowest")], "doc_id string, text string")
+    bad_tables = [
+        [("l", "o"), ("low", "e")],           # 'low' is never produced
+        [("es", "t"), ("e", "s")],            # 'es' produced only later
+        [("l", "o"), ("", "w")],              # empty side
+    ]
+    sc.setJobGroup("bpe_bad_merges", "malformed merges job count")
+    try:
+        for merges in bad_tables:
+            with pytest.raises(ValueError, match="neither a single character"):
+                bpe_tokens(docs, merges, pre_split="whitespace")
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc._jsc.sc().statusTracker().getJobIdsForGroup("bpe_bad_merges")
+    assert len(jobs) == 0
+
+
 def test_bpe_vocab_ids_and_unk(spark):
     vocab = {"low": 0, "newest": 2, "e": 3}
     docs = spark.createDataFrame(

@@ -259,29 +259,71 @@ def test_screen_columns_r_boundary_semantics(spark):
     assert screen_columns(df9, ["a", "c", "d"]) == ["a", "d"]
 
 
-def test_rec_scoring_salt_spreads_dense_pattern_and_preserves_output(spark, rec_data):
-    """Dense data is ONE missingness pattern: unsalted, the whole table
-    would land on a single scoring task. The salted shuffle key must
-    spread it across many groups while producing identical output."""
-    import pyspark.sql.functions as F2
-
+def test_rec_scoring_dense_single_pattern_matches_numpy_reference(spark, rec_data):
+    """Dense data is ONE missingness pattern spread over every batch:
+    MDmiss (scale k/p_obs = 1), the flags and the flagged rows'
+    conditional estimates must match numpy on sparse_moments' mu and R."""
     X = rec_data.copy()
     X[5, 2] = 0.0  # remove the sparse row -> a fully dense single pattern
     df = _to_df(spark, X)
-    # the salt key genuinely partitions the single pattern
-    n_salts = (
-        df.select(F2.pmod(F2.xxhash64("site"), F2.lit(64)).alias("s"))
-        .distinct().count()
-    )
-    assert n_salts > 8
+    cols = ["i1", "i2", "i3", "i4"]
+    out = run_rec_analysis(df, ["site"], cols, alpha=0.95,
+                           min_row_obs=3).toPandas().set_index("site")
+    out = out.loc[[f"s{i}" for i in range(len(X))]]
+    assert all(c in out.columns for c in cols)
 
-    args = (["site"], ["i1", "i2", "i3", "i4"])
-    kw = dict(alpha=0.95, min_row_obs=3)
-    a = run_rec_analysis(df, *args, **kw, salt_buckets=1).toPandas()
-    b = run_rec_analysis(df, *args, **kw, salt_buckets=64).toPandas()
-    a = a.sort_values("site").reset_index(drop=True)
-    b = b.sort_values("site").reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
+    mu, R, _ = sparse_moments(df, cols)
+    d = X - mu
+    md = np.einsum("ij,jk,ik->i", d, np.linalg.inv(R), d)
+    np.testing.assert_allclose(out["MD"], md, rtol=1e-9)
+    flag = md > chi2_ppf(0.95, 5)
+    assert flag.any() and not flag.all()
+    np.testing.assert_array_equal(out["outlier_sp"], flag.astype(int))
+
+    for j, c in enumerate(cols):
+        others = [o for o in range(4) if o != j]
+        w = R[j, others] @ np.linalg.inv(R[np.ix_(others, others)])
+        e = (X[:, others] - mu[others]) @ w + mu[j]
+        np.testing.assert_allclose(out[f"E_{c}"][flag], e[flag], rtol=1e-9)
+        np.testing.assert_allclose(out[f"D_{c}"][flag],
+                                   np.abs(e - X[:, j])[flag] / R[j, j],
+                                   rtol=1e-9)
+        assert out[f"E_{c}"][~flag].isna().all()
+        assert out[f"D_{c}"][~flag].isna().all()
+
+
+def test_rec_scoring_independent_of_arrow_batch_split(spark):
+    """Scoring groups rows by pattern inside each Arrow batch, so a
+    pattern's rows split across batches must score exactly as when one
+    batch holds them all."""
+    rng = np.random.default_rng(5)
+    n = 300
+    base = rng.normal(0, 1, n)
+    X = np.column_stack([50 + 10 * base + rng.normal(0, 6, n),
+                         30 + 3 * base + rng.normal(0, 3, n),
+                         rng.normal(10, 2, n), rng.normal(100, 5, n)])
+    X[rng.random((n, 4)) < 0.4] = np.nan
+    X[:16] = np.where((np.arange(16)[:, None] >> np.arange(4)) & 1,
+                      X[:16], np.nan)  # every pattern occurs
+    assert len({tuple(r) for r in ~np.isnan(X)}) == 16
+    df = _to_df(spark, X)
+    cols = ["i1", "i2", "i3", "i4"]
+
+    def scored():
+        out = run_rec_analysis(df, ["site"], cols, alpha=0.9, min_row_obs=0,
+                               estimates_for_flagged_only=False).toPandas()
+        return out.sort_values("site").reset_index(drop=True)
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(conf)
+    default = scored()
+    spark.conf.set(conf, "7")
+    try:
+        split = scored()
+    finally:
+        spark.conf.set(conf, before)
+    assert all(c in default.columns for c in cols)
+    pd.testing.assert_frame_equal(split, default, check_exact=True)
 
 
 def _persisted_rdds(spark) -> set[int]:

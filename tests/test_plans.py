@@ -4,6 +4,7 @@ at 10^12 rows, asserted on `.explain` output so regressions are caught.
 - predicate pushdown + column pruning reach the parquet scan
 - small dimensions broadcast (no shuffle of the fact side)
 - the bytes column never crosses a shuffle (decode is map-only)
+- K1 scoring is map-only (no shuffle below the kernel)
 - skew helpers produce the two-level plan they promise
 - driver-built result frames are local relations (no job, no Python RDD)
 """
@@ -414,3 +415,27 @@ def test_empty_verdict_list_yields_empty_frame_with_verdict_schema(spark, images
     assert res.verdicts.schema == StructType.fromDDL(VERDICT_SCHEMA)
     assert res.verdicts.collect() == []
     assert res.passed
+
+
+def test_rec_scoring_is_a_map_kernel_with_no_shuffle_below(spark):
+    """K1 scores each row from the driver-fitted mu and R alone: the
+    scored plan is one MapInPandas, not a grouped map, and no Exchange
+    feeds it (the final sort's Exchange sits above the scored cache)."""
+    import numpy as np
+    import pandas as pd
+
+    from anomalydetection_spark.kernels import recommender
+
+    rng = np.random.default_rng(3)
+    pdf = pd.DataFrame(rng.normal(0, 1, (64, 3)), columns=["a", "b", "c"])
+    pdf.loc[::5, "b"] = np.nan
+    pdf.insert(0, "k", range(64))
+    out = recommender.run_rec_analysis(spark.createDataFrame(pdf), ["k"],
+                                       ["a", "b", "c"], min_row_obs=2)
+    try:
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" in plan
+        assert "FlatMapGroupsInPandas" not in plan
+        assert "Exchange" not in plan[plan.index("MapInPandas"):]
+    finally:
+        recommender.release_rec_analysis()

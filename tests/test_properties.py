@@ -25,7 +25,6 @@ from anomalydetection_spark.functions.image_ops import nn_resize
 from anomalydetection_spark.functions.png import decode_png, encode_png
 from anomalydetection_spark.kernels.timeseries import (
     _ar1_drift,
-    _holt_winters,
     _interp,
     _snaive,
 )
@@ -121,7 +120,7 @@ series = st.lists(
 @given(y=series, m=st.integers(1, 6))
 def test_forecasters_finite_with_positive_bands(y, m):
     arr = np.asarray(y, dtype=float)
-    for fn in (_snaive, _holt_winters, _ar1_drift):
+    for fn in (_snaive, _ar1_drift):
         pred, sd = fn(arr, m)
         assert math.isfinite(pred) and math.isfinite(sd)
         assert sd > 0  # _sd_floor: bands never collapse to zero width
