@@ -28,7 +28,7 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from anomalydetection_spark.checks.base import Check, VIOLATION_KEY_COL, verdict
+from anomalydetection_spark.checks.base import Check, verdict
 from anomalydetection_spark.functions.stats_math import chi2_ppf
 
 
@@ -43,6 +43,7 @@ class RobustZScoreCheck(Check):
     """
 
     n_post_rounds = 2
+    fitted = True
 
     def __init__(self, column: str, threshold: float = 3.5,
                  max_violation_rate: float = 0.01,
@@ -57,17 +58,16 @@ class RobustZScoreCheck(Check):
         self.accuracy = accuracy
         self.name = f"robust_z:{column}"
         self._slug = f"rz_{column}"
-        self._median: float | None = None
-        self._mad: float | None = None
-        self._sev: tuple[float, float] | None = None  # (q80, q90) of |z|
+        self.reset()
 
     def required_columns(self) -> list[str]:
         return [self.column]
 
     def reset(self) -> None:
-        self._median = None
-        self._mad = None
-        self._sev = None
+        self._median: float | None = None
+        self._mad: float | None = None
+        self._sev: tuple[float, float] | None = None  # (q80, q90) of |z|
+        self._z: Column | None = None  # |x − median| / (1.4826·MAD), once per fit
 
     # fused pass: median sketch (per-partition slices get their own rows)
     def stats_exprs(self) -> list[Column]:
@@ -98,7 +98,7 @@ class RobustZScoreCheck(Check):
                 ).alias(f"{self._slug}__madq")
             ]
         return [
-            F.sum((self._z() > self.threshold).cast("long")).alias(f"{self._slug}__bad"),
+            F.sum((self._z > self.threshold).cast("long")).alias(f"{self._slug}__bad"),
             F.count(self.column).alias(f"{self._slug}__n"),
         ]
 
@@ -106,9 +106,11 @@ class RobustZScoreCheck(Check):
         if rnd == 0:
             q = stats.get(f"{self._slug}__madq")
             self._mad = None if q is None else float(q[0])
+            scale = 1.4826 * (self._mad if self._mad else 1e-12)
             if q is not None:
-                scale = 1.4826 * (self._mad if self._mad else 1e-12)
                 self._sev = (float(q[1]) / scale, float(q[2]) / scale)
+            # an empty input leaves the median NULL: z is NULL, nothing flags
+            self._z = F.abs(F.col(self.column) - F.lit(self._median)) / F.lit(scale)
             return [verdict(self.name, self.column, "mad", self._mad)]
         bad = stats.get(f"{self._slug}__bad") or 0
         n = stats.get(f"{self._slug}__n") or 0
@@ -117,31 +119,21 @@ class RobustZScoreCheck(Check):
             verdict(self.name, self.column, "outlier_rate", rate, None, self.max_violation_rate)
         ]
 
-    def _fit(self, df: DataFrame) -> None:
-        """Standalone fit (outside a suite run)."""
-        med = df.agg(*self.stats_exprs()).first()[f"{self._slug}__median"]
-        self._median = float(med)
-        q = df.agg(*self.post_exprs(0)).first()[f"{self._slug}__madq"]
-        self._mad = float(q[0])
-        scale = 1.4826 * (self._mad if self._mad else 1e-12)
-        self._sev = (float(q[1]) / scale, float(q[2]) / scale)
-
-    def _z(self) -> Column:
-        scale = 1.4826 * (self._mad if self._mad else 1e-12)
-        return F.abs(F.col(self.column) - F.lit(self._median)) / F.lit(scale)
-
-    def violations(self, df: DataFrame) -> DataFrame | None:
-        if self._median is None or self._mad is None:
-            self._fit(df)
-        return (
-            df.filter(self._z() > self.threshold)
-            .withColumn("severity", severity_expr(self._z(), self._sev))
-            .select(*self.keys, "severity")
-            .withColumn(VIOLATION_KEY_COL, F.lit(self.name))
-        )
+    def row_violation(self, df: DataFrame) -> tuple[Column, Column]:
+        if self._z is None:
+            _fit_alone(self, df)
+        return self._z > self.threshold, severity_expr(self._z, self._sev)
 
 
-def severity_expr(deviation: Column, cutoffs: tuple[float, float] | None) -> Column:
+def _fit_alone(check: Check, df: DataFrame) -> None:
+    """Fit outside a suite run: the check's fused-pass and post-round-0
+    aggregates over ``df`` (standalone ``violations(df)``)."""
+    check.verdicts(df.agg(*check.stats_exprs()).first().asDict())
+    if exprs := check.post_exprs(0):
+        check.post_verdicts(0, df.agg(*exprs).first().asDict())
+
+
+def severity_expr(deviation: Column | None, cutoffs: tuple[float, float] | None) -> Column:
     """S7 severity tier (``PRIME_App/utils.R:769-820``): the reference
     colors a reported cell red when its deviation exceeds the 90th
     percentile of ALL deviation values and light-red above the 80th —
@@ -165,6 +157,8 @@ class MahalanobisCheck(Check):
     only by the K1 kernel, ``run_rec_analysis``.
     """
 
+    fitted = True
+
     def __init__(
         self,
         cols: Sequence[str],
@@ -179,28 +173,21 @@ class MahalanobisCheck(Check):
         self.name = f"mahalanobis:{','.join(self.cols)}"
         self._slug = "md_" + "_".join(self.cols)
         self.cutoff = chi2_ppf(alpha, len(self.cols))
-        self._mu: np.ndarray | None = None
-        self._sinv: np.ndarray | None = None
-        self._sev: tuple[float, float] | None = None  # (q80, q90) of MD²
+        self.reset()
 
     def reset(self) -> None:
-        self._mu = None
-        self._sinv = None
-        self._sev = None
+        self._solved = False
+        self._md2: Column | None = None  # None: fewer than 2 rows, no model
+        self._sev: tuple[float, float] | None = None  # (q80, q90) of MD²
 
     # ---- fused-pass moment expressions -------------------------------
     def stats_exprs(self) -> list[Column]:
         exprs: list[Column] = [F.count(F.lit(1)).alias(f"{self._slug}__n")]
         for i, ci in enumerate(self.cols):
             exprs.append(F.sum(F.col(ci).cast("double")).alias(f"{self._slug}__s_{i}"))
-            for j, cj in enumerate(self.cols):
-                if j < i:
-                    continue
-                exprs.append(
-                    F.sum((F.col(ci) * F.col(cj)).cast("double")).alias(
-                        f"{self._slug}__ss_{i}_{j}"
-                    )
-                )
+            for j in range(i, len(self.cols)):
+                exprs.append(F.sum((F.col(ci) * F.col(self.cols[j])).cast("double"))
+                             .alias(f"{self._slug}__ss_{i}_{j}"))
         return exprs
 
     def _solve(self, stats: dict[str, Any]) -> None:
@@ -229,27 +216,15 @@ class MahalanobisCheck(Check):
                 sinv = np.linalg.inv(cov + np.eye(k) * ridge)
             except np.linalg.LinAlgError:
                 sinv = np.linalg.pinv(cov)
-        # the suite evaluates the GLOBAL stats row first, then per-partition
-        # slices; keep the first (global) fit as the scoring model so
-        # violations() uses table-level moments, not the last partition's
-        if self._mu is None:
-            self._mu, self._sinv = mu, sinv
-
-    def md2_expr(self) -> Column:
-        """Squared Mahalanobis distance as a pure JVM expression."""
-        assert self._mu is not None and self._sinv is not None
-        terms: Column | None = None
-        k = len(self.cols)
-        for i in range(k):
-            di = F.col(self.cols[i]).cast("double") - F.lit(float(self._mu[i]))
-            for j in range(k):
-                dj = F.col(self.cols[j]).cast("double") - F.lit(float(self._mu[j]))
-                t = di * dj * F.lit(float(self._sinv[i, j]))
-                terms = t if terms is None else terms + t
-        return terms
+        self._md2 = md2_expr(self.cols, mu, sinv)
 
     def verdicts(self, stats: dict[str, Any]) -> list[dict[str, Any]]:
-        self._solve(stats)
+        # the suite evaluates the GLOBAL stats row first, then per-partition
+        # slices; the first (global) fit is the scoring model, so violation
+        # rows use table-level moments, not the last partition's
+        if not self._solved:
+            self._solved = True
+            self._solve(stats)
         return [verdict(self.name, ",".join(self.cols), "chi2_cutoff", self.cutoff)]
 
     # post round 0: flag count via the shared fused post-agg (model was
@@ -260,17 +235,17 @@ class MahalanobisCheck(Check):
         return list(self.cols)
 
     def post_exprs(self, rnd: int) -> list[Column]:
-        if self._mu is None:
+        if self._md2 is None:
             return []
         return [
-            F.sum((self.md2_expr() > self.cutoff).cast("long")).alias(f"{self._slug}__bad"),
+            F.sum((self._md2 > self.cutoff).cast("long")).alias(f"{self._slug}__bad"),
             F.count(F.lit(1)).alias(f"{self._slug}__nn"),
-            F.percentile_approx(self.md2_expr(), F.array(F.lit(0.8), F.lit(0.9)),
+            F.percentile_approx(self._md2, F.array(F.lit(0.8), F.lit(0.9)),
                                 1000).alias(f"{self._slug}__sq"),
         ]
 
     def post_verdicts(self, rnd: int, stats: dict[str, Any]) -> list[dict[str, Any]]:
-        if self._mu is None:
+        if self._md2 is None:
             return []
         sq = stats.get(f"{self._slug}__sq")
         if sq is not None and self._sev is None:
@@ -278,27 +253,25 @@ class MahalanobisCheck(Check):
         bad = stats.get(f"{self._slug}__bad") or 0
         n = stats.get(f"{self._slug}__nn") or 0
         rate = (bad / n) if n else 0.0
-        return [
-            verdict(
-                self.name, ",".join(self.cols), "outlier_rate",
-                rate, None, self.max_violation_rate,
-            )
-        ]
+        return [verdict(self.name, ",".join(self.cols), "outlier_rate",
+                        rate, None, self.max_violation_rate)]
 
-    def violations(self, df: DataFrame) -> DataFrame | None:
-        if self._mu is None:
-            stats = df.agg(*self.stats_exprs()).first().asDict()
-            self._solve(stats)
-        if self._sev is None:
-            sq = df.agg(
-                F.percentile_approx(self.md2_expr(), F.array(F.lit(0.8), F.lit(0.9)),
-                                    1000).alias("sq")
-            ).first()["sq"]
-            if sq is not None:
-                self._sev = (float(sq[0]), float(sq[1]))
-        return (
-            df.filter(self.md2_expr() > self.cutoff)
-            .withColumn("severity", severity_expr(self.md2_expr(), self._sev))
-            .select(*self.keys, "severity")
-            .withColumn(VIOLATION_KEY_COL, F.lit(self.name))
-        )
+    def row_violation(self, df: DataFrame) -> tuple[Column, Column]:
+        if not self._solved:
+            _fit_alone(self, df)
+        md2 = self._md2
+        return (F.lit(False) if md2 is None else md2 > self.cutoff), severity_expr(md2, self._sev)
+
+
+def md2_expr(cols: Sequence[str], mu: np.ndarray, sinv: np.ndarray) -> Column:
+    """Squared Mahalanobis distance as ONE parsed SQL string, not ~6k² Column
+    ops over py4j; left-associative + gives their tree ((t_00 + t_01) + …),
+    t_ij = (d_i·d_j)·Sinv_ij, d_i = double(x_i) − μ_i; repr round-trips."""
+    def num(x) -> str:
+        x = float(x)
+        return f"({x!r}D)" if np.isfinite(x) else f"CAST('{x!r}' AS DOUBLE)"
+
+    d = [f"(CAST(`{c.replace('`', '``')}` AS DOUBLE) - {num(m)})" for c, m in zip(cols, mu)]
+    k = len(cols)
+    terms = [f"(({d[i]} * {d[j]}) * {num(sinv[i, j])})" for i in range(k) for j in range(k)]
+    return F.expr(" + ".join(terms))

@@ -11,8 +11,11 @@ Here every check is a declarative object that contributes:
      the Welford/merge combine for free).
   2. ``verdicts(stats)`` — pure-python evaluation over the collected
      (tiny) stats row, one verdict dict per constraint.
-  3. ``violations(df)`` — an OPTIONAL lazy DataFrame of offending rows
-     (never collected by the engine; written to the violations sink).
+  3. ``row_violation(df)`` — row-local checks return their violation
+     predicate (and an optional severity Column); the suite ORs them into
+     ONE filter and ONE projection, so N such checks scan the input once.
+     Checks needing their own frame (grouped uniqueness, anti-join,
+     decode) return None and override ``violations(df)`` instead.
   4. ``run_extra(df)``  — for checks that genuinely need their own job
      (grouped uniqueness, referential anti-join, drift histograms).
 
@@ -25,6 +28,7 @@ from __future__ import annotations
 import abc
 from typing import Any
 
+import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 # One row per (partition, check, metric). `partition` is the string-ified
@@ -91,6 +95,11 @@ class Check(abc.ABC):
     #: a verdicts-only run must not pay the cache-build cost.
     cache_intermediates: bool = True
 
+    #: True → ``row_violation`` reads this run's fitted model, so the
+    #: suite rebuilds it every run instead of once per suite.
+    fitted: bool = False
+    keys: list[str] | None = None  # violation-row columns (None → all)
+
     def required_columns(self) -> list[str] | None:
         """Columns this check's stats/post/extra jobs read. The suite
         persists only the union of these (column pruning survives the
@@ -130,9 +139,19 @@ class Check(abc.ABC):
         """Evaluate post-round ``rnd`` results."""
         return []
 
-    def violations(self, df: DataFrame) -> DataFrame | None:
-        """Lazy DataFrame of violating rows (key columns only), or None."""
+    def row_violation(self, df: DataFrame) -> tuple[Column, Column | None] | None:
+        """(violation predicate, severity or None) over ``df``'s own rows,
+        or None when the check is not row-local."""
         return None
+
+    def violations(self, df: DataFrame) -> DataFrame | None:
+        """Lazy DataFrame of violating rows: key columns, ``severity``
+        (when the check grades its rows) and ``_check``; or None."""
+        if (rv := self.row_violation(df)) is None:
+            return None
+        sev = [] if rv[1] is None else [rv[1].alias("severity")]
+        return df.filter(rv[0]).select(*(self.keys or df.columns), *sev,
+                                       F.lit(self.name).alias(VIOLATION_KEY_COL))
 
     def run_extra(self, df: DataFrame, stats: dict[str, Any] | None = None) -> list[dict[str, Any]]:
         """Verdicts that genuinely need their own Spark job shape

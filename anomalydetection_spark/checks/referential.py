@@ -47,49 +47,44 @@ class ReferentialCheck(Check):
         return [self.fk]
 
     def _orphans(self, df: DataFrame) -> DataFrame:
-        if isinstance(self.dim, DataFrame):
-            dim = self.dim.select(F.col(self.pk).alias(self.fk)).distinct()
-            return df.join(F.broadcast(dim), on=self.fk, how="left_anti")
-        return df.filter(
-            ~F.coalesce(F.col(self.fk).isin(list(self.dim)), F.lit(False))
-        )
+        dim = self.dim.select(F.col(self.pk).alias(self.fk)).distinct()
+        return df.join(F.broadcast(dim), on=self.fk, how="left_anti")
 
     # constant-list dimension → pure scan-side predicate: the orphan count
-    # folds into the fused pass (per-partition verdicts come for free)
-    def stats_exprs(self) -> list[Column]:
+    # folds into the fused pass, the orphan rows into the shared projection
+    def row_violation(self, df: DataFrame) -> tuple[Column, None] | None:
         if isinstance(self.dim, DataFrame):
+            return None
+        return ~F.coalesce(F.col(self.fk).isin(list(self.dim)), F.lit(False)), None
+
+    def stats_exprs(self) -> list[Column]:
+        rv = self.row_violation(None)  # the list arm reads no input frame
+        if rv is None:
             return []
-        bad = ~F.coalesce(F.col(self.fk).isin(list(self.dim)), F.lit(False))
         return [
-            F.sum(bad.cast("long")).alias(f"{self._slug}__orphans"),
+            F.sum(rv[0].cast("long")).alias(f"{self._slug}__orphans"),
             F.count(F.lit(1)).alias(f"{self._slug}__rows"),
         ]
 
-    def verdicts(self, stats: dict[str, Any]) -> list[dict[str, Any]]:
-        if isinstance(self.dim, DataFrame):
-            return []
-        orphans = stats.get(f"{self._slug}__orphans") or 0
-        total = stats.get(f"{self._slug}__rows") or 0
+    def _verdicts(self, orphans: int, total: int) -> list[dict[str, Any]]:
         rate = (orphans / total) if total else 0.0
         return [
             verdict(self.name, self.fk, "orphan_rate", rate, None, self.max_violation_rate),
             verdict(self.name, self.fk, "orphan_count", float(orphans)),
         ]
 
+    def verdicts(self, stats: dict[str, Any]) -> list[dict[str, Any]]:
+        if isinstance(self.dim, DataFrame):
+            return []
+        return self._verdicts(stats.get(f"{self._slug}__orphans") or 0,
+                              stats.get(f"{self._slug}__rows") or 0)
+
     def run_extra(self, df: DataFrame, stats: dict[str, Any] | None = None) -> list[dict[str, Any]]:
         if not isinstance(self.dim, DataFrame):
             return []  # folded into the fused pass
-        orphan_rows = self._orphans(df).count()
-        total = df.count()
-        rate = (orphan_rows / total) if total else 0.0
-        return [
-            verdict(self.name, self.fk, "orphan_rate", rate, None, self.max_violation_rate),
-            verdict(self.name, self.fk, "orphan_count", float(orphan_rows)),
-        ]
+        return self._verdicts(self._orphans(df).count(), df.count())
 
     def violations(self, df: DataFrame) -> DataFrame | None:
-        return (
-            self._orphans(df)
-            .select(*self.keys)
-            .withColumn(VIOLATION_KEY_COL, F.lit(self.name))
-        )
+        if not isinstance(self.dim, DataFrame):
+            return super().violations(df)
+        return self._orphans(df).select(*self.keys, F.lit(self.name).alias(VIOLATION_KEY_COL))

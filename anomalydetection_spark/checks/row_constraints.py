@@ -8,8 +8,8 @@ single boolean Column, so:
 
   * its violation COUNT folds into the suite's fused aggregation as
     ``sum(cast(violated as long))`` — zero extra scans;
-  * its violation ROWS are a lazy ``df.filter(violated)`` projection that
-    Catalyst pushes into the parquet/Iceberg scan.
+  * its violation ROWS come from the suite's ONE filter + projection
+    shared by every row-local check, pushed into the parquet/Iceberg scan.
 """
 
 from __future__ import annotations
@@ -19,7 +19,7 @@ from typing import Any, Callable, Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from anomalydetection_spark.checks.base import Check, VIOLATION_KEY_COL, verdict
+from anomalydetection_spark.checks.base import Check, verdict
 
 
 class PredicateCheck(Check):
@@ -33,7 +33,7 @@ class PredicateCheck(Check):
     def __init__(
         self,
         name: str,
-        predicate: Column | Callable[[], Column],
+        predicate: Column | Callable[[], Column] | None,
         column: str = "",
         max_violation_rate: float = 0.0,
         keys: Sequence[str] | None = None,
@@ -42,10 +42,10 @@ class PredicateCheck(Check):
     ):
         self.name = name
         self._pred = predicate
-        # positive violation form: `NOT coalesce(pred, false)` is correct
-        # but opaque to parquet/Iceberg filter pushdown; a subclass that
-        # can state the violation as pushable atoms (IsNull, <, >, ...)
-        # supplies it here so violation scans skip row groups at the source
+        # positive violation form, replacing the predicate: `NOT coalesce(
+        # pred, false)` is opaque to parquet/Iceberg filter pushdown; a
+        # subclass that can state the violation as pushable atoms (IsNull,
+        # <, >, ...) supplies it so violation scans skip row groups
         self._violation = violation
         self.column = column
         self.max_violation_rate = max_violation_rate
@@ -62,16 +62,13 @@ class PredicateCheck(Check):
     def required_columns(self) -> list[str] | None:
         return self._columns
 
-    def predicate(self) -> Column:
-        p = self._pred() if callable(self._pred) else self._pred
-        # NULL predicate result counts as a violation (matches SQL WHERE
-        # semantics inverted: row not provably valid => flagged).
-        return F.coalesce(p, F.lit(False))
-
     def violated(self) -> Column:
         if self._violation is not None:
             return self._violation()
-        return ~self.predicate()
+        p = self._pred() if callable(self._pred) else self._pred
+        # NULL predicate result counts as a violation (matches SQL WHERE
+        # semantics inverted: row not provably valid => flagged).
+        return ~F.coalesce(p, F.lit(False))
 
     def stats_exprs(self) -> list[Column]:
         bad = self.violated().cast("long")
@@ -88,11 +85,8 @@ class PredicateCheck(Check):
             verdict(self.name, self.column, "violation_rate", rate, None, self.max_violation_rate)
         ]
 
-    def violations(self, df: DataFrame) -> DataFrame | None:
-        out = df.filter(self.violated())
-        if self.keys:
-            out = out.select(*self.keys)
-        return out.withColumn(VIOLATION_KEY_COL, F.lit(self.name))
+    def row_violation(self, df: DataFrame) -> tuple[Column, None]:
+        return self.violated(), None
 
 
 class RowCountCheck(Check):
@@ -131,7 +125,7 @@ class NotNullCheck(PredicateCheck):
     def __init__(self, column: str, max_null_rate: float = 0.0, keys=None):
         super().__init__(
             name=f"not_null:{column}",
-            predicate=lambda: F.col(column).isNotNull(),
+            predicate=None,
             column=column,
             max_violation_rate=max_null_rate,
             keys=keys,
@@ -189,14 +183,6 @@ class RangeCheck(PredicateCheck):
     """Closed-interval value constraint."""
 
     def __init__(self, column: str, lo=None, hi=None, max_violation_rate=0.0, keys=None):
-        def pred():
-            p = F.lit(True)
-            if lo is not None:
-                p = p & (F.col(column) >= F.lit(lo))
-            if hi is not None:
-                p = p & (F.col(column) <= F.lit(hi))
-            return p
-
         def violation():  # IsNull/LessThan/GreaterThan — all pushable
             v = F.col(column).isNull()
             if lo is not None:
@@ -207,7 +193,7 @@ class RangeCheck(PredicateCheck):
 
         super().__init__(
             name=f"range:{column}",
-            predicate=pred,
+            predicate=None,
             column=column,
             max_violation_rate=max_violation_rate,
             keys=keys,

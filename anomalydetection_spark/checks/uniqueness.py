@@ -108,13 +108,8 @@ class UniquenessCheck(Check):
     def violations(self, df: DataFrame) -> DataFrame | None:
         if self.hll_only:
             return None
-        dup_keys = (
-            df.groupBy(*self.keys).count().filter(F.col("count") > 1).drop("count")
-        )
+        dup_keys = df.groupBy(*self.keys).count().filter(F.col("count") > 1).drop("count")
         # duplicated-key groups are (by definition) a small fraction in a
         # healthy table; let AQE pick broadcast when they are
-        return (
-            df.join(dup_keys, on=self.keys, how="left_semi")
-            .select(*self.keys)
-            .withColumn(VIOLATION_KEY_COL, F.lit(self.name))
-        )
+        return (df.join(dup_keys, on=self.keys, how="left_semi")
+                .select(*self.keys, F.lit(self.name).alias(VIOLATION_KEY_COL)))

@@ -5,7 +5,9 @@ computes every stats-class metric (optionally grouped by partition
 columns for per-partition verdicts) → driver evaluates thresholds on the
 tiny collected stats → join/group-class checks run their own O(1) jobs →
 verdicts / violations / metrics come back as DataFrames for the caller to
-write to its sink tables.
+write to its sink tables. The violations frame is ONE filter + projection
+over the input for every row-local check (one scan whatever their number),
+plus the frames of the checks that need a join or the decode pass.
 
 The verdicts frame is built on the driver, from rows the driver already
 holds, as a local relation (``session.local_frame``): collecting it runs
@@ -19,15 +21,17 @@ semantics viable at 10^12 rows.
 
 from __future__ import annotations
 
+import operator
 import time
 from dataclasses import dataclass
 from functools import reduce
-from typing import Any, Sequence
+from typing import Any, Callable, Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import SparkContext
+from pyspark.sql import Column, DataFrame, SparkSession
 
-from anomalydetection_spark.checks.base import Check, VERDICT_SCHEMA
+from anomalydetection_spark.checks.base import Check, VERDICT_SCHEMA, VIOLATION_KEY_COL
 from anomalydetection_spark.session import local_frame
 
 
@@ -35,11 +39,12 @@ from anomalydetection_spark.session import local_frame
 class SuiteResult:
     """One run's outputs. ``verdicts`` is a driver-local relation (one row
     per partition, check and metric): ``collect()`` on it, or ``passed``,
-    is free — no Spark job. ``violations`` is a lazy frame over the input
-    and costs a scan when written or collected."""
+    is free — no Spark job. ``violations`` is a lazy frame over the input:
+    writing or collecting it scans the input once for all row-local
+    checks, plus the join/decode checks' own frames."""
 
     verdicts: DataFrame      # one row per (partition, check, metric)
-    violations: DataFrame | None  # offending rows, tagged with check name
+    violations: DataFrame | None  # (keys…, severity, _check) per violation
     metrics: dict[str, Any]  # raw collected stats (global slice)
     elapsed_sec: float
     suite: "ValidationSuite | None" = None  # owner, for release()
@@ -67,21 +72,31 @@ class ValidationSuite:
         self.checks = list(checks)
         self.table_name = table_name
         self.partition_by = list(partition_by)
+        self._memo_sc: Any = None
+        self._memo: dict = {}
 
     # ------------------------------------------------------------------
+    def _once(self, key: Any, build: Callable[[], Any]) -> Any:
+        """Columns that do not change between runs, built once per suite
+        and SparkContext (a classic Column is a handle into one JVM)."""
+        sc = SparkContext._active_spark_context
+        if self._memo_sc is not sc:
+            self._memo_sc, self._memo = sc, {}
+        if key not in self._memo:
+            self._memo[key] = build()
+        return self._memo[key]
+
+    def _stats_exprs(self) -> list[Column]:
+        # dedupe identical aliases contributed by multiple checks (str(Column)
+        # renders "Column<'expr AS alias'>" on classic and Connect backends)
+        by_alias: dict[str, Column] = {}
+        for e in (e for c in self.checks for e in c.stats_exprs()):
+            by_alias.setdefault(str(e).rsplit(" AS ", 1)[-1].rstrip("'>`").lstrip("`"), e)
+        return list(by_alias.values())
+
     def _fused_stats(self, df: DataFrame) -> tuple[dict, list[tuple[str, dict]]]:
         """Run the single fused agg. Returns (global_stats, per_partition)."""
-        exprs = []
-        seen: set[str] = set()
-        for c in self.checks:
-            for e in c.stats_exprs():
-                # dedupe identical aliases contributed by multiple checks
-                # (str(Column) renders "Column<'expr AS alias'>" on both
-                # classic and Connect backends)
-                alias = str(e).rsplit(" AS ", 1)[-1].rstrip("'>`").lstrip("`")
-                if alias not in seen:
-                    seen.add(alias)
-                    exprs.append(e)
+        exprs = self._once("stats", self._stats_exprs)
         if not exprs:
             return {}, []
         if self.partition_by:
@@ -112,9 +127,9 @@ class ValidationSuite:
                     key = "/".join(str(d.pop(p)) for p in self.partition_by)
                     per_part.append((key, d))
             per_part.sort(key=lambda kv: kv[0])
-            return g, per_part
-        g = df.agg(*exprs).first().asDict()
-        return g, []
+            if rows:  # an empty input has no rollup row, not even the total
+                return g, per_part
+        return df.agg(*exprs).first().asDict(), []
 
     # ------------------------------------------------------------------
     def _stats_frame(self, df: DataFrame) -> DataFrame:
@@ -153,68 +168,37 @@ class ValidationSuite:
             # nothing will re-read them, so building the cache is pure cost
             c.cache_intermediates = with_violations
         stats_df = self._stats_frame(df)
+        rows: list[tuple] = []
+
+        def add(vs: list[dict[str, Any]], partition: str = "") -> None:
+            rows.extend((self.table_name, partition, v["check"], v["column"],
+                         v["metric"], v["value"], v["lo"], v["hi"], v["passed"])
+                        for v in vs)
+
         try:
             global_stats, per_part = self._fused_stats(stats_df)
-
-            verdict_rows: list[dict[str, Any]] = []
             for c in self.checks:
-                for v in c.verdicts(global_stats):
-                    v.update(table=self.table_name, partition="")
-                    verdict_rows.append(v)
+                add(c.verdicts(global_stats))
                 for part_key, stats in per_part:
-                    for v in c.verdicts(stats):
-                        v.update(table=self.table_name, partition=part_key)
-                        verdict_rows.append(v)
+                    add(c.verdicts(stats), part_key)
 
             # fused post rounds: ONE agg per round shared by all checks
             # (robust-z MAD → violation counts, Mahalanobis flag counts, …)
             max_rounds = max((c.n_post_rounds for c in self.checks), default=0)
             for rnd in range(max_rounds):
-                exprs = []
-                for c in self.checks:
-                    if c.n_post_rounds > rnd:
-                        exprs.extend(c.post_exprs(rnd))
-                if not exprs:
-                    continue
-                post_stats = stats_df.agg(*exprs).first().asDict()
-                for c in self.checks:
-                    if c.n_post_rounds > rnd:
-                        for v in c.post_verdicts(rnd, post_stats):
-                            v.update(table=self.table_name, partition="")
-                            verdict_rows.append(v)
+                live = [c for c in self.checks if c.n_post_rounds > rnd]
+                exprs = [e for c in live for e in c.post_exprs(rnd)]
+                if exprs:
+                    post_stats = stats_df.agg(*exprs).first().asDict()
+                    for c in live:
+                        add(c.post_verdicts(rnd, post_stats))
 
             for c in self.checks:
-                target = df if c.use_original else stats_df
-                for v in c.run_extra(target, global_stats):
-                    v.update(table=self.table_name, partition="")
-                    verdict_rows.append(v)
+                add(c.run_extra(df if c.use_original else stats_df, global_stats))
 
-            verdicts = local_frame(
-                spark,
-                [
-                    (
-                        r["table"], r["partition"], r["check"], r["column"],
-                        r["metric"], r["value"], r["lo"], r["hi"], r["passed"],
-                    )
-                    for r in verdict_rows
-                ],
-                VERDICT_SCHEMA,
-            )
-
-            violations = None
-            if with_violations:
-                vdfs = []
-                for c in self.checks:
-                    v = c.violations(df)
-                    if v is not None:
-                        vdfs.append(v)
-                if vdfs:
-                    violations = reduce(
-                        lambda a, b: a.unionByName(b, allowMissingColumns=True), vdfs
-                    )
             return SuiteResult(
-                verdicts=verdicts,
-                violations=violations,
+                verdicts=local_frame(spark, rows, VERDICT_SCHEMA),
+                violations=self._violations(df) if with_violations else None,
                 metrics=global_stats,
                 elapsed_sec=time.time() - t0,
                 suite=self,
@@ -227,6 +211,54 @@ class ValidationSuite:
                 # frame shares the run's single decode pass (call
                 # ``release()`` after consuming it).
                 self.release()
+
+    def _violations(self, df: DataFrame) -> DataFrame | None:
+        """All violation rows, typed and ordered as the per-check frames'
+        ``unionByName(allowMissingColumns=True)``: ONE filter on the OR of
+        the row-local predicates (pushable atoms reach the scan), ONE
+        projection inlining a ``(keys…, severity, _check)`` struct per
+        violated check, then the frame-building checks' frames."""
+        local, frames, order = [], [], []
+        for i, c in enumerate(self.checks):
+            rv = (c.row_violation(df) if c.fitted
+                  else self._once(("rv", i), lambda: c.row_violation(df)))
+            if rv is not None:
+                sev = ["severity"] if rv[1] is not None else []
+                cols = [*(c.keys or df.columns), *sev, VIOLATION_KEY_COL]
+                local.append((i, c, *rv, cols))
+            elif (v := c.violations(df)) is not None:
+                frames.append(v)
+                cols = v.columns
+            else:
+                continue
+            order += [x for x in cols if x not in order]
+        if local:
+            shared = tuple(x for x in order if any(x in l[-1] for l in local))
+
+            def element(i, c, pred, sev, cols):
+                # a key this check does not project: NULL, typed by array()
+                fields = self._once(("fields", i, shared, tuple(cols)), lambda: [
+                    F.lit(c.name).alias(x) if x == VIOLATION_KEY_COL
+                    else F.col(x) if x in cols else F.lit(None).alias(x)
+                    for x in shared])
+                if sev is not None:
+                    fields = [sev.alias(x) if x == "severity" else f
+                              for f, x in zip(fields, shared)]
+                return F.when(pred, F.struct(*fields))
+
+            elems = [element(*l) if l[1].fitted
+                     else self._once(("el", l[0], shared), lambda: element(*l))
+                     for l in local]
+            preds = [l[2] for l in local if l[1].fitted]
+            fixed = [l[2] for l in local if not l[1].fitted]
+            if fixed:
+                preds.append(self._once("any", lambda: reduce(operator.or_, fixed)))
+            frames.insert(0, df.filter(reduce(operator.or_, preds)).select(
+                F.inline(F.array_compact(F.array(*elems)))))
+        if not frames:
+            return None
+        out = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
+        return out.select(*order) if local and len(frames) > 1 else out
 
     def release(self) -> None:
         """Free persisted intermediates held by checks (e.g. the decode

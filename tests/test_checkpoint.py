@@ -259,6 +259,26 @@ def test_sink_violations_carry_severity_column(spark, image_table, tmp_path):
     assert vals and vals <= {"high", "medium", "low", None}
 
 
+def test_staged_runner_commits_empty_and_one_row_units(spark, tmp_path):
+    """More hash buckets than rows: some units are empty or hold one row,
+    where no anomaly model can be fitted. Every unit still runs the image
+    suite (robust z, Mahalanobis, per-fmt partitions) and commits."""
+    from anomalydetection_spark.plans.image_suite import build_image_suite
+
+    pdf, _man = generate_pandas(6, with_payload=False)
+    path = str(tmp_path / "images")
+    to_spark(spark, pdf).write.parquet(path)
+    out = str(tmp_path / "out")
+    suite = build_image_suite(["jpeg", "png", "webp"], with_decode=False)
+    report = CheckpointedRunner(suite, out, bucket_key="image_id", n_buckets=8,
+                                stage_buckets=True).run(
+        spark.read.parquet(path), input_path=path)
+    assert report.completed == 8 and report.resumed == 0
+    rows = sorted(u.rows for u in report.units)
+    assert rows[0] == 0 and sum(rows) == 6
+    assert len(os.listdir(os.path.join(out, "_ledger"))) == 8
+
+
 def test_staging_gc_spares_concurrently_live_tags(spark, image_table, tmp_path):
     """GC of stale staging copies is scoped by the _IN_USE liveness
     marker (ADVICE r03/r04): the marker is a SIBLING file

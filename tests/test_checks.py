@@ -4,6 +4,8 @@ flags exactly those and nothing else."""
 
 from __future__ import annotations
 
+import collections
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -517,3 +519,64 @@ def test_xlsx_optional_r_attributes_and_row_gaps(spark, tmp_path):
     assert df.columns == ["id", "name"]
     got = [(r["id"], r["name"]) for r in df.collect()]
     assert got == [("1", "first"), (None, None), ("2", "after-gap")]
+
+
+@pytest.mark.parametrize("partition_by", [[], ["fmt"]])
+@pytest.mark.parametrize("n_rows", [0, 1])
+def test_anomaly_checks_on_empty_and_one_row_inputs(spark, n_rows, partition_by):
+    """No model fits on 0 rows (median, moments) or on 1 row (covariance):
+    the unfitted checks flag no row, keep their verdicts, and neither the
+    suite run, its violations nor a standalone ``violations(df)`` fails."""
+    df = spark.createDataFrame([("img_0", 100, 120, "jpeg")][:n_rows],
+                               "image_id string, w int, h int, fmt string")
+    suite = ValidationSuite([
+        RangeCheck("w", 16, 8192, keys=["image_id"]),
+        RobustZScoreCheck("w", keys=["image_id"]),
+        MahalanobisCheck(["w", "h"], keys=["image_id"]),
+    ], "images", partition_by=partition_by)
+    res = suite.run(df)
+    assert res.violations.collect() == []
+    assert res.violations.columns == ["image_id", "_check", "severity"]
+    got = {(r["check"], r["metric"]): r["value"]
+           for r in res.verdicts.filter("partition = ''").collect()}
+    assert got[("robust_z:w", "outlier_rate")] == 0.0
+    assert got[("robust_z:w", "median")] == (100.0 if n_rows else None)
+    assert ("mahalanobis:w,h", "chi2_cutoff") in got
+    assert ("mahalanobis:w,h", "outlier_rate") not in got  # no model, no rate
+    for check in (RobustZScoreCheck("w"), MahalanobisCheck(["w", "h"])):
+        assert check.violations(df).collect() == []
+
+
+def test_unit_invariant_columns_built_once_per_suite(spark, images):
+    """A second run of the same suite (the next checkpointed unit) builds
+    no fused-pass expression and no static violation predicate again;
+    only the fitted checks rebuild theirs, once per run."""
+    suite = ValidationSuite([
+        NotNullCheck("caption", keys=["image_id"]),
+        RangeCheck("w", 16, 8192, keys=["image_id"]),
+        ReferentialCheck("fmt", ["jpeg", "png"], keys=["image_id"]),
+        UniquenessCheck(["image_id"]),
+        RobustZScoreCheck("w", keys=["image_id"]),
+        MahalanobisCheck(["w", "h"], keys=["image_id"]),
+    ], "images", partition_by=["fmt"])
+    calls = collections.Counter()
+
+    def count(check, method):
+        inner = getattr(check, method)
+
+        def wrapped(*args):
+            calls[check.name, method] += 1
+            return inner(*args)
+
+        setattr(check, method, wrapped)
+
+    for c in suite.checks:
+        count(c, "stats_exprs")
+        count(c, "row_violation")
+    first = sorted(map(repr, suite.run(images).violations.collect()))
+    after_first = calls.copy()
+    assert sorted(map(repr, suite.run(images).violations.collect())) == first
+    for c in suite.checks:
+        assert calls[c.name, "stats_exprs"] == 1, c.name
+        rebuilt = calls[c.name, "row_violation"] - after_first[c.name, "row_violation"]
+        assert rebuilt == (1 if c.fitted else 0), c.name

@@ -322,3 +322,28 @@ def test_multifeature_drift_with_byte_length(spark):
     vs = res_same.verdicts.filter("check like 'drift:%'").toPandas()
     flagged = vs[(~vs["passed"]) & vs["metric"].isin(["psi", "ks"])]
     assert flagged.empty
+
+
+@pytest.mark.parametrize("with_decode", [False, True])
+@pytest.mark.parametrize("dim", ["list", "frame"])
+def test_suite_violations_equal_union_of_per_check_frames(spark, images_df,
+                                                          with_decode, dim):
+    """The suite's one shared projection yields the rows, columns, column
+    order and types of the union of each check's own ``violations(df)``
+    frame, which is the reference."""
+    from functools import reduce
+
+    from anomalydetection_spark.plans.image_suite import build_image_suite
+
+    fmt_dim = ["jpeg", "png", "webp"] if dim == "list" else fmt_dimension(spark)
+    suite = build_image_suite(fmt_dim, with_decode=with_decode)
+    res = suite.run(images_df, spark)
+    try:
+        ref = reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True),
+            [v for c in suite.checks if (v := c.violations(images_df)) is not None])
+        assert res.violations.schema == ref.schema
+        got = sorted(map(repr, res.violations.collect()))
+        assert got and got == sorted(map(repr, ref.collect()))
+    finally:
+        res.release()

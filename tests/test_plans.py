@@ -16,7 +16,13 @@ import pyspark.sql.functions as F
 import pytest
 from pyspark.sql.types import StructType
 
-from anomalydetection_spark.checks import InSetCheck, RangeCheck, ReferentialCheck
+from anomalydetection_spark.checks import (
+    InSetCheck,
+    NotNullCheck,
+    PredicateCheck,
+    RangeCheck,
+    ReferentialCheck,
+)
 from anomalydetection_spark.checks.base import VERDICT_SCHEMA, Check, verdict
 from anomalydetection_spark.functions.skew import heavy_hitters, salted_group_count
 from anomalydetection_spark.image_udfs import decode_results
@@ -50,6 +56,41 @@ def test_violation_filter_pushes_down_to_scan(spark, images_path):
     # column pruning: ReadSchema carries only image_id + w, never bytes
     schema = re.search(r"ReadSchema: struct<([^>]*)>", plan).group(1)
     assert "bytes" not in schema and "caption" not in schema
+
+    # the suite's shared violations scan pushes the OR of every check's atoms
+    suite = ValidationSuite([check, NotNullCheck("h", keys=["image_id"])])
+    plan = plan_of(suite.run(df, spark).violations)
+    pushed = re.search(r"PushedFilters: \[([^\]]*)\]", plan).group(1)
+    assert pushed.startswith("Or("), pushed
+    for atom in ("IsNull(w)", "LessThan(w,16)", "GreaterThan(w,2048)", "IsNull(h)"):
+        assert atom in pushed, pushed
+    schema = re.search(r"ReadSchema: struct<([^>]*)>", plan).group(1)
+    assert "bytes" not in schema and "caption" not in schema
+
+
+def test_row_local_violations_scan_once_whatever_the_check_count(spark, images_path):
+    """N row-local checks cost one scan of the input for their violation
+    rows, not N: suites of 3 and of 30 checks run the same number of jobs
+    and plan their violations over exactly one parquet scan."""
+    df = spark.read.parquet(images_path)
+    sc = spark.sparkContext
+    jobs = {}
+    for n in (3, 30):
+        suite = ValidationSuite([
+            PredicateCheck(f"w_below_{i}", F.col("w") < 2048 - i, column="w",
+                           keys=["image_id"])
+            for i in range(n)
+        ])
+        group = f"row_local_{n}"
+        sc.setJobGroup(group, "suite run job count")
+        try:
+            res = suite.run(df, spark)
+        finally:
+            sc.setJobGroup(None, None)
+        jobs[n] = len(sc._jsc.sc().statusTracker().getJobIdsForGroup(group))
+        executed = res.violations._jdf.queryExecution().executedPlan().toString()
+        assert executed.count("FileScan parquet") == 1, (n, executed)
+    assert jobs[3] == jobs[30], jobs
 
 
 def test_stats_frame_prunes_scan_columns(spark, images_path):
