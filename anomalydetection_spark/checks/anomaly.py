@@ -60,9 +60,6 @@ class RobustZScoreCheck(Check):
         self._slug = f"rz_{column}"
         self.reset()
 
-    def required_columns(self) -> list[str]:
-        return [self.column]
-
     def reset(self) -> None:
         self._median: float | None = None
         self._mad: float | None = None
@@ -230,9 +227,6 @@ class MahalanobisCheck(Check):
     # post round 0: flag count via the shared fused post-agg (model was
     # solved from the fused-pass moments — this check adds zero scans)
     n_post_rounds = 1
-
-    def required_columns(self) -> list[str]:
-        return list(self.cols)
 
     def post_exprs(self, rnd: int) -> list[Column]:
         if self._md2 is None:

@@ -82,12 +82,6 @@ class Check(abc.ABC):
     #: by every check, so total scan count is O(max rounds), not O(checks).
     n_post_rounds: int = 0
 
-    #: True → this check's jobs run on the ORIGINAL DataFrame, and its
-    #: columns are excluded from the suite's cached narrow projection
-    #: (decode checks: caching/shuffling the bytes column is the #1 scale
-    #: killer; their stage must stay map-only over the raw scan).
-    use_original: bool = False
-
     #: Set by ``ValidationSuite.run`` to its ``with_violations`` flag
     #: BEFORE any check job runs. Checks whose aggregate and violation
     #: frames can share one expensive pass (the decode check) persist
@@ -99,12 +93,6 @@ class Check(abc.ABC):
     #: suite rebuilds it every run instead of once per suite.
     fitted: bool = False
     keys: list[str] | None = None  # violation-row columns (None → all)
-
-    def required_columns(self) -> list[str] | None:
-        """Columns this check's stats/post/extra jobs read. The suite
-        persists only the union of these (column pruning survives the
-        cache). ``None`` = unknown → the suite disables pruning."""
-        return None
 
     def reset(self) -> None:
         """Clear state fitted during a previous ``run()`` (model moments,

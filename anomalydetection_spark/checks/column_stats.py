@@ -59,9 +59,6 @@ class ColumnStatsCheck(Check):
         self.constraints = constraints or {}
         self.name = f"column_stats:{column}"
 
-    def required_columns(self) -> list[str]:
-        return [self.column]
-
     def stats_exprs(self) -> list[Column]:
         return stats_exprs_for(self.column, self.numeric)
 

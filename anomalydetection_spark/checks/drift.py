@@ -112,11 +112,9 @@ class DriftCheck(Check):
 
     ``expr``: histogram a DERIVED value instead of a raw column (e.g.
     ``F.length('bytes')`` for byte-length drift — north-star feature
-    set: w/h/byte-length histograms). ``expr_cols`` names the columns it
-    reads; when one of them is a payload column the caller sets
-    ``use_original=True`` so the suite keeps it out of the cached narrow
-    projection — the histogram stage is map-only over the raw scan and
-    only (group, bin) count partials ever shuffle.
+    set: w/h/byte-length histograms). The histogram stage is map-only:
+    ``bytes`` becomes a bin index before the shuffle, so only (group,
+    bin) count partials ever move.
     """
 
     def __init__(
@@ -131,8 +129,6 @@ class DriftCheck(Check):
         max_ks: float = 0.15,
         max_emd_bins: float | None = None,
         expr: Column | None = None,
-        expr_cols: Sequence[str] = (),
-        use_original: bool = False,
     ):
         self.column = column
         self.lo, self.hi, self.nbins = lo, hi, nbins
@@ -143,13 +139,7 @@ class DriftCheck(Check):
         # EMD threshold expressed in BIN units (scale-free across configs)
         self.max_emd_bins = max_emd_bins
         self.expr = expr
-        self.expr_cols = list(expr_cols)
-        self.use_original = use_original
         self.name = f"drift:{column}"
-
-    def required_columns(self) -> list[str]:
-        cols = self.expr_cols if self.expr is not None else [self.column]
-        return [*cols, *self.group_cols]
 
     def run_extra(self, df: DataFrame, stats: dict[str, Any] | None = None) -> list[dict[str, Any]]:
         target = self.expr if self.expr is not None else self.column

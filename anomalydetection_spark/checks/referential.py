@@ -43,9 +43,6 @@ class ReferentialCheck(Check):
         self.name = f"referential:{fk}"
         self._slug = f"ref_{fk}"
 
-    def required_columns(self) -> list[str]:
-        return [self.fk]
-
     def _orphans(self, df: DataFrame) -> DataFrame:
         dim = self.dim.select(F.col(self.pk).alias(self.fk)).distinct()
         return df.join(F.broadcast(dim), on=self.fk, how="left_anti")
@@ -58,13 +55,12 @@ class ReferentialCheck(Check):
         return ~F.coalesce(F.col(self.fk).isin(list(self.dim)), F.lit(False)), None
 
     def stats_exprs(self) -> list[Column]:
-        rv = self.row_violation(None)  # the list arm reads no input frame
-        if rv is None:
-            return []
-        return [
-            F.sum(rv[0].cast("long")).alias(f"{self._slug}__orphans"),
-            F.count(F.lit(1)).alias(f"{self._slug}__rows"),
-        ]
+        # both arms read the row total here; the list arm (it reads no
+        # input frame) also counts its orphans
+        rows = [F.count(F.lit(1)).alias(f"{self._slug}__rows")]
+        if (rv := self.row_violation(None)) is None:
+            return rows
+        return [F.sum(rv[0].cast("long")).alias(f"{self._slug}__orphans"), *rows]
 
     def _verdicts(self, orphans: int, total: int) -> list[dict[str, Any]]:
         rate = (orphans / total) if total else 0.0
@@ -82,7 +78,9 @@ class ReferentialCheck(Check):
     def run_extra(self, df: DataFrame, stats: dict[str, Any] | None = None) -> list[dict[str, Any]]:
         if not isinstance(self.dim, DataFrame):
             return []  # folded into the fused pass
-        return self._verdicts(self._orphans(df).count(), df.count())
+        key = f"{self._slug}__rows"  # the fused pass counted the rows
+        total = stats[key] if stats and key in stats else df.count()
+        return self._verdicts(self._orphans(df).count(), total)
 
     def violations(self, df: DataFrame) -> DataFrame | None:
         if not isinstance(self.dim, DataFrame):

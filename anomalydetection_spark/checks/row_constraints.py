@@ -37,7 +37,6 @@ class PredicateCheck(Check):
         column: str = "",
         max_violation_rate: float = 0.0,
         keys: Sequence[str] | None = None,
-        columns: Sequence[str] | None = None,
         violation: Callable[[], Column] | None = None,
     ):
         self.name = name
@@ -50,17 +49,7 @@ class PredicateCheck(Check):
         self.column = column
         self.max_violation_rate = max_violation_rate
         self.keys = list(keys) if keys else None
-        # columns the predicate reads (for the suite's cache pruning);
-        # subclasses know theirs, a generic predicate may not → None
-        # disables pruning suite-wide (correct, just less optimal)
-        self._columns = (
-            list(columns) if columns is not None
-            else ([column] if column else None)
-        )
         self._slug = name.replace(":", "_").replace(".", "_")
-
-    def required_columns(self) -> list[str] | None:
-        return self._columns
 
     def violated(self) -> Column:
         if self._violation is not None:
@@ -99,9 +88,6 @@ class RowCountCheck(Check):
         self.name = "row_count"
         self.min_rows = min_rows
         self.max_rows = max_rows
-
-    def required_columns(self) -> list[str]:
-        return []
 
     def stats_exprs(self) -> list[Column]:
         return [F.count(F.lit(1)).alias("row_count__rows")]

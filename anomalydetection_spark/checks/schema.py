@@ -45,10 +45,6 @@ class SchemaCheck(Check):
         self.strict = strict
         self.name = "schema"
 
-    def required_columns(self) -> list[str]:
-        # metadata-only: nothing for the fused pass to read on our behalf
-        return []
-
     def run_extra(self, df: DataFrame, stats: dict[str, Any] | None = None) -> list[dict[str, Any]]:
         actual = dict(df.dtypes)
         out: list[dict[str, Any]] = []
@@ -70,10 +66,6 @@ class SchemaCheck(Check):
                 v["metric"] = f"unexpected_columns({','.join(sorted(extras))})"
             out.append(v)
         return out
-
-    # use_original: the narrow cached projection may legitimately drop
-    # columns other checks don't need — schema must see the raw frame
-    use_original = True
 
 
 def reconcile_schema(df: DataFrame, alias_map: Mapping[str, str]) -> DataFrame:

@@ -80,9 +80,6 @@ class UniquenessCheck(Check):
             )
         ]
 
-    def required_columns(self) -> list[str]:
-        return list(self.keys)
-
     def run_extra(self, df: DataFrame, stats: dict[str, Any] | None = None) -> list[dict[str, Any]]:
         if self.hll_only:
             return []
@@ -97,7 +94,8 @@ class UniquenessCheck(Check):
             .first()
         )
         # total row count comes from the fused pass — no extra scan
-        total = (stats or {}).get(f"{self._slug}__rows") or df.count()
+        key = f"{self._slug}__rows"
+        total = stats[key] if stats and key in stats else df.count()
         rate = (dup["dup_rows"] / total) if total else 0.0
         col = ",".join(self.keys)
         return [

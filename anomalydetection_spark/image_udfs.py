@@ -132,14 +132,8 @@ def decode_results(images: DataFrame) -> DataFrame:
 
 
 class DecodeCheck(Check):
-    """Decodability + pixel-invariant check over the bytes column.
-
-    ``use_original``: the suite must NOT route this check through its
-    cached narrow projection — the bytes column stays out of the cache
-    and out of every shuffle; this check's jobs are map-only over the raw
-    scan."""
-
-    use_original = True
+    """Decodability + pixel-invariant check over the bytes column. Its
+    jobs are map-only over the input scan: bytes never cross a shuffle."""
 
     def __init__(self, max_violation_rate: float = 0.0,
                  max_caption_mismatch_rate: float = 0.01,

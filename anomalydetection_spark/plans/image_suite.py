@@ -60,16 +60,16 @@ def image_schema_check() -> SchemaCheck:
 
 
 # North-star drift feature set: w / h / byte-length histograms. The
-# byte-length feature histograms length(bytes) map-only over the raw
-# scan (use_original — payload bytes never enter the cache or a shuffle;
-# only (group, bin) count partials move).
+# byte-length feature histograms length(bytes) map-only over the scan:
+# payload bytes never cross a shuffle, only (group, bin) count partials
+# move.
 DRIFT_FEATURES: dict[str, dict] = {
     "w": dict(lo=16, hi=2048, nbins=64),
     "h": dict(lo=16, hi=2048, nbins=64),
     "byte_length": dict(
         lo=0, hi=65536, nbins=64,
         # thunk: building a Column needs an active session (classic backend)
-        expr=lambda: F.length("bytes"), expr_cols=["bytes"], use_original=True,
+        expr=lambda: F.length("bytes"),
     ),
 }
 
@@ -132,8 +132,6 @@ def build_image_suite(
                 baseline=base, group_cols=["fmt"],
                 max_psi=0.2, max_ks=0.15,
                 expr=cfg["expr"]() if "expr" in cfg else None,
-                expr_cols=cfg.get("expr_cols", ()),
-                use_original=cfg.get("use_original", False),
             )
         )
     if with_decode:

@@ -70,6 +70,10 @@ class ValidationSuite:
         partition_by: Sequence[str] = (),
     ):
         self.checks = list(checks)
+        names = [c.name for c in self.checks]
+        if clash := sorted({n for n in names if names.count(n) > 1}):
+            # a name keys its check's fused aggregates and violation rows
+            raise ValueError(f"check names must be unique; repeated: {clash}")
         self.table_name = table_name
         self.partition_by = list(partition_by)
         self._memo_sc: Any = None
@@ -87,11 +91,15 @@ class ValidationSuite:
         return self._memo[key]
 
     def _stats_exprs(self) -> list[Column]:
-        # dedupe identical aliases contributed by multiple checks (str(Column)
-        # renders "Column<'expr AS alias'>" on classic and Connect backends)
+        # dedupe identical expressions contributed by multiple checks
+        # (str(Column) renders "Column<'expr AS alias'>" on classic and
+        # Connect backends); one alias bound to two expressions is a clash
         by_alias: dict[str, Column] = {}
         for e in (e for c in self.checks for e in c.stats_exprs()):
-            by_alias.setdefault(str(e).rsplit(" AS ", 1)[-1].rstrip("'>`").lstrip("`"), e)
+            alias = str(e).rsplit(" AS ", 1)[-1].rstrip("'>`").lstrip("`")
+            if str(by_alias.setdefault(alias, e)) != str(e):
+                raise ValueError(f"fused aggregate {alias!r} is bound to two different "
+                                 f"expressions: {by_alias[alias]} and {e}")
         return list(by_alias.values())
 
     def _fused_stats(self, df: DataFrame) -> tuple[dict, list[tuple[str, dict]]]:
@@ -131,35 +139,12 @@ class ValidationSuite:
                 return g, per_part
         return df.agg(*exprs).first().asDict(), []
 
-    # ------------------------------------------------------------------
-    def _stats_frame(self, df: DataFrame) -> DataFrame:
-        """Narrow projection feeding every stats/post/extra job.
-
-        Payload columns (``bytes``!) are read only by map-only
-        ``use_original`` checks, so the stats, post and extra jobs scan
-        ~50 B/row of metadata instead of ~100 KB/row of pixels."""
-        needed: set[str] = set(self.partition_by)
-        for c in self.checks:
-            if c.use_original:
-                continue
-            rc = c.required_columns()
-            if rc is None:
-                return df  # a check with unknown column needs → no pruning
-            needed.update(rc)
-        existing = [c for c in df.columns if c in needed]
-        return df.select(*existing) if existing else df
-
     def run(
         self,
         df: DataFrame,
         spark: SparkSession | None = None,
         with_violations: bool = True,
     ) -> SuiteResult:
-        # the stats frame is never cached: the fused design already keeps
-        # the suite to ~4 narrow scans + 1 shuffle, re-scanning a pruned
-        # parquet/Iceberg projection (vectorized, pushed-down) is usually
-        # cheaper than materializing a columnar cache, and at 10^12 rows
-        # caching is not an option at all
         spark = spark or df.sparkSession
         t0 = time.time()
         for c in self.checks:
@@ -167,7 +152,6 @@ class ValidationSuite:
             # verdicts-only runs skip shared-pass caches (decode results):
             # nothing will re-read them, so building the cache is pure cost
             c.cache_intermediates = with_violations
-        stats_df = self._stats_frame(df)
         rows: list[tuple] = []
 
         def add(vs: list[dict[str, Any]], partition: str = "") -> None:
@@ -176,7 +160,7 @@ class ValidationSuite:
                         for v in vs)
 
         try:
-            global_stats, per_part = self._fused_stats(stats_df)
+            global_stats, per_part = self._fused_stats(df)
             for c in self.checks:
                 add(c.verdicts(global_stats))
                 for part_key, stats in per_part:
@@ -189,12 +173,12 @@ class ValidationSuite:
                 live = [c for c in self.checks if c.n_post_rounds > rnd]
                 exprs = [e for c in live for e in c.post_exprs(rnd)]
                 if exprs:
-                    post_stats = stats_df.agg(*exprs).first().asDict()
+                    post_stats = df.agg(*exprs).first().asDict()
                     for c in live:
                         add(c.post_verdicts(rnd, post_stats))
 
             for c in self.checks:
-                add(c.run_extra(df if c.use_original else stats_df, global_stats))
+                add(c.run_extra(df, global_stats))
 
             return SuiteResult(
                 verdicts=local_frame(spark, rows, VERDICT_SCHEMA),

@@ -186,34 +186,61 @@ def test_fingerprint_tracks_content(tmp_path, spark, image_table):
 def test_cli_run_and_resume_subprocess(spark, image_table, tmp_path):
     """spark-submit-style entry (scripts/run_validation.py) end-to-end:
     first run commits every unit; an identical relaunch resumes from the
-    ledger and runs nothing."""
-    import json
-    import os
+    ledger and runs nothing. A run SIGKILLed after its first commit
+    resumes the committed units, completes the rest, and lands the same
+    verdict rows as the uninterrupted run."""
+    import glob
+    import signal
     import subprocess
     import sys
 
-    out = str(tmp_path / "cli_out")
-    cmd = [
-        sys.executable, os.path.join(REPO, "scripts", "run_validation.py"),
-        "--input", image_table, "--output", out,
-        "--n-buckets", "4", "--no-decode",
-    ]
+    def cmd(out):
+        return [
+            sys.executable, os.path.join(REPO, "scripts", "run_validation.py"),
+            "--input", image_table, "--output", out,
+            "--n-buckets", "8", "--no-decode",
+        ]
     env = dict(os.environ, SPARK_GRAFT_CPUS="4")
 
-    def run():
-        p = subprocess.run(cmd, env=env, capture_output=True, text=True, timeout=300)
+    def run(out):
+        p = subprocess.run(cmd(out), env=env, capture_output=True, text=True, timeout=300)
         assert p.returncode == 0, p.stderr[-2000:]
         body = p.stdout[p.stdout.index("{"):]
         return json.loads(body[:body.rindex("}") + 1])
 
-    first = run()
-    assert first["units_completed"] == 4 and first["units_resumed"] == 0
+    def verdict_rows(out):
+        return sorted(map(tuple, spark.read.parquet(f"{out}/verdicts").collect()))
+
+    out = str(tmp_path / "cli_out")
+    first = run(out)
+    assert first["units_completed"] == 8 and first["units_resumed"] == 0
     assert all(not u["skipped"] for u in first["units"])
     assert os.path.isdir(f"{out}/verdicts") and os.path.isdir(f"{out}/_ledger")
 
-    second = run()
-    assert second["units_resumed"] == 4
+    second = run(out)
+    assert second["units_resumed"] == 8
     assert all(u["skipped"] for u in second["units"])
+
+    killed = str(tmp_path / "cli_killed")
+    ledger = f"{killed}/_ledger/*.json"
+    # own process group: the SIGKILL takes the CLI process and its JVM at once
+    p = subprocess.Popen(cmd(killed), env=env, stdout=subprocess.DEVNULL,
+                         stderr=subprocess.DEVNULL, start_new_session=True)
+    try:
+        deadline = time.time() + 300
+        while not glob.glob(ledger) and p.poll() is None and time.time() < deadline:
+            time.sleep(0.05)
+    finally:
+        os.killpg(p.pid, signal.SIGKILL)
+        p.wait(timeout=60)
+    committed = len(glob.glob(ledger))
+    assert 0 < committed < 8, committed
+
+    resumed = run(killed)
+    assert resumed["units_resumed"] == committed
+    assert resumed["units_completed"] == 8 - committed
+    assert len(glob.glob(ledger)) == 8
+    assert verdict_rows(killed) == verdict_rows(out)
 
 
 def test_unit_col_nulls_and_typed_values(spark, tmp_path):

@@ -17,12 +17,14 @@ from anomalydetection_spark.checks import (
     MahalanobisCheck,
     NotNullCheck,
     NotInSetCheck,
+    PredicateCheck,
     RangeCheck,
     ReferentialCheck,
     RlikeCheck,
     RobustZScoreCheck,
     UniquenessCheck,
 )
+from anomalydetection_spark.checks.base import Check, verdict
 from anomalydetection_spark.checks.drift import histogram, ks_from_histograms, psi_from_histograms
 
 
@@ -580,3 +582,43 @@ def test_unit_invariant_columns_built_once_per_suite(spark, images):
         assert calls[c.name, "stats_exprs"] == 1, c.name
         rebuilt = calls[c.name, "row_violation"] - after_first[c.name, "row_violation"]
         assert rebuilt == (1 if c.fitted else 0), c.name
+
+
+class _RowTotal(Check):
+    """Reads the input's row total under a fused alias it shares."""
+
+    def __init__(self, name):
+        self.name = name
+
+    def stats_exprs(self):
+        return [F.count(F.lit(1)).alias("shared__rows")]
+
+    def verdicts(self, stats):
+        return [verdict(self.name, "", "rows", stats["shared__rows"])]
+
+
+def test_clashing_check_names_and_aggregates_fail_before_any_job(spark, images):
+    """A check's name keys its fused aggregates and its violation rows:
+    two checks under one name would share one count (the stricter range
+    would report the looser one's rate and pass). The suite refuses them
+    when built, and refuses two names whose fused aliases collide before
+    its first job. Identical aggregates are still computed once."""
+    sc = spark.sparkContext
+    sc.setJobGroup("clashing_checks", "clashing checks job count")
+    try:
+        with pytest.raises(ValueError, match="range:w"):
+            ValidationSuite([RangeCheck("w", 0, 1000),
+                             RangeCheck("w", 0, 10, max_violation_rate=0.5)]).run(images)
+        with pytest.raises(ValueError, match="in_set:fmt"):
+            ValidationSuite([InSetCheck("fmt", ["jpeg", "png"]), InSetCheck("fmt", ["jpeg"])])
+        same_slug = ValidationSuite([PredicateCheck("w:ok", F.col("w") < 1000),
+                                     PredicateCheck("w.ok", F.col("w") < 10)])
+        with pytest.raises(ValueError, match="w_ok__violations"):
+            same_slug.run(images)
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert not sc._jsc.sc().statusTracker().getJobIdsForGroup("clashing_checks")
+
+    res = ValidationSuite([_RowTotal("a"), _RowTotal("b")]).run(images)
+    assert [r["value"] for r in res.verdicts.collect()] == [204.0, 204.0]

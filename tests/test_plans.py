@@ -22,6 +22,7 @@ from anomalydetection_spark.checks import (
     PredicateCheck,
     RangeCheck,
     ReferentialCheck,
+    UniquenessCheck,
 )
 from anomalydetection_spark.checks.base import VERDICT_SCHEMA, Check, verdict
 from anomalydetection_spark.functions.skew import heavy_hitters, salted_group_count
@@ -93,14 +94,80 @@ def test_row_local_violations_scan_once_whatever_the_check_count(spark, images_p
     assert jobs[3] == jobs[30], jobs
 
 
-def test_stats_frame_prunes_scan_columns(spark, images_path):
-    from anomalydetection_spark.plans.image_suite import build_image_suite
+def jobs_in_group(spark, group, action):
+    """Number of Spark jobs ``action()`` runs, counted per job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job count")
+    try:
+        action()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc._jsc.sc().statusTracker().getJobIdsForGroup(group))
+
+
+def executed_plans(spark, action):
+    """Physical plan of every SQL execution ``action()`` runs, read from
+    the SQL status store (it records executions with the UI off)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def newest_first():  # executionsList() is ordered by execution id
+        lst = store.executionsList()
+        return (lst.apply(i) for i in range(lst.size() - 1, -1, -1))
+
+    bus.waitUntilEmpty()
+    last = next((e.executionId() for e in newest_first()), -1)
+    action()
+    bus.waitUntilEmpty()
+    return [e.physicalPlanDescription() for e in newest_first()
+            if e.executionId() > last][::-1]
+
+
+def test_suite_jobs_never_scan_payload_bytes(spark, images_path):
+    """The suite hands every stats, post-round, extra and violations job
+    the input frame itself; Catalyst prunes each scan to the columns its
+    query references, so the metadata image suite (drift on, decode off)
+    never reads the payload ``bytes``."""
+    from anomalydetection_spark.plans.image_suite import (
+        build_image_suite,
+        drift_baseline_histograms,
+    )
 
     df = spark.read.parquet(images_path)
-    suite = build_image_suite(["jpeg", "png", "webp"], with_decode=True)
-    plan = plan_of(suite._stats_frame(df).groupBy("fmt").count())
-    schema = re.search(r"ReadSchema: struct<([^>]*)>", plan).group(1)
-    assert "bytes" not in schema, "stats pass must never scan payload bytes"
+    suite = build_image_suite(
+        ["jpeg", "png", "webp"], with_decode=False,
+        drift_baselines=drift_baseline_histograms(df, features=["w", "h"]))
+    plans = executed_plans(spark, lambda: suite.run(df, spark).violations.collect())
+    # fused rollup, 2 post rounds, uniqueness, 2 drift histograms, violations
+    assert len(plans) >= 7, len(plans)
+    schemas = [s for p in plans for s in re.findall(r"ReadSchema: struct<([^>]*)>", p)]
+    assert len(schemas) >= len(plans)
+    assert not [s for s in schemas if "bytes" in s], schemas
+
+
+def test_extra_jobs_take_row_totals_from_the_fused_pass(spark, images_path):
+    """A DataFrame-dimension referential check adds only its anti-join's
+    jobs to a suite, and uniqueness on an empty input runs no count job:
+    both read the input's row total from the fused pass."""
+    df = spark.read.parquet(images_path)
+    dim = spark.createDataFrame([("jpeg",), ("png",)], "fmt string")
+    base = [RangeCheck("w", 16, 2048), NotNullCheck("h")]
+    check = ReferentialCheck("fmt", dim)
+    without = jobs_in_group(spark, "ref_without",
+                            lambda: ValidationSuite(base).run(df, spark, with_violations=False))
+    with_ref = jobs_in_group(spark, "ref_with", lambda: ValidationSuite(
+        [*base, check]).run(df, spark, with_violations=False))
+    anti_join = jobs_in_group(spark, "ref_anti_join", lambda: check._orphans(df).count())
+    assert with_ref - without == anti_join, (without, with_ref, anti_join)
+
+    empty = df.filter(F.col("w") < 0)
+    suite = ValidationSuite([UniquenessCheck(["image_id"])])
+    plans = executed_plans(spark, lambda: suite.run(empty, spark, with_violations=False))
+    # the fused pass and the exact tier's grouped count; no bare count(1)
+    assert len(plans) == 2, plans
+    dup = {r["metric"]: r["value"] for r in suite.run(empty, spark).verdicts.collect()}
+    assert dup["duplicate_row_rate"] == 0.0 and dup["duplicate_key_count"] == 0.0
 
 
 def test_referential_uses_broadcast_join(spark, images_path):
