@@ -12,21 +12,24 @@ shuffle of the corpus), then answer a query only within its centroid's
 bucket (equi-join on ``bucket``), cutting the candidate set ~C× per
 probe. Recall/cost trades by probing the p nearest buckets instead of 1.
 
-Three cross-engine-reproducible dot-product forms are used, chosen by
+Two cross-engine-reproducible dot-product forms are used, chosen by
 plan shape:
 
 * **order-deterministic float fold** (``_fold_dot``): a sequential
   ``F.aggregate(zip_with(...))`` over co-located arrays — bit-identical
   to DuckDB's ``list_dot_product`` (same order, same IEEE arithmetic),
   zero shuffle, used for pairwise scoring inside the JVM;
-* **index-order numpy accumulation** in Arrow-batched ``mapInPandas``
-  kernels: one vectorized pass per element position, the same IEEE
-  sequence as the fold — used for centroid scoring
+* **screen + fold** in Arrow-batched ``mapInPandas`` kernels, where one
+  side is a small collected matrix — centroid scoring
   (``nearest_centroids``), PQ encoding (``pq_encode``) and the block
-  cosine audit path, where one side is a small collected matrix;
-* **order-insensitive exact-decimal sums** over ``posexplode`` elements
-  (``_dot``): used when values must survive a grouped aggregation whose
-  partial-merge order Spark does not fix (e.g. SRP projections).
+  cosine audit path (``cosine_near_dup_pairs``): one BLAS matmul screens
+  every candidate, then the same index-order fold, in numpy (``_fold``),
+  scores only the candidates inside a provable tie band, so every output
+  is the fold's value.
+
+Values that must survive a grouped aggregation whose partial-merge order
+Spark does not fix (SRP projections, centroid and codebook means) are
+summed inline as exact decimals instead.
 """
 
 from __future__ import annotations
@@ -35,49 +38,32 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 
-def _flat(df: DataFrame, id_alias: str, vec_alias: str,
-          extra: dict[str, str] | None = None) -> DataFrame:
-    """(id, pos, v) flattened embedding elements as exact doubles."""
-    cols = [F.col("vec_id").alias(id_alias)]
-    for src, dst in (extra or {}).items():
-        cols.append(F.col(src).alias(dst))
-    return df.select(*cols, F.posexplode("embedding").alias("pos", vec_alias))
+def _collect_centroids(centroids: DataFrame) -> tuple:
+    """(cids, C×dim matrix, norms²) sorted by cid — ONE tiny collect.
+    Norms are index-order folds (``_fold``), bit-identical to the JVM
+    ``F.aggregate`` fold that computes the corpus-side norms."""
+    import numpy as np
 
-
-def _dot(df: DataFrame, group_cols: list[str], a: str, b: str, alias: str) -> DataFrame:
-    """Exact (order-insensitive) decimal-sum dot product."""
-    return df.groupBy(*group_cols).agg(
-        F.sum((F.col(a).cast("double") * F.col(b).cast("double")).cast("decimal(28,12)"))
-        .cast("double").alias(alias)
-    )
-
-
-def _collect_centroids(centroids: DataFrame) -> list:
-    """[(cid, [float, ...], nb2)] sorted by cid — ONE tiny collect. Norms
-    are driver-side sequential folds (``_seq_dot``), bit-identical to the
-    JVM ``F.aggregate`` fold that computes the corpus-side norms
-    (cumsum == sequential fold == DuckDB list_dot_product)."""
-    rows = centroids.select("vec_id", "embedding").collect()
-    out = []
-    for r in sorted(rows, key=lambda r: r["vec_id"]):
-        if r["embedding"] is None:
-            raise ValueError(
-                f"centroid vec_id={r['vec_id']} has a NULL embedding")
-        e = [float(x) for x in r["embedding"]]
-        nb2 = _seq_dot(e, e)
-        if nb2 == 0.0:
-            # cosine to a zero vector is undefined for every scored row —
-            # fail loudly and early instead of emitting NaN assignments
-            raise ValueError(
-                f"centroid vec_id={r['vec_id']} has zero norm — cosine "
-                "scoring is undefined; drop or re-seed it")
-        out.append((r["vec_id"], e, nb2))
-    if not out:
+    rows = sorted(centroids.select("vec_id", "embedding").collect(),
+                  key=lambda r: r["vec_id"])
+    if not rows:
         # an empty centroid frame is always a caller bug (the kernel would
         # crash on an empty (0,) centroid matrix) — fail like the
         # zero-norm case: loudly, before any job runs
         raise ValueError("centroids is empty — nothing to score against")
-    return out
+    for r in rows:
+        if r["embedding"] is None:
+            raise ValueError(
+                f"centroid vec_id={r['vec_id']} has a NULL embedding")
+    Cm = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    nb2 = _fold(Cm, Cm)
+    for i in np.nonzero(nb2 == 0.0)[0][:1]:
+        # cosine to a zero vector is undefined for every scored row —
+        # fail loudly and early instead of emitting NaN assignments
+        raise ValueError(
+            f"centroid vec_id={rows[i]['vec_id']} has zero norm — cosine "
+            "scoring is undefined; drop or re-seed it")
+    return np.array([r["vec_id"] for r in rows], dtype=np.int64), Cm, nb2
 
 
 def _round8_spark_repr(x: float) -> float:
@@ -86,14 +72,117 @@ def _round8_spark_repr(x: float) -> float:
     HALF_UP). Python's repr() is the same shortest round-trip decimal,
     so Decimal(repr(x)).quantize(1e-8, HALF_UP) reproduces Spark's
     rounding bit-for-bit (including the repr-tie cases where the exact
-    binary value would round the other way)."""
+    binary value would round the other way). NaN and ±inf pass through,
+    as in Spark, and so does every |x| ≥ 2⁵² (no fractional bits)."""
     from decimal import ROUND_HALF_UP, Decimal
 
+    x = float(x)
+    if not abs(x) < 2.0 ** 52:
+        return x
     return float(Decimal(repr(x)).quantize(Decimal("1e-8"), ROUND_HALF_UP))
 
 
-def nearest_centroids(v: DataFrame, centroids: DataFrame, nprobe: int = 1,
-                      dot_mode: str = "exact") -> DataFrame:
+def _fold(a, b):
+    """Index-order float64 dot product along the last axis,
+    ``((0.0 + a₀b₀) + a₁b₁) + …``: the sequence of the JVM fold
+    (``_fold_dot``) and of DuckDB ``list_dot_product``. ``cumsum`` adds
+    left to right; ``+ 0.0`` turns an all-``-0.0`` sum into ``+0.0``, as
+    the zero-initialised fold does. BLAS (``@``) sums in a blocked order
+    and is not bit-identical, so the kernels use it only as a screen.
+
+    Screen bound: in any summation order a float64 dot of n terms is
+    within γₙ‖a‖‖b‖ of the exact value, γₙ = n·u/(1 − n·u), u = 2⁻⁵³
+    (Higham, *Accuracy and Stability of Numerical Algorithms*, §3.1),
+    plus n·2⁻¹⁰⁷⁵ where products underflow; a BLAS dot and the fold
+    differ by at most twice that. Hence a BLAS cosine is within 4γₙ of
+    the fold's (same divisor, its rounding included) while both norms²
+    lie in [2⁻⁵⁰⁰, 2⁵⁰⁰], and a PQ distance (‖x‖² − 2x·c) + ‖c‖² within
+    8γ_d(‖x‖ + ‖c‖)² + d·2⁻¹⁰⁷⁰ while (‖x‖ + ‖c‖)² ≤ 2¹⁰⁰⁰. Entries
+    outside these ranges, or with a non-finite screen value, are folded
+    outright."""
+    import numpy as np
+
+    return np.cumsum(np.multiply(a, b, dtype=np.float64), axis=-1)[..., -1] + 0.0
+
+
+def _fold_pairs(A, B, i, j):
+    """``_fold(A[i], B[j])`` in slices, so the vectors gathered for a
+    large band stay within 4096·dim doubles per operand."""
+    import numpy as np
+
+    return np.concatenate([np.empty(0)] + [
+        _fold(A[i[k:k + 4096]], B[j[k:k + 4096]]) for k in range(0, len(i), 4096)])
+
+
+def _gamma(n: int) -> float:
+    """γₙ of the ``_fold`` screen bound."""
+    return n * 2.0 ** -53 / (1 - n * 2.0 ** -53)
+
+
+def _cosines(A, na2, B, nb2):
+    """BLAS screen of the cosines between the rows of ``A`` and ``B``
+    (norms² from the fold); NaN where the ``_fold`` bound does not hold."""
+    import numpy as np
+
+    V = A @ B.T
+    V /= np.sqrt(na2[:, None] * nb2[None, :])
+    V[~((na2 >= 2.0 ** -500) & (na2 <= 2.0 ** 500))] = np.nan
+    V[:, ~((nb2 >= 2.0 ** -500) & (nb2 <= 2.0 ** 500))] = np.nan
+    return V
+
+
+def _settle(V, exact, p: int, delta):
+    """The ``p`` best columns of every row of a score matrix by the rule
+    the oracle gates fix: exact scores ranked by ROUND(score, 8) DESC
+    (``_round8_spark_repr``), ties by column ASC, NaN scores last in
+    column order. Returns (cols (n, p), rounded scores (n, p)).
+
+    ``V`` (overwritten) is a screen within ``delta`` (scalar or per row)
+    of the exact score wherever it is finite; ``exact(ii, jj)`` returns
+    exact scores at index arrays. Rounding is monotone, so the rule only
+    rounds exact scores within 2e-8 of the row's p-th best; those lie in
+    the band V ≥ (p-th best V) − 2e-8 − 2·delta, and only the band is
+    folded."""
+    import numpy as np
+
+    n, C = V.shape
+    rows = np.arange(n)
+    wild = ~np.isfinite(V)
+    wi, wj = np.nonzero(wild)
+    V[wi, wj] = exact(wi, wj)
+    nan = np.isnan(V)
+    f = np.minimum(p, C - nan.sum(axis=1))  # columns ranked ahead of NaN
+    top = np.sort(
+        np.partition(np.where(nan, np.inf, -V), p - 1, axis=1)[:, :p], axis=1)
+    kth = -top[rows, np.maximum(f, 1) - 1]
+    ii, jj = np.nonzero(V >= (kth - (2e-8 + 2 * delta))[:, None])
+    E = V[ii, jj]
+    fold = ~wild[ii, jj]
+    E[fold] = exact(ii[fold], jj[fold])
+
+    # the rule on the band: the f-th best exact score, the candidates
+    # within 2e-8 of it ranked on their ROUND-8 values, then NaN columns
+    o = np.lexsort((-E, ii))
+    ii, jj, E = ii[o], jj[o], E[o]
+    kth = np.full(n, np.nan)
+    kth[f > 0] = E[np.searchsorted(ii, rows[f > 0]) + f[f > 0] - 1]
+    c = E >= kth[ii] - 2e-8
+    ni, nj = np.nonzero(nan)
+    ii, jj = np.concatenate([ii[c], ni]), np.concatenate([jj[c], nj])
+    R = np.array([_round8_spark_repr(x) for x in E[c]] + [np.nan] * len(ni))
+    o = np.lexsort((jj, -R, ii))
+    ii, jj, R = ii[o], jj[o], R[o]
+    rank = np.arange(len(ii)) - np.searchsorted(ii, ii)
+    keep = rank < p
+    cols = np.empty((n, p), dtype=np.int64)
+    vals = np.empty((n, p))
+    cols[ii[keep], rank[keep]] = jj[keep]
+    vals[ii[keep], rank[keep]] = R[keep]
+    return cols, vals
+
+
+def nearest_centroids(v: DataFrame, centroids: DataFrame,
+                      nprobe: int = 1) -> DataFrame:
     """Map-side centroid assignment: returns ``v``'s columns plus
     (``__cid`` long, ``__cos`` double) for each of the row's ``nprobe``
     best centroids (cosine DESC, cid ASC; one output row per probe).
@@ -106,27 +195,13 @@ def nearest_centroids(v: DataFrame, centroids: DataFrame, nprobe: int = 1,
     (C=4096, dim=768) score the same way as the oracle gates.
 
     Oracle parity (DuckDB ``ROUND(list_dot_product(..) / SQRT(..), 8)``
-    then ``ORDER BY cos DESC, cid ASC``): dots accumulate in array-INDEX
-    order (one vectorized pass per element position == the sequential
-    JVM fold == DuckDB list_dot_product); ranking runs on RAW doubles
-    first — rounding is monotone, so order can only differ inside a
-    ±1e-8 boundary — and only candidates within 2e-8 of the rank-nprobe
-    raw score are exact-rounded (``_round8_spark_repr``) and re-ranked
-    by (cos DESC, cid ASC), reproducing the round-then-sort total order
-    including tie-breaks.
-
-    ``dot_mode="gemm"`` is the production-throughput variant: one BLAS
-    matmul per chunk instead of dim element-order passes (10.1× the
-    exact mode on the ann_assign scaling cell at local[32]; the element-
-    order accumulation is memory-bandwidth-bound — it materializes an
-    n×C temporary per element). BLAS sums in a different (pairwise/
-    blocked) order, so raw cosines may differ from the fold by ~1
-    ulp·dim; ranking still runs raw-then-exact-rounded inside the same
-    ±2e-8 band, so assignments can diverge from the exact mode only when
-    two centroids' true cosines are within ~1e-15 of each other AND
-    straddle a repr-tie — assert-identical on every test fixture.
-    Default stays "exact": it is the oracle-parity mode; opt into "gemm"
-    for bulk assignment at scale.
+    then ``ORDER BY cos DESC, cid ASC``): one BLAS matmul per chunk
+    screens every centroid; the candidates within a provable band of the
+    rank-nprobe score (``_fold``, ``_settle``) are re-scored by the
+    array-INDEX-order fold (== the sequential JVM fold == DuckDB
+    list_dot_product), exact-rounded (``_round8_spark_repr``) and ranked
+    by (cos DESC, cid ASC) — the round-then-sort total order, tie-breaks
+    included.
 
     Rows with a NULL or zero-norm vector are filtered (cosine is
     undefined for them; NotNullCheck / vector-quality checks own
@@ -137,14 +212,9 @@ def nearest_centroids(v: DataFrame, centroids: DataFrame, nprobe: int = 1,
     import numpy as np
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-    if dot_mode not in ("exact", "gemm"):
-        raise ValueError(f"dot_mode must be 'exact' or 'gemm', got {dot_mode!r}")
     v = v.filter(F.col("ea").isNotNull() & (F.col("na2") > 0))
-    crows = _collect_centroids(centroids)
-    cids = np.array([c[0] for c in crows], dtype=np.int64)  # cid-ascending
-    Cm = np.array([c[1] for c in crows], dtype=np.float64)
-    nb2 = np.array([c[2] for c in crows], dtype=np.float64)
-    p_eff = min(nprobe, len(crows))
+    cids, Cm, nb2 = _collect_centroids(centroids)  # cid-ascending
+    p_eff = min(nprobe, len(cids))
     out_schema = StructType(
         list(v.schema.fields)
         + [StructField("__cid", LongType()), StructField("__cos", DoubleType())]
@@ -152,78 +222,38 @@ def nearest_centroids(v: DataFrame, centroids: DataFrame, nprobe: int = 1,
 
     # cap the chunk's score-matrix footprint at ~2^22 doubles (~32 MB):
     # an Arrow batch of 10k rows × C=4096 would otherwise allocate a
-    # 330 MB accumulator (plus an equal-sized temporary per element
-    # pass) in EVERY concurrent task — the exact OOM shape this kernel
-    # exists to avoid at production C
-    chunk_rows = max(1, (1 << 22) // max(1, len(crows)))
+    # 330 MB screen (plus its temporaries) in EVERY concurrent task —
+    # the exact OOM shape this kernel exists to avoid at production C
+    chunk_rows = max(1, (1 << 22) // len(cids))
 
     def kernel(batches):
         for pdf in batches:
             for lo in range(0, len(pdf), chunk_rows):
                 sub = pdf.iloc[lo:lo + chunk_rows]
-                n = len(sub)
-                if n == 0:
-                    continue
                 A = np.vstack(sub["ea"].to_numpy()).astype(np.float64)
                 na2 = sub["na2"].to_numpy(dtype=np.float64)
-                if dot_mode == "gemm":
-                    acc = A @ Cm.T                 # BLAS order, ~1 ulp·dim
-                else:
-                    acc = np.zeros((n, len(cids)))
-                    for d0 in range(A.shape[1]):  # index order == seq. fold
-                        acc += A[:, d0][:, None] * Cm[:, d0][None, :]
-                cos = acc / np.sqrt(na2[:, None] * nb2[None, :])
-                order = np.argsort(-cos, axis=1, kind="stable")  # ties → cid ASC
-                take_cid = np.empty((n, p_eff), dtype=np.int64)
-                take_cos = np.empty((n, p_eff))
-                for i in range(n):
-                    oi = order[i]
-                    # NaN cosines (NaN vector elements) rank LAST with
-                    # cid-ASC ties: np.argsort places NaN last (stable →
-                    # cid ASC), so the finite head is padded with NaN
-                    # columns in oi order instead of indexing into an
-                    # empty candidate set; the serializer emits NaN as
-                    # NULL.
-                    nan_row = np.isnan(cos[i, oi])
-                    finite = oi[~nan_row]
-                    ranked = []
-                    if len(finite):
-                        f_eff = min(p_eff, len(finite))
-                        kth = cos[i, finite[f_eff - 1]]
-                        cand = finite[cos[i, finite] >= kth - 2e-8]
-                        ranked = sorted(
-                            (-_round8_spark_repr(float(cos[i, j])),
-                             int(cids[j]))
-                            for j in cand
-                        )[:f_eff]
-                    if len(ranked) < p_eff:
-                        ranked += [
-                            (float("nan"), int(cids[j]))
-                            for j in oi[nan_row][: p_eff - len(ranked)]
-                        ]
-                    for p in range(p_eff):
-                        take_cid[i, p] = ranked[p][1]
-                        take_cos[i, p] = -ranked[p][0]
-                out = sub.iloc[np.repeat(np.arange(n), p_eff)].reset_index(drop=True)
-                out["__cid"] = take_cid.reshape(-1)
-                out["__cos"] = take_cos.reshape(-1)
+                cols, cos = _settle(
+                    _cosines(A, na2, Cm, nb2),
+                    lambda i, j: _fold_pairs(A, Cm, i, j) / np.sqrt(na2[i] * nb2[j]),
+                    p_eff, 4 * _gamma(A.shape[1]))
+                out = sub.iloc[np.repeat(np.arange(len(sub)), p_eff)].reset_index(drop=True)
+                out["__cid"] = cids[cols].reshape(-1)
+                out["__cos"] = cos.reshape(-1)  # NaN is emitted as NULL
                 yield out
 
     return v.mapInPandas(kernel, out_schema)
 
 
-def ivf_assign(emb: DataFrame, centroids: DataFrame,
-               dot_mode: str = "exact") -> DataFrame:
+def ivf_assign(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     """(vec_id, bucket, cos_to_centroid): nearest centroid by cosine.
 
     ``centroids``: (vec_id, embedding) — tiny (C rows). Scoring and the
     top-1 pick are both map-side (see ``nearest_centroids``): the corpus
     is never shuffled and never row-multiplied ×C. Ties break on the
     smaller centroid id, matching the oracle's ``ORDER BY cos DESC, cid
-    ASC``. ``dot_mode="gemm"`` opts bulk assignment into the BLAS-matmul
-    variant (throughput mode, not the oracle-parity mode)."""
+    ASC``."""
     v = _with_norm(emb, "a", "ea", "na2")
-    out = nearest_centroids(v, centroids, 1, dot_mode)
+    out = nearest_centroids(v, centroids, 1)
     return out.select(
         F.col("a").alias("vec_id"),
         F.col("__cid").alias("bucket"),
@@ -268,28 +298,21 @@ def _with_norm(emb: DataFrame, id_alias: str, vec_alias: str,
     )
 
 
-def _dot_seq_kernel(ea, eb):
-    """Arrow-batched sequential dot product: float64 ``cumsum`` along the
-    element axis takes the LAST prefix — cumsum is inherently left-to-
-    right, so the result is bit-identical to the interpreted JVM fold and
-    to DuckDB's ``list_dot_product`` (verified pairwise on testdata), at
+def _pair_cosine(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(a, b, ea, eb, na2, nb2) → (a, b, cosine >= threshold). The dot is
+    an Arrow-batched ``_fold`` — bit-identical to the JVM fold at
     vectorized-C speed (~10× the HOF fold on O(n²) pair volumes)."""
     import numpy as np
     import pandas as pd
-
-    if len(ea) == 0:
-        return pd.Series([], dtype="float64")
-    A = np.vstack(ea.to_numpy()).astype(np.float64)
-    B = np.vstack(eb.to_numpy()).astype(np.float64)
-    return pd.Series(np.cumsum(A * B, axis=1)[:, -1])
-
-
-def _pair_cosine(pairs: DataFrame, threshold: float) -> DataFrame:
-    """(a, b, ea, eb, na2, nb2) → (a, b, cosine >= threshold)."""
     from pyspark.sql.functions import pandas_udf
 
-    dot = pandas_udf(_dot_seq_kernel, "double")(F.col("ea"), F.col("eb"))
-    cos = F.round(dot / F.sqrt(F.col("na2") * F.col("nb2")), 8)
+    def dot(ea, eb):
+        if len(ea) == 0:
+            return pd.Series([], dtype="float64")
+        return pd.Series(_fold(np.vstack(ea.to_numpy()), np.vstack(eb.to_numpy())))
+
+    d = pandas_udf(dot, "double")(F.col("ea"), F.col("eb"))
+    cos = F.round(d / F.sqrt(F.col("na2") * F.col("nb2")), 8)
     return (
         pairs.select("a", "b", cos.alias("cosine"))
         .filter(F.col("cosine") >= F.lit(threshold))
@@ -314,24 +337,24 @@ def cosine_near_dup_pairs(emb: DataFrame, threshold: float,
     captured as a numpy matrix in a ``mapInPandas`` closure — the same
     "must fit in one task" memory contract as broadcasting it, which the
     previous crossJoin form already required. Each corpus batch then
-    computes its n_batch × n_B dot-product block in C and returns ONLY
-    the surviving pairs, so the O(n²) pair set never materializes as
-    rows and never crosses Arrow (measured: the old broadcast-crossJoin
-    + per-pair Arrow verify shipped ~2 GB of vector pairs at n=2000 and
-    cost 4-7s; the block kernel is <1s). Map-only: no shuffle, no
-    explode. O(n²·d) compute: the audit path for rerank sets /
-    per-bucket candidates, never the raw corpus. The corpus-scale path
-    is :func:`cosine_near_dup_lsh`, which feeds ONLY its LSH candidate
-    pairs through the same fold semantics, so its output is a subset of
-    this one (precision 1.0 by construction).
+    screens its dot-product block against the rerank side in row chunks
+    of at most 2^22 scores and returns ONLY the surviving pairs, so the
+    O(n²) pair set never materializes as rows and never crosses Arrow
+    (measured: the old broadcast-crossJoin + per-pair Arrow verify
+    shipped ~2 GB of vector pairs at n=2000 and cost 4-7s; the block
+    kernel is <1s). Map-only: no shuffle, no explode. O(n²·d) compute:
+    the audit path for rerank sets / per-bucket candidates, never the raw
+    corpus. The corpus-scale path is :func:`cosine_near_dup_lsh`, which
+    feeds ONLY its LSH candidate pairs through the same fold semantics,
+    so its output is a subset of this one (precision 1.0 by construction).
 
-    Value parity: the block accumulates in array-index order (one
-    vectorized pass per element position), so every pair's dot is the
-    IEEE-754 sequence ((0+x₀)+x₁)+… — bit-identical to ``_fold_dot``,
-    ``_dot_seq_kernel`` and DuckDB's ``list_dot_product``. The final
-    cosine (divide, sqrt, ROUND 8) is computed JVM-side from the raw
-    dot exactly as before; the kernel pre-filters with a 1e-7 margin so
-    half-up rounding can never drop a qualifying pair."""
+    Value parity: a BLAS matmul screens the block with the bound of
+    ``_fold``; every pair it cannot rule out is re-scored by the
+    index-order fold, so each emitted dot is the IEEE-754 sequence
+    ((0+x₀)+x₁)+… — bit-identical to ``_fold_dot`` and DuckDB's
+    ``list_dot_product``. The final cosine (divide, sqrt, ROUND 8) is
+    computed JVM-side from that dot; the kernel pre-filters with a 1e-7
+    margin so half-up rounding can never drop a qualifying pair."""
     import numpy as np
 
     b_rows = _with_norm(emb, "b", "eb", "nb2").limit(
@@ -348,26 +371,27 @@ def cosine_near_dup_pairs(emb: DataFrame, threshold: float,
     Bm = np.array([r["eb"] for r in b_rows], dtype=np.float64)
     nb2 = np.array([r["nb2"] for r in b_rows], dtype=np.float64)
     a = _with_norm(emb, "a", "ea", "na2")
+    chunk_rows = max(1, (1 << 22) // max(1, len(bid)))  # as nearest_centroids
 
     def blocks(batches):
         import pandas as pd
 
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            A = np.vstack(pdf["ea"].to_numpy()).astype(np.float64)
-            na2 = pdf["na2"].to_numpy(dtype=np.float64)
-            aid = pdf["a"].to_numpy(dtype=np.int64)
-            acc = np.zeros((A.shape[0], Bm.shape[0]))
-            for d0 in range(A.shape[1]):  # index order == sequential fold
-                acc += A[:, d0][:, None] * Bm[:, d0][None, :]
-            keep = (acc / np.sqrt(na2[:, None] * nb2[None, :])) >= (threshold - 1e-7)
-            keep &= aid[:, None] < bid[None, :]
-            ii, jj = np.nonzero(keep)
-            yield pd.DataFrame({
-                "a": aid[ii], "b": bid[jj], "dot": acc[ii, jj],
-                "na2": na2[ii], "nb2": nb2[jj],
-            })
+            for lo in range(0, len(pdf), chunk_rows):
+                sub = pdf.iloc[lo:lo + chunk_rows]
+                A = np.vstack(sub["ea"].to_numpy()).astype(np.float64)
+                na2 = sub["na2"].to_numpy(dtype=np.float64)
+                aid = sub["a"].to_numpy(dtype=np.int64)
+                V = _cosines(A, na2, Bm, nb2)
+                screen = threshold - 1e-7 - 4 * _gamma(A.shape[1])
+                ii, jj = np.nonzero(~(V < screen) & (aid[:, None] < bid[None, :]))
+                dot = _fold_pairs(A, Bm, ii, jj)
+                keep = dot / np.sqrt(na2[ii] * nb2[jj]) >= threshold - 1e-7
+                ii, jj = ii[keep], jj[keep]
+                yield pd.DataFrame({
+                    "a": aid[ii], "b": bid[jj], "dot": dot[keep],
+                    "na2": na2[ii], "nb2": nb2[jj],
+                })
 
     out = a.mapInPandas(blocks, "a long, b long, dot double, na2 double, nb2 double")
     cos = F.round(F.col("dot") / F.sqrt(F.col("na2") * F.col("nb2")), 8)
@@ -401,7 +425,7 @@ def rp_band_signatures(emb: DataFrame, planes: DataFrame,
     per bit is 1 − θ/π (θ = angle), so banding tunes recall exactly like
     MinHash LSH. One narrow shuffle of (vec_id, bit) partial sums — the
     embedding column itself never re-shuffles."""
-    f = _flat(emb, "vec_id", "v")
+    f = emb.select("vec_id", F.posexplode("embedding").alias("pos", "v"))
     proj = (
         f.join(F.broadcast(planes), "pos")
         .groupBy("vec_id", "bit")
@@ -445,16 +469,14 @@ def cosine_near_dup_lsh(emb: DataFrame, spark, threshold: float,
 
 
 def ivf_probe_buckets(emb: DataFrame, centroids: DataFrame,
-                      nprobe: int,
-                      dot_mode: str = "exact") -> DataFrame:
+                      nprobe: int) -> DataFrame:
     """(vec_id, bucket) — each vector's ``nprobe`` nearest centroid
     buckets (probe list). nprobe=1 degenerates to ivf_assign's bucket.
 
     Map-side like ``ivf_assign``: a narrow ≤nprobe-row fan-out per
-    vector, not a shuffle of n×C scored pairs; BLAS variant via
-    ``dot_mode="gemm"``."""
+    vector, not a shuffle of n×C scored pairs."""
     v = _with_norm(emb, "a", "ea", "na2")
-    out = nearest_centroids(v, centroids, nprobe, dot_mode)
+    out = nearest_centroids(v, centroids, nprobe)
     return out.select(
         F.col("a").alias("vec_id"), F.col("__cid").alias("bucket")
     )
@@ -692,17 +714,6 @@ def dequantize_expr() -> "F.Column":
     return F.transform(F.col("qvec"), lambda x: x.cast("double") * F.col("scale"))
 
 
-def _seq_dot(a, b) -> float:
-    """Driver-side sequential float64 dot product: ``cumsum`` is left-to-
-    right, so the value is bit-identical to the JVM ``F.aggregate`` fold
-    and to DuckDB ``list_dot_product`` (np.dot's pairwise/SIMD order is
-    NOT)."""
-    import numpy as np
-
-    prod = np.asarray(a, dtype=np.float64) * np.asarray(b, dtype=np.float64)
-    return float(np.cumsum(prod)[-1])
-
-
 def pq_codebooks(emb: DataFrame, m: int, n_codes: int = 8) -> list:
     """``[m][n_codes][d]`` product-quantization codebooks: the vectors
     with ``vec_id < n_codes`` (code c == vec_id c), sliced per subspace —
@@ -728,6 +739,24 @@ def pq_codebooks(emb: DataFrame, m: int, n_codes: int = 8) -> list:
     ]
 
 
+def _pq_nearest(X, Cb, cc):
+    """(code, ROUND-8 dist²) of the L2-nearest row of the codebook ``Cb``
+    (norms² ``cc``) for every row of ``X``: ``_settle`` over −dist²."""
+    import numpy as np
+
+    xx, d = _fold(X, X), X.shape[1]
+    tame = cc <= 2.0 ** 500
+    reach = (np.sqrt(xx) + np.sqrt(cc[tame].max(initial=0.0))) ** 2
+    V = -((xx[:, None] - 2.0 * (X @ Cb.T)) + cc[None, :])
+    V[:, ~tame] = np.nan
+    V[~(reach <= 2.0 ** 1000)] = np.nan  # folded outright
+    delta = 8 * _gamma(d) * np.fmin(reach, 2.0 ** 1000) + d * 2.0 ** -1070
+    cols, vals = _settle(
+        V, lambda i, j: -((xx[i] - 2.0 * _fold_pairs(X, Cb, i, j)) + cc[j]),
+        1, delta)
+    return cols[:, 0], -vals[:, 0]
+
+
 def pq_encode(emb: DataFrame, m: int = 8, n_codes: int = 8,
               codebooks: list | None = None) -> DataFrame:
     """Product-quantization encoding: (vec_id, codes array<int>,
@@ -745,16 +774,16 @@ def pq_encode(emb: DataFrame, m: int = 8, n_codes: int = 8,
     Plan shape: MAP-ONLY, one Arrow-batched ``mapInPandas``; the m×K×d
     codebook floats ride the kernel closure, so the plan does not grow
     with K (production K=256 at dim 768 scores the same way).
-    Cross-engine exactness: dist² = ROUND(xx − 2·xc + cc, 8) where xx
-    is the float64 cumsum fold over the subvector slice and xc
-    accumulates in element-index order (both bit-identical to DuckDB
-    ``list_dot_product`` on the same slice), cc is the driver-side
-    sequential fold of the codebook entry (``_seq_dot``), and d2 keeps
-    the oracle expression's association order. The argmin runs on RAW
-    d2 (np.argmin → first index = code ASC on exact ties); only
-    candidates within 2e-8 of the raw best are exact-rounded
-    (``_round8_spark_repr``) and re-ranked by (d2 ASC, code ASC).
-    Rows with a NULL embedding are filtered (unencodable)."""
+    Cross-engine exactness: dist² = ROUND(xx − 2·xc + cc, 8) where xx,
+    xc and cc are index-order folds (``_fold``, bit-identical to DuckDB
+    ``list_dot_product`` on the same slices) and d2 keeps the oracle
+    expression's association order. Per subspace one BLAS matmul screens
+    every code; only the codes within a provable band of the best
+    (``_settle``) get the exact xc, and those within 2e-8 of the exact
+    best are exact-rounded (``_round8_spark_repr``) and ranked by (d2
+    ASC, code ASC). NaN distances rank last; an all-NaN subspace gives
+    (code 0, NULL). Rows with a NULL embedding are filtered
+    (unencodable)."""
     import numpy as np
     from pyspark.sql.types import (
         ArrayType, DoubleType, IntegerType, StructField, StructType,
@@ -772,9 +801,7 @@ def pq_encode(emb: DataFrame, m: int = 8, n_codes: int = 8,
         codebooks = pq_codebooks(emb, m, n_codes)
     emb = emb.filter(F.col("embedding").isNotNull())
     Cbs = np.array(codebooks, dtype=np.float64)          # [m, K, d]
-    ccs = np.array([[_seq_dot(cv, cv) for cv in codebooks[s]]
-                    for s in range(m)], dtype=np.float64)  # [m, K]
-    K = Cbs.shape[1]
+    ccs = _fold(Cbs, Cbs)                                # [m, K]
     out_schema = StructType(
         list(emb.schema.fields)
         + [StructField("codes", ArrayType(IntegerType())),
@@ -790,35 +817,11 @@ def pq_encode(emb: DataFrame, m: int = 8, n_codes: int = 8,
             codes = np.empty((n, m), dtype=np.int32)
             d2s = np.empty((n, m))
             for s in range(m):
-                Xs = A[:, s * d:(s + 1) * d]
-                xx = np.cumsum(Xs * Xs, axis=1)[:, -1]  # == _fold_dot(slice)
-                xc = np.zeros((n, K))
-                for d0 in range(d):  # index order == sequential fold
-                    xc += Xs[:, d0][:, None] * Cbs[s][:, d0][None, :]
-                d2 = (xx[:, None] - 2.0 * xc) + ccs[s][None, :]
-                for i in range(n):
-                    # NaN distances (NaN vector elements) rank LAST;
-                    # np.argmin would return the first NaN index
-                    # instead. Rank among finite codes; an all-NaN
-                    # subspace degrades to (code 0, NaN) — all ties,
-                    # code ASC — and the serializer emits NaN as NULL.
-                    row = d2[i]
-                    fin = np.nonzero(~np.isnan(row))[0]
-                    if len(fin) == 0:
-                        d2s[i, s] = float("nan")
-                        codes[i, s] = 0
-                        continue
-                    best_raw = row[fin[np.argmin(row[fin])]]
-                    cand = fin[row[fin] <= best_raw + 2e-8]
-                    r8, code = min(
-                        (_round8_spark_repr(float(row[j])), int(j))
-                        for j in cand
-                    )
-                    d2s[i, s] = r8
-                    codes[i, s] = code
+                codes[:, s], d2s[:, s] = _pq_nearest(
+                    A[:, s * d:(s + 1) * d], Cbs[s], ccs[s])
             out = pdf.copy()
             out["codes"] = list(codes)
-            out["dist2s"] = list(d2s)
+            out["dist2s"] = list(d2s)  # NaN is emitted as NULL
             yield out
 
     return emb.mapInPandas(kernel, out_schema)
@@ -913,7 +916,7 @@ def pq_adc_topk(emb: DataFrame, query_id: int, k: int = 10, m: int = 8,
     code column (never the float vectors), the m×K LUT is computed once
     per query and inlined, scoring is a pure projection, and the only
     non-map stage is the global top-k. Cross-engine exactness: LUT
-    entries are sequential folds (``_seq_dot`` == DuckDB
+    entries are index-order folds (``_fold`` == DuckDB
     ``list_dot_product``); each looked-up term is ROUND(·, 8) then
     summed as exact DECIMAL(20,8) — order-insensitive, so engines agree
     bit-for-bit."""
@@ -944,7 +947,7 @@ def _adc_score(q: list, codebooks: list, m: int):
     score = None
     for s in range(m):
         lut = F.array(*[
-            F.lit(_seq_dot(q[s * d:(s + 1) * d], code_vec))
+            F.lit(float(_fold(q[s * d:(s + 1) * d], code_vec)))
             for code_vec in codebooks[s]
         ])
         term = F.round(
@@ -957,24 +960,16 @@ def _adc_score(q: list, codebooks: list, m: int):
 def _probe_ids(centroids: DataFrame, q: list, n_probe: int) -> list[int]:
     """The query's ``n_probe`` nearest centroid ids by cosine (DESC, id
     ASC ties), computed driver-side over the ≤C collected centroids with
-    the SAME rounding as the engine expressions: Decimal(v) quantized
-    HALF_UP at 8dp is the exact-binary-value round that Spark's
-    BigDecimal(double).setScale(8, HALF_UP) and DuckDB ROUND apply, so
-    every engine reproduces the probe set."""
-    import math
-    from decimal import ROUND_HALF_UP, Decimal
+    the SAME arithmetic as the engine expressions: index-order folds
+    (``_fold``) and Spark's ROUND(x, 8) (``_round8_spark_repr``: HALF_UP
+    on the shortest decimal repr, as DuckDB ROUND also rounds), so every
+    engine reproduces the probe set."""
+    import numpy as np
 
-    qq = _seq_dot(q, q)
-
-    def r8(v: float) -> float:
-        return float(Decimal(v).quantize(Decimal("1e-8"), ROUND_HALF_UP))
-
-    ranked = []
-    for r in sorted(centroids.collect(), key=lambda r: r["vec_id"]):
-        c = [float(x) for x in r["embedding"]]
-        cos = r8(_seq_dot(q, c) / math.sqrt(qq * _seq_dot(c, c)))
-        ranked.append((-cos, int(r["vec_id"])))
-    return [cid for _, cid in sorted(ranked)[:n_probe]]
+    cids, Cm, nb2 = _collect_centroids(centroids)
+    cos = _fold(q, Cm) / np.sqrt(_fold(q, q) * nb2)
+    ranked = sorted((-_round8_spark_repr(c), int(i)) for c, i in zip(cos, cids))
+    return [cid for _, cid in ranked[:n_probe]]
 
 
 def write_ivf_layout(emb: DataFrame, centroids: DataFrame, path: str,

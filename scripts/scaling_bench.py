@@ -90,19 +90,15 @@ def run():
 # through the Arrow-batched broadcast-numpy scorer (the one centroid
 # scoring path, at production-ANN size) — map-only Python compute, the
 # closest analog to the decode cell but with a dense O(C*dim) per-row
-# kernel. The _gemm variant runs the same job with
-# dot_mode="gemm" (one BLAS matmul per chunk instead of dim element-
-# order passes — the bulk-throughput mode).
+# kernel.
 _ANN_BODY = r"""
 from anomalydetection_spark.functions.similarity import ivf_assign
 df = spark.read.parquet({ann!r})
 rows = df.count()
 centroids = df.filter(F.col("vec_id") < 4096).select("vec_id", "embedding")
-mode = "gemm" if workload.endswith("_gemm") else "exact"
 def run():
     t0 = time.perf_counter()
-    ivf_assign(df, centroids, dot_mode=mode) \
-        .write.format("noop").mode("overwrite").save()
+    ivf_assign(df, centroids).write.format("noop").mode("overwrite").save()
     return time.perf_counter() - t0
 """
 
@@ -140,7 +136,6 @@ def run():
     return time.perf_counter() - t0
 """,
     "ann_assign": _ANN_BODY,
-    "ann_assign_gemm": _ANN_BODY,
     "scan": r"""
 df = spark.read.parquet({meta!r})
 rows = df.count()
@@ -177,7 +172,7 @@ def cell_script(w: str) -> str:
     return CELL_PREAMBLE + CELL_BODIES[w] + CELL_FOOTER
 
 WORKLOADS = ("cpu", "scan", "suite_audit", "suite_profile", "decode",
-             "kernel_ts", "ann_assign", "ann_assign_gemm")
+             "kernel_ts", "ann_assign")
 
 # Source files whose content defines each workload's measured code path
 # (dirs expand to every .py under them). The workload's OWN cell script
@@ -199,7 +194,6 @@ WORKLOAD_SOURCES = {
                "anomalydetection_spark/functions/image_ops.py"],
     "kernel_ts": ["anomalydetection_spark/kernels/timeseries.py"],
     "ann_assign": ["anomalydetection_spark/functions/similarity.py"],
-    "ann_assign_gemm": ["anomalydetection_spark/functions/similarity.py"],
 }
 
 
@@ -307,7 +301,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     ensure(spark, paths["meta"], args.meta_rows, False)
     ensure(spark, paths["pay"], args.payload_rows, True)
-    if any(w.startswith("ann_assign") for w in args.workloads):
+    if "ann_assign" in args.workloads:
         ensure_ann(spark, paths["ann"], args.ann_rows)
     if args.weak:
         big_rows = args.meta_rows * 4
@@ -476,9 +470,6 @@ TITLES = {
                  "explicitly-repartitioned vectorized Python scoring)",
     "ann_assign": "Large-C IVF assignment (C=4096 × dim 256 — the "
                   "Arrow broadcast-numpy scorer)",
-    "ann_assign_gemm": "Large-C IVF assignment, dot_mode=\"gemm\" (same "
-                       "job, one BLAS matmul per chunk — the bulk-"
-                       "throughput mode)",
 }
 
 
@@ -667,40 +658,14 @@ def write_markdown(result: dict, cpus: list[int], pairs: list) -> None:
             f"(C=4096 × dim 256): {eff('ann_assign', lo0, hi0):.2f} at"
             f" {lo0}→{hi0} (ideal — per-task numpy compute with zero",
             f"coordination) and {eff('ann_assign', lo1, hi1):.2f} at"
-            f" {lo1}→{hi1}, tracking the scan control"
-            f" ({eff('scan', lo1, hi1):.2f}): the kernel accumulates the",
-            "score matrix in element-index order (the bit-parity contract",
-            "with the JVM fold), a memory-bandwidth-bound access pattern,",
-            "and one box shares its bus across all 32 cores. Per-executor",
-            "buses on a real cluster remove exactly that cap; the map-only",
-            "plan shape (no Exchange, centroids ride the closure) has no",
-            "other scaling term.",
+            f" {lo1}→{hi1} (scan control {eff('scan', lo1, hi1):.2f}).",
+            "Per chunk one BLAS matmul screens every centroid and only the",
+            "rank-boundary band is re-scored by the index-order fold (the",
+            "bit-parity contract with the JVM fold), so the matmul is the",
+            "kernel's cost; the map-only plan shape (no Exchange, centroids",
+            "ride the closure) has no other scaling term.",
             "",
         ]
-        if "ann_assign_gemm" in ws:
-            g = ws["ann_assign_gemm"]
-            x = ws["ann_assign"]
-            top = result["cpus"][-1]
-            ratio = x[f"sec_local{top}"] / g[f"sec_local{top}"]
-            lines += [
-                f"`dot_mode=\"gemm\"` (the bulk-throughput variant — one"
-                " BLAS matmul",
-                "per chunk, assignments test-identical to the exact arm)"
-                " runs the",
-                f"same job {ratio:.1f}× faster at local[{top}]"
-                f" ({g[f'rows_per_sec_local{top}']:,.0f} vs"
-                f" {x[f'rows_per_sec_local{top}']:,.0f} rows/s), with"
-                f" {eff('ann_assign_gemm', lo0, hi0):.2f} /"
-                f" {eff('ann_assign_gemm', lo1, hi1):.2f} efficiency at"
-                f" the two pairs (the {g[f'sec_local{top}']:.1f}s"
-                f" top-pair wall sits on the ~1-2s fixed job-submission"
-                " floor every cell carries, so that pair reads as"
-                " overhead, not kernel scaling — size the input up when"
-                " gemm throughput itself is the question): use gemm for"
-                " bulk assignment, the exact arm when oracle",
-                "parity must hold bit-for-bit.",
-                "",
-            ]
     if not weak:
         lines += [
             "Separately measured large-input regime (128M rows, audit mode):",

@@ -170,6 +170,25 @@ def test_extra_jobs_take_row_totals_from_the_fused_pass(spark, images_path):
     assert dup["duplicate_row_rate"] == 0.0 and dup["duplicate_key_count"] == 0.0
 
 
+def test_empty_partitioned_input_is_scanned_once(spark, tmp_path):
+    """On an empty input the fused rollup returns no row, not even the
+    grand total; the global row then comes from an aggregate over
+    ``limit(0)``, which Catalyst plans as an empty local relation, so
+    the input is scanned once. Verdicts equal the unpartitioned
+    suite's."""
+    path = str(tmp_path / "empty")
+    spark.createDataFrame([], "w long, fmt string").write.parquet(path)
+    empty = spark.read.parquet(path)
+
+    def verdicts(suite):
+        return sorted(str(tuple(r)) for r in suite.run(empty, spark).verdicts.collect())
+
+    suite = ValidationSuite([RangeCheck("w", 0, 10)], partition_by=["fmt"])
+    plans = executed_plans(spark, lambda: suite.run(empty, spark))
+    assert len([p for p in plans if "Scan parquet" in p]) == 1, plans
+    assert verdicts(suite) == verdicts(ValidationSuite([RangeCheck("w", 0, 10)]))
+
+
 def test_referential_uses_broadcast_join(spark, images_path):
     df = spark.read.parquet(images_path)
     dim = spark.createDataFrame([("jpeg",), ("png",), ("webp",)], "fmt string")

@@ -775,50 +775,6 @@ def test_centroid_scorer_matches_duckdb_oracle(spark):
         assert got_p == want_p and len(want_p) == nprobe * len(want)
 
 
-def test_gemm_dot_mode_matches_exact_arm(spark):
-    """dot_mode="gemm" (the BLAS-matmul throughput variant of the Arrow
-    scorer) must produce the SAME assignments and probe lists as the
-    exact element-order arm, and cosines within the ~1 ulp·dim BLAS
-    reordering bound. Assignments only diverge when two true cosines
-    sit within ~1e-15 AND straddle a repr-tie — never on real data;
-    this fixture asserts exact equality."""
-    from anomalydetection_spark.functions.similarity import (
-        ivf_assign,
-        ivf_probe_buckets,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    centroids = emb.filter(F.col("vec_id") < 8).select("vec_id", "embedding")
-
-    exact = {r["vec_id"]: (r["bucket"], r["cos_to_centroid"])
-             for r in ivf_assign(emb, centroids).collect()}
-    gemm = {r["vec_id"]: (r["bucket"], r["cos_to_centroid"])
-            for r in ivf_assign(emb, centroids, dot_mode="gemm").collect()}
-    assert len(gemm) == len(exact) > 0
-    for vid, (bkt, cos) in exact.items():
-        gbkt, gcos = gemm[vid]
-        assert gbkt == bkt
-        # both arms ROUND-8 the raw cosine; the BLAS reorder can flip
-        # the 8th decimal only on a repr-tie boundary (~1e-7/value odds)
-        assert gcos == pytest.approx(cos, abs=2e-8)
-
-    pexact = {(r["vec_id"], r["bucket"])
-              for r in ivf_probe_buckets(emb, centroids, 2).collect()}
-    pgemm = {(r["vec_id"], r["bucket"])
-             for r in ivf_probe_buckets(emb, centroids, 2,
-                                        dot_mode="gemm").collect()}
-    assert pgemm == pexact and len(pexact) > 0
-
-    with pytest.raises(ValueError, match="dot_mode"):
-        ivf_assign(emb, centroids, dot_mode="fast").collect()
-
-    # empty centroids must fail loudly in both dot modes, before any job
-    none = centroids.filter(F.col("vec_id") < 0)
-    for kw in ({}, {"dot_mode": "gemm"}):
-        with pytest.raises(ValueError, match="empty"):
-            ivf_assign(emb, none, **kw)
-
-
 def test_centroid_scorer_exact_ties_and_round_boundary(spark):
     """Tie semantics on ADVERSARIAL inputs: duplicate centroids
     (raw-equal cosines → cid ASC must win) and centroids whose cosines
@@ -865,6 +821,10 @@ def test_centroid_scorer_exact_ties_and_round_boundary(spark):
         (2, 2), (3, 0), (3, 1), (3, 3), (10, 0), (10, 1), (10, 2),
         (11, 0), (11, 1), (11, 2), (12, 0), (12, 1), (12, 3),
     ]
+
+    # an empty centroid frame fails loudly at plan time
+    with pytest.raises(ValueError, match="empty"):
+        ivf_assign(emb, centroids.filter(F.col("vec_id") < 0))
 
 
 def test_centroid_scorer_degenerate_inputs(spark):
@@ -925,6 +885,134 @@ def test_centroid_scorer_degenerate_inputs(spark):
         1: ([1, 1], [0.0, 0.0]),
         2: ([0, 0], [1.0, None]),   # NaN subspace: code 0, dist² NULL
     }
+
+
+def _adversarial_frames(rng, n=120, c=16, dim=12):
+    """(kind, rows) over which the scoring kernels must match the
+    element-order reference bit for bit; rows with ``vec_id < c`` are
+    the centroids and the PQ codebook entries."""
+    import numpy as np
+
+    x = rng.normal(size=(n, dim))
+    dups = x.copy()
+    dups[1] = dups[0]
+    dups[2] = dups[0] * 2
+    dups[c + 1] = dups[0]
+    near = x.copy()
+    near[1] = near[0] + 1e-10
+    near[2] = near[0] - 1e-10
+    near[c] = near[0]
+    small = rng.integers(-2, 3, size=(n, dim)).astype(float)
+    small[:c][~small[:c].any(axis=1), 0] = 1.0   # no zero-norm centroid
+    nan = x.copy()
+    nan[3, 5] = nan[c, 0] = nan[c + 2, 11] = np.nan
+    huge = x.copy()
+    huge[1] *= 1e200
+    huge[4, 2] = -1e200
+    huge[c] *= 1e200
+    huge[c + 1, 0] = 1e200
+    for kind, m in (("random", x), ("duplicates", dups), ("near_ties", near),
+                    ("small_int", small), ("nan", nan), ("near_1e200", huge)):
+        yield kind, m, [(i, [float(v) for v in row]) for i, row in enumerate(m)]
+
+
+@pytest.mark.filterwarnings("ignore::RuntimeWarning")  # overflow near 1e200
+def test_centroid_and_pq_kernels_match_element_order_reference(spark):
+    """The BLAS-screened kernels settle every rank by the index-order
+    fold: on adversarial inputs (duplicate centroids, near-ties 1e-10
+    apart, small-integer vectors with raw-equal cosines, NaN elements in
+    vectors and centroids, elements near 1e200) ``ivf_assign``,
+    ``ivf_probe_buckets`` and ``pq_encode`` equal the element-order
+    reference (``tests/ann_reference.py``) bit for bit."""
+    import struct
+
+    import numpy as np
+    from ann_reference import centroid_probes, norm2, pq_codes
+
+    from anomalydetection_spark.functions.similarity import (
+        ivf_assign,
+        ivf_probe_buckets,
+        pq_encode,
+    )
+
+    def bits(x):  # NaN is emitted as NULL
+        return None if x is None or np.isnan(x) else struct.pack(">d", x)
+
+    c, m, nprobe = 16, 3, 3
+    for kind, x, rows in _adversarial_frames(np.random.default_rng(7), c=c):
+        emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        centroids = emb.filter(F.col("vec_id") < c)
+        na2 = norm2(x)
+        scored = np.nonzero((na2 > 0) | np.isnan(na2))[0]  # Spark: NaN > 0
+        ref = centroid_probes(x[scored], x[:c], nprobe)
+
+        got = {r["vec_id"]: (r["bucket"], bits(r["cos_to_centroid"]))
+               for r in ivf_assign(emb, centroids).collect()}
+        assert got == {int(v): (p[0][0], bits(p[0][1]))
+                       for v, p in zip(scored, ref)}, kind
+        got_p = sorted((r["vec_id"], r["bucket"]) for r in
+                       ivf_probe_buckets(emb, centroids, nprobe).collect())
+        assert got_p == sorted((int(v), j) for v, p in zip(scored, ref)
+                               for j, _ in p), kind
+
+        books = np.stack([x[:c, s * 4:(s + 1) * 4] for s in range(m)])
+        codes, d2s = pq_codes(x, books)
+        got = {r["vec_id"]: (list(r["codes"]), [bits(v) for v in r["dist2s"]])
+               for r in pq_encode(emb, m=m, n_codes=c).collect()}
+        assert got == {i: (list(codes[i]), [bits(v) for v in d2s[i]])
+                       for i in range(len(x))}, kind
+
+
+def test_probe_ids_round_like_spark_on_repr_ties(spark):
+    """Driver-side probe selection rounds as Spark's and DuckDB's
+    ROUND(x, 8) do, on the shortest decimal repr: 0.123456785 rounds up
+    to 0.12345679 (its exact binary value lies below the tie), so it
+    ties centroid 1's 0.12345679 and the lower id is probed."""
+    import math
+
+    from anomalydetection_spark.functions.similarity import _probe_ids
+
+    def unit(x):  # [x, y] whose index-order norm is exactly 1.0: cos = x
+        y = math.sqrt(1 - x * x)
+        while math.sqrt((0.0 + x * x) + y * y) != 1.0:
+            y = math.nextafter(y, 0.0 if (0.0 + x * x) + y * y > 1.0 else 1.0)
+        return [x, y]
+
+    centroids = spark.createDataFrame(
+        [(0, unit(0.123456785)), (1, unit(0.12345679)), (2, unit(0.1))],
+        "vec_id long, embedding array<double>")
+    assert _probe_ids(centroids, [1.0, 0.0], 1) == [0]
+    assert _probe_ids(centroids, [1.0, 0.0], 3) == [0, 1, 2]
+
+
+def test_cosine_pairs_chunked_block_matches_numpy_reference(spark):
+    """An Arrow batch larger than one 2^22-score chunk (2,100 rows
+    against a 2,100-row rerank side) returns exactly the pairs of the
+    unchunked element-order reference: a < b, Spark's ROUND(cos, 8) at
+    or above the threshold."""
+    import numpy as np
+    from ann_reference import element_order_dots, norm2, spark_round8
+
+    from anomalydetection_spark.functions.similarity import cosine_near_dup_pairs
+
+    rng = np.random.default_rng(3)
+    n, thr = 2100, 0.97
+    base = rng.normal(size=(300, 8))
+    x = base[rng.integers(0, 300, size=n)] + rng.normal(size=(n, 8)) * 0.05
+    emb = spark.createDataFrame(
+        [(i, [float(v) for v in row]) for i, row in enumerate(x)],
+        "vec_id long, embedding array<double>").coalesce(1)
+    got = {(r["a"], r["b"]): r["cosine"]
+           for r in cosine_near_dup_pairs(emb, thr).collect()}
+
+    nx = norm2(x)
+    cos = element_order_dots(x, x) / np.sqrt(nx[:, None] * nx[None, :])
+    want = {}
+    for a, b in zip(*np.nonzero(np.triu(cos >= thr - 1e-7, 1))):
+        r = spark_round8(cos[a, b])
+        if r >= thr:
+            want[(int(a), int(b))] = r
+    assert got == want and len(want) > n
 
 
 def test_lang_id_accepts_externally_trained_profiles(spark):
