@@ -463,21 +463,20 @@ class CheckpointedRunner:
             # to exactly the resumed dirs), not a driver loop of one
             # tiny Spark job per unit: a 512-bucket full resume would
             # otherwise pay 512 sequential plan+schedule round-trips
-            # before rendering anything (review r05)
-            try:
-                vdf = (
-                    spark.read.parquet(os.path.join(self.out_dir, "verdicts"))
-                    .filter(F.col("unit").isin(resumed_units))
-                    .select("unit", "partition", "check", "passed")
-                )
-                for v in vdf.collect():
-                    scorecard_rows.append({
-                        "row_key": v["unit"] + (f"/{v['partition']}"
-                                                if v["partition"] else ""),
-                        "check": v["check"], "passed": bool(v["passed"]),
-                    })
-            except Exception:
-                pass  # scorecard is best-effort for resumed units
+            # before rendering anything (review r05). A resumed unit's
+            # verdicts were committed, so a failed read here is a fault
+            # of the output directory and raises, never a short scorecard.
+            vdf = (
+                spark.read.parquet(os.path.join(self.out_dir, "verdicts"))
+                .filter(F.col("unit").isin(resumed_units))
+                .select("unit", "partition", "check", "passed")
+            )
+            for v in vdf.collect():
+                scorecard_rows.append({
+                    "row_key": v["unit"] + (f"/{v['partition']}"
+                                            if v["partition"] else ""),
+                    "check": v["check"], "passed": bool(v["passed"]),
+                })
         if lineage_rows:
             local_frame(
                 spark,

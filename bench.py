@@ -11,11 +11,16 @@ Runs, on ``local[$SPARK_GRAFT_CPUS]``:
      ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1).
 
 Each query is forced with a ``noop``-format write (full execution, no
-driver collect skew). Prints ONE JSON line:
+driver collect skew). The full per-gate breakdown is written to
+$SPARK_GRAFT_BENCH_JSON (default BENCH/bench_r06_local.json):
 
   {"metric": "total_bench_sec", "value": N, "unit": "sec",
    "queries": {...per-query sec...}, "sf": ...,
    "image_suite": {...rows/sec details...}}
+
+and stdout ends with ONE JSON line under 2,000 characters (``summary``):
+the headline total, the gate count, the image-suite legs and the 5
+slowest gates.
 
 The synthetic input is materialized to parquet once (under
 $SPARK_GRAFT_BENCH_DIR, default /tmp/adspark_bench) and reused, so suite
@@ -31,11 +36,15 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 BENCH_IMAGE_ROWS = int(os.environ.get("SPARK_GRAFT_IMAGE_ROWS", "2000000"))
 BENCH_PAYLOAD_ROWS = int(os.environ.get("SPARK_GRAFT_PAYLOAD_ROWS", "60000"))
 BENCH_DIR = os.environ.get("SPARK_GRAFT_BENCH_DIR", "/tmp/adspark_bench")
+DETAIL_PATH = os.environ.get(
+    "SPARK_GRAFT_BENCH_JSON", os.path.join(REPO, "BENCH", "bench_r06_local.json")
+)
 
 
 def ensure_image_tables(spark) -> tuple[str, str]:
@@ -79,6 +88,24 @@ def time_image_suite(spark, path: str, with_decode: bool,
     one_run()  # warm: codegen + JIT of the fused agg (same as scaling_bench)
     sec = one_run()
     return {"rows": n, "sec": round(sec, 3), "rows_per_sec": round(n / sec, 1)}
+
+
+def summary(result: dict, detail_path: str) -> str:
+    """The one stdout line: headline, gate count, image-suite legs and the
+    5 slowest gates of ``result`` (the full breakdown is ``detail_path``)."""
+    gates = result["queries"]
+    top = sorted(gates.items(), key=lambda kv: (-kv[1], kv[0]))[:5]
+    return json.dumps({
+        "metric": result["metric"],
+        "value": result["value"],
+        "unit": result["unit"],
+        "total_single_shot_sec": result["total_single_shot_sec"],
+        "gates": len(gates),
+        "sf": result["sf"],
+        "image_suite": result["image_suite"],
+        "slowest_gates": dict(top),
+        "detail": os.path.relpath(detail_path, REPO),
+    })
 
 
 def main() -> None:
@@ -135,7 +162,7 @@ def main() -> None:
         suite_meta["sec"] + suite_decode["sec"] + sum(single_shot.values()), 3
     )
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else 0.1
-    print(json.dumps({
+    result = {
         "metric": "total_bench_sec",
         "value": total,
         "unit": "sec",
@@ -149,8 +176,13 @@ def main() -> None:
             "with_decode_violations": suite_decode_viol,
             "cpus": os.environ["SPARK_GRAFT_CPUS"],
         },
-    }))
+    }
     spark.stop()
+    os.makedirs(os.path.dirname(DETAIL_PATH), exist_ok=True)
+    with open(DETAIL_PATH, "w") as f:
+        json.dump(result, f, indent=1)
+        f.write("\n")
+    print(summary(result, DETAIL_PATH), flush=True)
 
 
 if __name__ == "__main__":

@@ -479,6 +479,27 @@ def test_scorecard_artifacts_rendered_next_to_sinks(spark, image_table, tmp_path
     assert rows2 == rows
 
 
+def test_resume_fails_loudly_when_committed_verdicts_are_gone(
+    spark, image_table, tmp_path
+):
+    """A resumed unit's verdicts were committed; if they cannot be read
+    back the run raises instead of rendering a scorecard without them."""
+    import shutil
+
+    from pyspark.errors import AnalysisException
+
+    df = spark.read.parquet(image_table)
+    out = str(tmp_path / "out")
+    CheckpointedRunner(_suite(), out, bucket_key="image_id",
+                       n_buckets=2).run(df, input_path=image_table)
+    shutil.rmtree(os.path.join(out, "verdicts"))
+    os.remove(os.path.join(out, "scorecard.csv"))
+    with pytest.raises(AnalysisException):
+        CheckpointedRunner(_suite(), out, bucket_key="image_id",
+                           n_buckets=2).run(df, input_path=image_table)
+    assert not os.path.exists(os.path.join(out, "scorecard.csv"))
+
+
 def test_scorecard_csv_quotes_commas_in_labels(tmp_path):
     """Review r05: partition values / check names containing commas must
     be quoted (csv.writer), not shift every column in the row."""
