@@ -38,32 +38,61 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 
+def _collect_vectors(df: DataFrame, id_col: str, vec_col: str, what: str,
+                     *extra: str) -> tuple:
+    """(ids, n×dim float64 matrix, *extra columns) of a small frame, rows
+    sorted by id (stable) — ONE Arrow collect, reshaped from the flat list
+    values, not a numpy array built from pickled ``Row`` lists. A NULL id,
+    a NULL vector or vectors of unequal length raise here, before any
+    kernel job: a flat reshape would silently mis-shape ragged input
+    whenever its total length happens to divide evenly."""
+    import numpy as np
+
+    t = df.toArrow()
+    ids, vec = (t.column(c).combine_chunks() for c in (id_col, vec_col))
+    if ids.null_count:
+        raise ValueError(f"{what} has a NULL {id_col}")
+    ids = ids.to_numpy()
+    order = np.argsort(ids, kind="stable")
+    ids = ids[order]
+    null = vec.is_null().to_numpy(zero_copy_only=False)[order]
+    if null.any():
+        raise ValueError(
+            f"{what} {id_col}={ids[null.argmax()]} has a NULL embedding")
+    lens = vec.value_lengths().to_numpy()[order]
+    dim = int(lens[0]) if len(lens) else 0
+    if (lens != dim).any():
+        i = (lens != dim).argmax()
+        raise ValueError(
+            f"{what} {id_col}={ids[i]} has {lens[i]} elements, "
+            f"{id_col}={ids[0]} has {dim}: vectors must share one length")
+    M = (vec.flatten().to_numpy(zero_copy_only=False)
+         .astype(np.float64).reshape(len(ids), dim)[order])
+    return (ids, M, *(t.column(c).to_numpy()[order] for c in extra))
+
+
 def _collect_centroids(centroids: DataFrame) -> tuple:
     """(cids, C×dim matrix, norms²) sorted by cid — ONE tiny collect.
     Norms are index-order folds (``_fold``), bit-identical to the JVM
     ``F.aggregate`` fold that computes the corpus-side norms."""
     import numpy as np
 
-    rows = sorted(centroids.select("vec_id", "embedding").collect(),
-                  key=lambda r: r["vec_id"])
-    if not rows:
+    cids, Cm = _collect_vectors(
+        centroids.select("vec_id", "embedding"), "vec_id", "embedding",
+        "centroid")
+    if not len(cids):
         # an empty centroid frame is always a caller bug (the kernel would
         # crash on an empty (0,) centroid matrix) — fail like the
         # zero-norm case: loudly, before any job runs
         raise ValueError("centroids is empty — nothing to score against")
-    for r in rows:
-        if r["embedding"] is None:
-            raise ValueError(
-                f"centroid vec_id={r['vec_id']} has a NULL embedding")
-    Cm = np.array([r["embedding"] for r in rows], dtype=np.float64)
     nb2 = _fold(Cm, Cm)
     for i in np.nonzero(nb2 == 0.0)[0][:1]:
         # cosine to a zero vector is undefined for every scored row —
         # fail loudly and early instead of emitting NaN assignments
         raise ValueError(
-            f"centroid vec_id={rows[i]['vec_id']} has zero norm — cosine "
+            f"centroid vec_id={cids[i]} has zero norm — cosine "
             "scoring is undefined; drop or re-seed it")
-    return np.array([r["vec_id"] for r in rows], dtype=np.int64), Cm, nb2
+    return cids, Cm, nb2
 
 
 def _round8_spark_repr(x: float) -> float:
@@ -357,19 +386,15 @@ def cosine_near_dup_pairs(emb: DataFrame, threshold: float,
     margin so half-up rounding can never drop a qualifying pair."""
     import numpy as np
 
-    b_rows = _with_norm(emb, "b", "eb", "nb2").limit(
-        max_rerank_rows + 1
-    ).collect()
-    if len(b_rows) > max_rerank_rows:
+    b_side = _with_norm(emb, "b", "eb", "nb2").limit(max_rerank_rows + 1)
+    bid, Bm, nb2 = _collect_vectors(b_side, "b", "eb", "rerank row", "nb2")
+    if len(bid) > max_rerank_rows:
         raise ValueError(
             f"cosine_near_dup_pairs is the bounded audit/rerank path: the "
             f"input exceeds max_rerank_rows={max_rerank_rows}; use "
             f"cosine_near_dup_lsh (or IVF bucketing) for corpus-scale "
             f"near-dup detection."
         )
-    bid = np.array([r["b"] for r in b_rows], dtype=np.int64)
-    Bm = np.array([r["eb"] for r in b_rows], dtype=np.float64)
-    nb2 = np.array([r["nb2"] for r in b_rows], dtype=np.float64)
     a = _with_norm(emb, "a", "ea", "na2")
     chunk_rows = max(1, (1 << 22) // max(1, len(bid)))  # as nearest_centroids
 

@@ -47,6 +47,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from anomalydetection_spark.functions.similarity import _fold
 from anomalydetection_spark.functions.stats_math import chi2_ppf
 
 
@@ -394,10 +395,13 @@ def run_rec_analysis(
                 except np.linalg.LinAlgError:
                     Ryy_inv = np.linalg.pinv(Ryy)
                 w = Rjy @ Ryy_inv
-                # one matrix product per (pattern, j) — not a Python loop
-                # per row (flagged rows can be O(rows) at alpha→0)
+                # one vectorized fold per (pattern, j) — not a Python loop
+                # per row (flagged rows can be O(rows) at alpha→0). The
+                # index-order fold, not BLAS `Y @ w`: BLAS picks its
+                # summation order by the row count, so a pattern split
+                # across Arrow batches would differ in the last bit.
                 Y = Xo[np.ix_(rows_to_estimate, o_pos)] - mu_b[others]
-                E[rows_to_estimate, j] = Y @ w + mu_b[j]
+                E[rows_to_estimate, j] = _fold(Y, w) + mu_b[j]
                 denom = R_b[j, j] if R_b[j, j] else np.nan
                 D[rows_to_estimate, j] = (
                     np.abs(E[rows_to_estimate, j] - X[rows_to_estimate, j]) / denom

@@ -129,6 +129,18 @@ def get_spark(
             + os.environ.get("SPARK_DRIVER_JAVA_OPTS", ""),
         )
         .config("spark.ui.enabled", "false")
+        # No per-call DataFrame call-site capture. With it on, PySpark 4.1
+        # wraps every functions/Column call (pyspark/errors/utils.py
+        # _with_origin) in getActiveSession, a conf read, a JVM origin
+        # set/clear and a failing `import IPython`. Round trips sent by the
+        # calling thread, local[4], seed-1 perfbench inputs: one K1
+        # run_rec_analysis 5,442 -> 1,422; one model_kernels pass 6,310 ->
+        # 1,860; one resumable_write pass 5,273 -> 2,433. The cost: an
+        # AnalysisException no longer carries the Python DataFrame
+        # fragment. Job call sites (by which perfbench assigns jobs to
+        # layers) come from a separate mechanism and are unchanged. PySpark
+        # reads this once per process, at the first wrapped call.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

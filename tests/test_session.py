@@ -100,3 +100,72 @@ def test_rewritten_zip_archive_is_still_reread(tmp_path, monkeypatch):
     finally:
         sys.modules.pop("zguard_old", None)
         sys.modules.pop("zguard_new", None)
+
+
+def test_session_turns_off_per_call_origin_capture(spark, monkeypatch):
+    """``get_spark`` turns off PySpark's per-call DataFrame call-site
+    capture. PySpark caches the answer at the first wrapped call, so the
+    cache is cleared to read this session's setting."""
+    from pyspark.errors import utils
+
+    monkeypatch.setattr(utils, "_enable_debugging_cache", None)
+    assert utils.is_debugging_enabled() is False
+
+
+def test_missing_column_raises_before_any_job(spark):
+    """Without the call-site capture, a missing column still fails at
+    analysis, before a job runs."""
+    from pyspark.errors import AnalysisException
+
+    sc = spark.sparkContext
+    df = spark.range(3)
+    sc.setJobGroup("missing_column", "missing column job count")
+    try:
+        with pytest.raises(AnalysisException, match="no_such_col"):
+            df.select("no_such_col").collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("missing_column")
+    finally:
+        sc.setJobGroup(None, None)
+    assert jobs == []
+
+
+def test_k1_run_stays_within_its_py4j_budget(spark, monkeypatch):
+    """One K1 ``run_rec_analysis`` over a 4-indicator frame sends at most
+    2,000 py4j commands from the calling thread (about 1,420 measured on a
+    4-core host; with the per-call call-site capture on, about 5,400).
+    py4j's finalizer thread sends the detach commands of collected
+    JavaObjects on its own schedule, so they are not counted."""
+    import threading
+
+    import numpy as np
+    from py4j.clientserver import ClientServerConnection
+    from pyspark.errors import utils
+
+    from anomalydetection_spark.kernels.recommender import run_rec_analysis
+
+    monkeypatch.setattr(utils, "_enable_debugging_cache", None)
+    rng = np.random.default_rng(3)
+    base = rng.normal(0, 1, 400)
+    X = np.column_stack([50 + 10 * base, 30 + 6 * base, 10 + 2 * base,
+                         rng.normal(100, 5, 400)]) + rng.normal(0, 1, (400, 4))
+    X[rng.random(X.shape) < 0.1] = np.nan
+    X[0] = [130.0, -10.0, 10.0, 100.0]  # planted gross outlier
+    cols = ["i1", "i2", "i3", "i4"]
+    df = local_frame(
+        spark, [(f"s{i}", *(None if np.isnan(v) else float(v) for v in r))
+                for i, r in enumerate(X)],
+        "site string, " + ", ".join(f"{c} double" for c in cols))
+
+    caller, sent = threading.get_ident(), [0]
+    send = ClientServerConnection.send_command
+
+    def counted(self, command, *args, **kwargs):
+        sent[0] += threading.get_ident() == caller
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    out = run_rec_analysis(df, ["site"], cols, alpha=0.95, min_row_obs=3)
+    flagged = out.filter("outlier_sp = 1").select("site").collect()
+    monkeypatch.undo()
+    assert ("s0",) in [tuple(r) for r in flagged]
+    assert sent[0] <= 2000, sent[0]

@@ -887,6 +887,34 @@ def test_centroid_scorer_degenerate_inputs(spark):
     }
 
 
+def test_collected_vector_sides_reject_null_and_ragged_vectors(spark):
+    """The driver-collected sides (IVF centroids, the block-cosine rerank
+    side) raise on a NULL id, a NULL vector or a ragged vector while the
+    plan is built. The ragged frame holds 6 values over 2 rows, so a flat
+    reshape alone would silently read it as two 3-element vectors."""
+    from anomalydetection_spark.functions.similarity import (
+        cosine_near_dup_pairs,
+        ivf_assign,
+    )
+
+    schema = "vec_id long, embedding array<double>"
+    emb = spark.createDataFrame([(0, [1.0, 2.0, 3.0])], schema)
+    ragged = spark.createDataFrame([(0, [1.0, 2.0]), (1, [3.0, 4.0, 5.0, 6.0])],
+                                   schema)
+    null = spark.createDataFrame([(0, [1.0, 2.0, 3.0]), (7, None)], schema)
+    null_id = spark.createDataFrame([(None, [1.0, 2.0, 3.0])], schema)
+    with pytest.raises(ValueError, match="vec_id=1 has 4 elements"):
+        ivf_assign(emb, ragged)
+    with pytest.raises(ValueError, match="vec_id=7 has a NULL embedding"):
+        ivf_assign(emb, null)
+    with pytest.raises(ValueError, match="b=1 has 4 elements"):
+        cosine_near_dup_pairs(ragged, 0.5)
+    with pytest.raises(ValueError, match="b=7 has a NULL embedding"):
+        cosine_near_dup_pairs(null, 0.5)
+    with pytest.raises(ValueError, match="centroid has a NULL vec_id"):
+        ivf_assign(emb, null_id)
+
+
 def _adversarial_frames(rng, n=120, c=16, dim=12):
     """(kind, rows) over which the scoring kernels must match the
     element-order reference bit for bit; rows with ``vec_id < c`` are
