@@ -21,6 +21,15 @@ committed via atomic rename. A crash between sink write and manifest
 commit re-runs that one unit — every sink write is an idempotent
 overwrite of the unit's own partition directory, so replays converge.
 
+Units that are not resumed run concurrently, from a thread pool of at
+most one thread per driver CPU: Spark runs jobs submitted from separate
+threads concurrently, so one unit's driver work (planning, fitting,
+collecting verdicts) overlaps another unit's jobs. The suite scores each
+run on its own copies of the checks, so units share no fitted state.
+Results keep unit order; the first unit error stops the units not yet
+started and is raised once the running ones are done. A unit's
+``violation_rows`` is counted by its own violations write.
+
 Snapshot pinning: the ledger records a fingerprint of the input (Iceberg
 snapshot id when the table provides one; else sorted (path, size,
 mtime) digest of the parquet files). A resume against a *different*
@@ -39,11 +48,12 @@ import hashlib
 import json
 import os
 import time
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from typing import Any, Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from anomalydetection_spark.session import local_frame
 from anomalydetection_spark.suite import ValidationSuite
@@ -133,6 +143,8 @@ class UnitResult:
     verdicts: int
     failed: int
     violation_rows: int
+    # the unit's wall time from its suite run to its ledger commit; units
+    # run concurrently, so these overlap and do not sum to the run's wall
     elapsed_sec: float
     skipped: bool = False
 
@@ -152,7 +164,8 @@ class RunReport:
 
 
 class CheckpointedRunner:
-    """Drives a ValidationSuite unit-by-unit with an idempotent ledger."""
+    """Drives a ValidationSuite over units, concurrently, with an
+    idempotent per-unit ledger."""
 
     def __init__(
         self,
@@ -407,10 +420,85 @@ class CheckpointedRunner:
                     pass
                 self._staging_marker = None
 
+    def _run_pending(self, pending: list[tuple[str, DataFrame]], spark,
+                     snapshot: str) -> list[tuple[dict, UnitResult, list[dict]]]:
+        """Score the pending units concurrently, results in unit order.
+
+        Spark runs jobs submitted from separate threads concurrently, so
+        one unit's driver work (planning, fitting, collecting verdicts)
+        overlaps another unit's jobs. That overlap is all threads buy
+        here, so there are no more of them than driver CPUs. Each thread
+        starts from a clone of the caller's JVM local properties (job
+        group, scheduler pool) and the session's tags, so every job of
+        the run lands where the caller's own jobs would. The first unit
+        error cancels the units not yet started, waits for the running
+        ones (each commits its ledger entry only after its sinks) and is
+        raised."""
+        if not pending:
+            return []
+        jsc = spark.sparkContext._jsc.sc()
+        props, tags = jsc.getLocalProperties(), spark.getTags()
+
+        def unit_thread(unit: str, slice_df: DataFrame):
+            jsc.setLocalProperties(props.clone())
+            for tag in tags:
+                spark.addTag(tag)
+            return self._run_unit(unit, slice_df, spark, snapshot)
+
+        workers = min(len(pending), len(os.sched_getaffinity(0)))
+        with ThreadPoolExecutor(workers) as pool:
+            futures = [pool.submit(unit_thread, *p) for p in pending]
+            wait(futures, return_when=FIRST_EXCEPTION)
+            if failed := [f for f in futures if f.done() and f.exception()]:
+                pool.shutdown(cancel_futures=True)  # waits for running units
+                raise failed[0].exception()
+        return [f.result() for f in futures]
+
+    def _run_unit(self, unit: str, slice_df: DataFrame, spark,
+                  snapshot: str) -> tuple[dict, UnitResult, list[dict]]:
+        """Write one unit's sinks, then commit its ledger entry."""
+        t0 = time.time()
+        res = self.suite.run(slice_df, spark)
+        unit_dir = os.path.join(self.out_dir, "verdicts", f"unit={unit}")
+        res.verdicts.write.mode("overwrite").parquet(unit_dir)
+        viol_rows = 0
+        if res.violations is not None:
+            vdir = os.path.join(self.out_dir, "violations", f"unit={unit}")
+            # counted by the write itself: a second read of the
+            # directory would cost a listing job and a count
+            obs = Observation()
+            (res.violations.observe(obs, F.count(F.lit(1)).alias("rows"))
+             .write.mode("overwrite").parquet(vdir))
+            viol_rows = obs.get["rows"]
+        vlocal = res.verdicts.collect()
+        res.release()  # unit's sinks are written — free decode caches
+        scorecard = [{
+            "row_key": unit + (f"/{v['partition']}" if v["partition"] else ""),
+            "check": v["check"], "passed": bool(v["passed"]),
+        } for v in vlocal]
+        rows = int(next(
+            (v["value"] for v in vlocal
+             if v["metric"] == "row_count" and v["partition"] == ""), -1,
+        ))
+        failed = len([v for v in vlocal if not v["passed"]])
+        elapsed = time.time() - t0
+        payload = {
+            "unit": unit, "snapshot": snapshot,
+            "unit_scheme": self._unit_scheme(), "rows": rows,
+            "checks": len(self.suite.checks), "verdicts": len(vlocal),
+            "failed": failed, "violation_rows": viol_rows,
+            "elapsed_sec": round(elapsed, 3),
+            "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+        }
+        self._commit(unit, payload)
+        return payload, UnitResult(unit, rows, len(vlocal), failed, viol_rows,
+                                   elapsed), scorecard
+
     def _run_units(self, df: DataFrame, spark, snapshot: str,
                    report: RunReport, lineage_rows: list) -> RunReport:
         scorecard_rows: list[dict] = []
         resumed_units: list[str] = []
+        pending: list[tuple[str, DataFrame]] = []
         for unit, slice_df in self._units(df, snapshot):
             rec = self._completed(unit, snapshot)
             if rec is not None:
@@ -419,43 +507,15 @@ class CheckpointedRunner:
                                rec["violation_rows"], rec["elapsed_sec"], skipped=True)
                 )
                 resumed_units.append(unit)
-                continue
-            t0 = time.time()
-            res = self.suite.run(slice_df, spark)
-            unit_dir = os.path.join(self.out_dir, "verdicts", f"unit={unit}")
-            res.verdicts.write.mode("overwrite").parquet(unit_dir)
-            viol_rows = 0
-            if res.violations is not None:
-                vdir = os.path.join(self.out_dir, "violations", f"unit={unit}")
-                res.violations.write.mode("overwrite").parquet(vdir)
-                viol_rows = spark.read.parquet(vdir).count()
-            vlocal = res.verdicts.collect()
-            res.release()  # unit's sinks are written — free decode caches
-            for v in vlocal:
-                scorecard_rows.append({
-                    "row_key": unit + (f"/{v['partition']}"
-                                       if v["partition"] else ""),
-                    "check": v["check"], "passed": bool(v["passed"]),
-                })
-            rows = int(next(
-                (v["value"] for v in vlocal
-                 if v["metric"] == "row_count" and v["partition"] == ""), -1,
-            ))
-            failed = len([v for v in vlocal if not v["passed"]])
-            elapsed = time.time() - t0
-            payload = {
-                "unit": unit, "snapshot": snapshot,
-                "unit_scheme": self._unit_scheme(), "rows": rows,
-                "checks": len(self.suite.checks), "verdicts": len(vlocal),
-                "failed": failed, "violation_rows": viol_rows,
-                "elapsed_sec": round(elapsed, 3),
-                "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            }
-            self._commit(unit, payload)
-            lineage_rows.append(payload)
-            report.units.append(
-                UnitResult(unit, rows, len(vlocal), failed, viol_rows, elapsed)
-            )
+            else:
+                report.units.append(None)  # filled in unit order below
+                pending.append((unit, slice_df))
+        done = iter(self._run_pending(pending, spark, snapshot))
+        for i, u in enumerate(report.units):
+            if u is None:
+                payload, report.units[i], rows = next(done)
+                lineage_rows.append(payload)
+                scorecard_rows.extend(rows)
         if resumed_units:
             # resumed units still appear on the scorecard — ONE
             # partition-pruned read of the verdicts root (dir name

@@ -82,11 +82,12 @@ class Check(abc.ABC):
     #: by every check, so total scan count is O(max rounds), not O(checks).
     n_post_rounds: int = 0
 
-    #: Set by ``ValidationSuite.run`` to its ``with_violations`` flag
-    #: BEFORE any check job runs. Checks whose aggregate and violation
-    #: frames can share one expensive pass (the decode check) persist
-    #: that intermediate only when a violations consumer exists —
-    #: a verdicts-only run must not pay the cache-build cost.
+    #: Set by ``ValidationSuite.run`` on its per-run copy to the run's
+    #: ``with_violations`` flag BEFORE any check job runs. Checks whose
+    #: aggregate and violation frames can share one expensive pass (the
+    #: decode check) persist that intermediate only when a violations
+    #: consumer exists — a verdicts-only run must not pay the cache-build
+    #: cost.
     cache_intermediates: bool = True
 
     #: True → ``row_violation`` reads this run's fitted model, so the
@@ -95,19 +96,19 @@ class Check(abc.ABC):
     keys: list[str] | None = None  # violation-row columns (None → all)
 
     def reset(self) -> None:
-        """Clear state fitted during a previous ``run()`` (model moments,
-        cached result frames). ``ValidationSuite.run`` calls this first,
-        so one suite instance can be reused across units / micro-batches
-        without scoring unit N against unit 1's fitted model."""
+        """Clear fitted state (model moments, cached result frames).
+        ``ValidationSuite.run`` fits a shallow copy of each check and
+        calls this on the copy first, so a model fitted by a standalone
+        ``violations(df)`` on the suite's own check never scores a run."""
         return None
 
     def release(self) -> None:
         """Free any persisted intermediate frames this check holds (e.g.
-        the decode-result cache). Called by ``ValidationSuite.release``
-        once the caller has consumed the run's violation frames; safe to
-        call repeatedly. Distinct from ``reset``: release only frees
-        storage — a released check can still serve its lazy DataFrames
-        (they recompute)."""
+        the decode-result cache). Called by ``SuiteResult.release`` on
+        the run's copies once the caller has consumed the run's
+        violation frames; safe to call repeatedly. Distinct from
+        ``reset``: release only frees storage — a released check can
+        still serve its lazy DataFrames (they recompute)."""
         return None
 
     def stats_exprs(self) -> list[Column]:

@@ -9,6 +9,10 @@ write to its sink tables. The violations frame is ONE filter + projection
 over the input for every row-local check (one scan whatever their number),
 plus the frames of the checks that need a join or the decode pass.
 
+``run()`` scores per-run shallow copies of the checks, so the suite's own
+checks stay unfitted configuration and one suite can score several
+slices at once (``CheckpointedRunner`` runs its units from threads).
+
 The verdicts frame is built on the driver, from rows the driver already
 holds, as a local relation (``session.local_frame``): collecting it runs
 no Spark job, and writing it starts no Python worker.
@@ -21,9 +25,11 @@ semantics viable at 10^12 rows.
 
 from __future__ import annotations
 
+import copy
 import operator
+import threading
 import time
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from functools import reduce
 from typing import Any, Callable, Sequence
 
@@ -47,19 +53,18 @@ class SuiteResult:
     violations: DataFrame | None  # (keys…, severity, _check) per violation
     metrics: dict[str, Any]  # raw collected stats (global slice)
     elapsed_sec: float
-    suite: "ValidationSuite | None" = None  # owner, for release()
+    checks: list[Check] = field(default_factory=list)  # this run's copies
 
     @property
     def passed(self) -> bool:
         return not self.verdicts.filter(~F.col("passed")).take(1)
 
     def release(self) -> None:
-        """Free check-held persisted intermediates (the decode verdict
-        cache) once ``violations`` has been written/collected. Required
-        when the suite instance is throwaway (``run_image_validation``
-        builds one per call) — otherwise the cache outlives the run."""
-        if self.suite is not None:
-            self.suite.release()
+        """Free the persisted intermediates this run's checks hold (the
+        decode verdict cache) once ``violations`` has been
+        written/collected; otherwise the cache outlives the run."""
+        for c in self.checks:
+            c.release()
 
 
 class ValidationSuite:
@@ -78,17 +83,19 @@ class ValidationSuite:
         self.partition_by = list(partition_by)
         self._memo_sc: Any = None
         self._memo: dict = {}
+        self._memo_lock = threading.RLock()  # re-entered by nested builds
 
     # ------------------------------------------------------------------
     def _once(self, key: Any, build: Callable[[], Any]) -> Any:
         """Columns that do not change between runs, built once per suite
         and SparkContext (a classic Column is a handle into one JVM)."""
         sc = SparkContext._active_spark_context
-        if self._memo_sc is not sc:
-            self._memo_sc, self._memo = sc, {}
-        if key not in self._memo:
-            self._memo[key] = build()
-        return self._memo[key]
+        with self._memo_lock:
+            if self._memo_sc is not sc:
+                self._memo_sc, self._memo = sc, {}
+            if key not in self._memo:
+                self._memo[key] = build()
+            return self._memo[key]
 
     def _stats_exprs(self) -> list[Column]:
         # dedupe identical expressions contributed by multiple checks
@@ -151,8 +158,11 @@ class ValidationSuite:
     ) -> SuiteResult:
         spark = spark or df.sparkSession
         t0 = time.time()
-        for c in self.checks:
-            c.reset()  # drop models/caches fitted by a previous run()
+        # this run's own copies: fitted models and cached frames live on
+        # them, so concurrent runs of one suite never share state
+        checks = [copy.copy(c) for c in self.checks]
+        for c in checks:
+            c.reset()  # drop state a standalone fit left on the template
             # verdicts-only runs skip shared-pass caches (decode results):
             # nothing will re-read them, so building the cache is pure cost
             c.cache_intermediates = with_violations
@@ -163,51 +173,54 @@ class ValidationSuite:
                          v["metric"], v["value"], v["lo"], v["hi"], v["passed"])
                         for v in vs)
 
+        result = None
         try:
             global_stats, per_part = self._fused_stats(df)
-            for c in self.checks:
+            for c in checks:
                 add(c.verdicts(global_stats))
                 for part_key, stats in per_part:
                     add(c.verdicts(stats), part_key)
 
             # fused post rounds: ONE agg per round shared by all checks
             # (robust-z MAD → violation counts, Mahalanobis flag counts, …)
-            max_rounds = max((c.n_post_rounds for c in self.checks), default=0)
+            max_rounds = max((c.n_post_rounds for c in checks), default=0)
             for rnd in range(max_rounds):
-                live = [c for c in self.checks if c.n_post_rounds > rnd]
+                live = [c for c in checks if c.n_post_rounds > rnd]
                 exprs = [e for c in live for e in c.post_exprs(rnd)]
                 if exprs:
                     post_stats = df.agg(*exprs).first().asDict()
                     for c in live:
                         add(c.post_verdicts(rnd, post_stats))
 
-            for c in self.checks:
+            for c in checks:
                 add(c.run_extra(df, global_stats))
 
-            return SuiteResult(
+            result = SuiteResult(
                 verdicts=local_frame(spark, rows, VERDICT_SCHEMA),
-                violations=self._violations(df) if with_violations else None,
+                violations=self._violations(df, checks) if with_violations else None,
                 metrics=global_stats,
                 elapsed_sec=time.time() - t0,
-                suite=self,
+                checks=checks,
             )
+            return result
         finally:
-            if not with_violations:
+            if result is None or not with_violations:
                 # nothing downstream will re-read check-held intermediates
                 # (decode-result caches etc.) — free them now; otherwise
                 # they stay persisted so the returned lazy violations
                 # frame shares the run's single decode pass (call
-                # ``release()`` after consuming it).
-                self.release()
+                # ``SuiteResult.release()`` after consuming it).
+                for c in checks:
+                    c.release()
 
-    def _violations(self, df: DataFrame) -> DataFrame | None:
+    def _violations(self, df: DataFrame, checks: list[Check]) -> DataFrame | None:
         """All violation rows, typed and ordered as the per-check frames'
         ``unionByName(allowMissingColumns=True)``: ONE filter on the OR of
         the row-local predicates (pushable atoms reach the scan), ONE
         projection inlining a ``(keys…, severity, _check)`` struct per
         violated check, then the frame-building checks' frames."""
         local, frames, order = [], [], []
-        for i, c in enumerate(self.checks):
+        for i, c in enumerate(checks):
             rv = (c.row_violation(df) if c.fitted
                   else self._once(("rv", i), lambda: c.row_violation(df)))
             if rv is not None:
@@ -247,14 +260,6 @@ class ValidationSuite:
             return None
         out = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
         return out.select(*order) if local and len(frames) > 1 else out
-
-    def release(self) -> None:
-        """Free persisted intermediates held by checks (e.g. the decode
-        verdict cache). Call after the returned violation frames have
-        been written/collected; the next ``run()`` also frees them via
-        ``reset()``."""
-        for c in self.checks:
-            c.release()
 
 
 def quarantine_split(

@@ -5,8 +5,8 @@ import json
 import os
 import time
 
+import pyspark.sql.functions as F
 import pytest
-
 from pyspark.sql.types import StructType
 
 from anomalydetection_spark.checkpoint import (
@@ -20,6 +20,7 @@ from anomalydetection_spark.checks import (
     NotNullCheck,
     UniquenessCheck,
 )
+from anomalydetection_spark.checks.base import Check
 from anomalydetection_spark.suite import ValidationSuite
 from anomalydetection_spark.synth import generate_pandas, to_spark
 
@@ -304,6 +305,14 @@ def test_staged_runner_commits_empty_and_one_row_units(spark, tmp_path):
     rows = sorted(u.rows for u in report.units)
     assert rows[0] == 0 and sum(rows) == 6
     assert len(os.listdir(os.path.join(out, "_ledger"))) == 8
+    # violation rows are counted by the write itself; they equal what
+    # landed, 0 for an empty unit
+    lineage = spark.read.parquet(os.path.join(out, "lineage")).collect()
+    assert len(lineage) == 8
+    for r in lineage:
+        vdir = os.path.join(out, "violations", f"unit={r['unit']}")
+        assert r["violation_rows"] == spark.read.parquet(vdir).count(), r["unit"]
+    assert min(r["violation_rows"] for r in lineage if r["rows"] == 0) == 0
 
 
 def test_staging_gc_spares_concurrently_live_tags(spark, image_table, tmp_path):
@@ -520,3 +529,110 @@ def test_scorecard_csv_quotes_commas_in_labels(tmp_path):
     assert by_label["region=US, East"] == ["region=US, East", "1", "1"]
     assert by_label["region=EU"] == ["region=EU", "0", "0"]
     assert by_label["TOTAL"] == ["TOTAL", "1", "1"]
+
+
+def _units_of(n):
+    return [f"bucket={i:04d}" for i in range(n)]
+
+
+def test_concurrent_units_report_and_lineage_in_unit_order(
+        spark, image_table, tmp_path):
+    """Units run concurrently, yet the report, the lineage rows and a
+    partial resume keep unit order."""
+    df = spark.read.parquet(image_table)
+    out = str(tmp_path / "out")
+
+    def run():
+        return CheckpointedRunner(_suite(), out, bucket_key="image_id",
+                                  n_buckets=8).run(df, input_path=image_table)
+
+    assert [u.unit for u in run().units] == _units_of(8)
+    # part files by number, rows within a file as written: write order
+    lineage = (spark.read.parquet(os.path.join(out, "lineage"))
+               .withColumn("file", F.input_file_name()).collect())
+    assert [r["unit"] for r in sorted(lineage, key=lambda r: r["file"])] == _units_of(8)
+    for u in ("bucket=0001", "bucket=0005"):
+        os.remove(os.path.join(out, "_ledger", f"{u}.json"))
+    report = run()
+    assert [u.unit for u in report.units] == _units_of(8)
+    assert [u.skipped for u in report.units] == [
+        u not in ("bucket=0001", "bucket=0005") for u in _units_of(8)]
+
+
+class _FailOn(Check):
+    """Raises while scoring the unit that holds ``image_id``, while armed."""
+
+    def __init__(self, image_id):
+        self.name = "fail_on"
+        self.image_id = image_id
+        self.armed = True
+
+    def stats_exprs(self):
+        hit = (F.col("image_id") == F.lit(self.image_id)).cast("int")
+        return [F.max(hit).alias("fail_on__hit")]
+
+    def verdicts(self, stats):
+        if self.armed and stats["fail_on__hit"]:
+            raise RuntimeError(f"planted fault on {self.image_id}")
+        return []
+
+
+def test_unit_error_raises_and_relaunch_converges(spark, image_table, tmp_path):
+    """A unit that fails makes run() raise its error once the running
+    units are done. Every ledger entry has its verdicts partition, and a
+    relaunch without the fault lands the verdict rows of a run that never
+    failed."""
+    df = spark.read.parquet(image_table)
+    target = df.select("image_id").first()["image_id"]
+    bad = spark.range(1).select(
+        F.pmod(F.xxhash64(F.lit(target)), F.lit(8)).alias("b")).first()["b"]
+    fault = _FailOn(target)
+    suite = ValidationSuite(_suite().checks + [fault], table_name="images")
+
+    def run(out):
+        return CheckpointedRunner(suite, out, bucket_key="image_id",
+                                  n_buckets=8).run(df, input_path=image_table)
+
+    out, clean = str(tmp_path / "out"), str(tmp_path / "clean")
+    with pytest.raises(RuntimeError, match="planted fault"):
+        run(out)
+    ledger = os.path.join(out, "_ledger")
+    committed = [n[:-len(".json")] for n in
+                 (os.listdir(ledger) if os.path.isdir(ledger) else [])
+                 if n.endswith(".json")]
+    assert f"bucket={bad:04d}" not in committed
+    for u in committed:
+        assert os.path.isdir(os.path.join(out, "verdicts", f"unit={u}")), u
+
+    fault.armed = False
+    assert run(out).resumed == len(committed)
+    run(clean)
+
+    def verdict_rows(d):
+        return sorted(map(repr, spark.read.parquet(os.path.join(d, "verdicts")).collect()))
+
+    assert verdict_rows(out) == verdict_rows(clean)
+
+
+def test_unit_jobs_run_in_the_callers_job_group(spark, image_table, tmp_path):
+    """Unit threads start from the caller's JVM local properties: every
+    job the run submits is in the caller's job group."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    store = jsc.statusStore()
+
+    def job_ids():
+        jsc.listenerBus().waitUntilEmpty()
+        jobs = store.jobsList(None)  # a Scala Seq
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+    df = spark.read.parquet(image_table)
+    before = job_ids()
+    sc.setJobGroup("ckpt_units", "checkpoint units in the caller's group")
+    try:
+        CheckpointedRunner(_suite(), str(tmp_path / "out"), bucket_key="image_id",
+                           n_buckets=4).run(df, input_path=image_table)
+    finally:
+        sc.setJobGroup(None, None)
+    ran = job_ids() - before
+    assert ran and ran <= set(sc.statusTracker().getJobIdsForGroup("ckpt_units"))

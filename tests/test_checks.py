@@ -290,6 +290,55 @@ def test_suite_reuse_refits_model_per_run(spark):
     assert all(v == 0.0 for v in rates.values())
 
 
+def test_one_suite_scores_two_slices_at_once(spark):
+    """A run fits and caches on its own copies of the suite's checks, so
+    one suite instance scoring two slices from two threads at once gives
+    the verdicts and violations of two runs one after the other, and its
+    own checks hold no fitted state afterwards."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from anomalydetection_spark.image_udfs import DecodeCheck
+    from anomalydetection_spark.plans.image_suite import drift_baseline_histograms
+    from anomalydetection_spark.synth import generate_pandas, to_spark
+
+    pdf, _ = generate_pandas(300, with_payload=True)
+    df = to_spark(spark, pdf).cache()
+    # two slices with different models: below and above the median width
+    med = float(pdf["w"].median())
+    slices = [df.filter(F.col("w") < med), df.filter(F.col("w") >= med)]
+    rz = RobustZScoreCheck("w", keys=["image_id"])
+    md = MahalanobisCheck(["w", "h"], alpha=0.99, keys=["image_id"])
+    dec = DecodeCheck(max_violation_rate=1.0, max_caption_mismatch_rate=1.0)
+    suite = ValidationSuite([
+        rz, md, UniquenessCheck(["image_id"]),
+        DriftCheck("w", lo=16, hi=2048, nbins=64, group_cols=["fmt"],
+                   baseline=drift_baseline_histograms(df, ["w"])["w"]),
+        dec,
+    ], "images")
+
+    def score(part):
+        res = suite.run(part, spark)
+        try:
+            return (sorted(map(repr, res.verdicts.collect())),
+                    sorted(map(repr, res.violations.collect())))
+        finally:
+            res.release()
+
+    sequential = [score(part) for part in slices]
+    assert sequential[0] != sequential[1]
+    both = threading.Barrier(2)
+
+    def at_once(part):
+        both.wait()
+        return score(part)
+
+    with ThreadPoolExecutor(2) as pool:
+        assert list(pool.map(at_once, slices)) == sequential
+    assert rz._median is None and md._solved is False and dec._results is None
+    df.unpersist()
+
+
 def test_decode_check_reset_clears_cached_results():
     from anomalydetection_spark.image_udfs import DecodeCheck
 
@@ -549,7 +598,7 @@ def test_anomaly_checks_on_empty_and_one_row_inputs(spark, n_rows, partition_by)
         assert check.violations(df).collect() == []
 
 
-def test_unit_invariant_columns_built_once_per_suite(spark, images):
+def test_unit_invariant_columns_built_once_per_suite(spark, images, monkeypatch):
     """A second run of the same suite (the next checkpointed unit) builds
     no fused-pass expression and no static violation predicate again;
     only the fitted checks rebuild theirs, once per run."""
@@ -563,18 +612,21 @@ def test_unit_invariant_columns_built_once_per_suite(spark, images):
     ], "images", partition_by=["fmt"])
     calls = collections.Counter()
 
-    def count(check, method):
-        inner = getattr(check, method)
+    # counted on the classes, per check name: a run scores copies of the
+    # suite's checks, so a wrapper bound to one instance would be copied
+    # along with it and call back into the (unfitted) original. Every
+    # original is read before any is patched, so a subclass of a patched
+    # class never wraps its wrapper.
+    def counted(method, inner):
+        def wrapped(self, *args):
+            calls[self.name, method] += 1
+            return inner(self, *args)
+        return wrapped
 
-        def wrapped(*args):
-            calls[check.name, method] += 1
-            return inner(*args)
-
-        setattr(check, method, wrapped)
-
-    for c in suite.checks:
-        count(c, "stats_exprs")
-        count(c, "row_violation")
+    originals = [(cls, m, getattr(cls, m)) for cls in {type(c) for c in suite.checks}
+                 for m in ("stats_exprs", "row_violation")]
+    for cls, method, inner in originals:
+        monkeypatch.setattr(cls, method, counted(method, inner))
     first = sorted(map(repr, suite.run(images).violations.collect()))
     after_first = calls.copy()
     assert sorted(map(repr, suite.run(images).violations.collect())) == first

@@ -225,9 +225,11 @@ def test_decode_runs_once_per_suite_run(spark, images_path):
     from anomalydetection_spark.suite import ValidationSuite
 
     df = spark.read.parquet(images_path)
-    check = DecodeCheck(max_violation_rate=1.0, max_caption_mismatch_rate=1.0)
-    suite = ValidationSuite([check], table_name="imgs")
+    suite = ValidationSuite(
+        [DecodeCheck(max_violation_rate=1.0, max_caption_mismatch_rate=1.0)],
+        table_name="imgs")
     res = suite.run(df, spark)
+    (check,) = res.checks  # the run's own copy holds the decode cache
     try:
         # the decode-result frame was materialized (cached) by run_extra
         assert check._results is not None
@@ -237,7 +239,7 @@ def test_decode_runs_once_per_suite_run(spark, images_path):
         assert "InMemoryTableScan" in viol_plan
         assert res.violations.count() >= 0  # materializes via the cache
     finally:
-        suite.release()
+        res.release()
     assert not check._results.storageLevel.useMemory  # released
 
 
