@@ -24,9 +24,12 @@ overwrite of the unit's own partition directory, so replays converge.
 Units that are not resumed run concurrently, from a thread pool of at
 most one thread per driver CPU: Spark runs jobs submitted from separate
 threads concurrently, so one unit's driver work (planning, fitting,
-collecting verdicts) overlaps another unit's jobs. The suite scores each
-run on its own copies of the checks, so units share no fitted state.
-Results keep unit order; the first unit error stops the units not yet
+collecting verdicts) overlaps another unit's jobs. On 4 cores, 16 units
+over 16k rows took 34–40% less wall time than one after another, at the
+same CPU, and twice as many threads as CPUs was no faster (README,
+concurrent checkpoint units). The suite scores each run on its own
+copies of the checks, so units share no fitted state. Results keep unit
+order; the first unit error or an interrupt stops the units not yet
 started and is raised once the running ones are done. A unit's
 ``violation_rows`` is counted by its own violations write.
 
@@ -48,7 +51,7 @@ import hashlib
 import json
 import os
 import time
-from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
+from concurrent.futures import Future, ThreadPoolExecutor, as_completed
 from dataclasses import dataclass, field
 from typing import Any, Sequence
 
@@ -64,6 +67,14 @@ LINEAGE_SCHEMA = (
     "unit string, snapshot string, rows long, checks int, verdicts int, "
     "failed int, violation_rows long, elapsed_sec double, committed_at string"
 )
+
+
+def driver_cpus() -> int:
+    """CPUs the driver process may run on: its affinity set where the OS
+    reports one, else the machine's CPU count."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
 
 
 def input_fingerprint(spark: SparkSession, path: str) -> str:
@@ -420,40 +431,6 @@ class CheckpointedRunner:
                     pass
                 self._staging_marker = None
 
-    def _run_pending(self, pending: list[tuple[str, DataFrame]], spark,
-                     snapshot: str) -> list[tuple[dict, UnitResult, list[dict]]]:
-        """Score the pending units concurrently, results in unit order.
-
-        Spark runs jobs submitted from separate threads concurrently, so
-        one unit's driver work (planning, fitting, collecting verdicts)
-        overlaps another unit's jobs. That overlap is all threads buy
-        here, so there are no more of them than driver CPUs. Each thread
-        starts from a clone of the caller's JVM local properties (job
-        group, scheduler pool) and the session's tags, so every job of
-        the run lands where the caller's own jobs would. The first unit
-        error cancels the units not yet started, waits for the running
-        ones (each commits its ledger entry only after its sinks) and is
-        raised."""
-        if not pending:
-            return []
-        jsc = spark.sparkContext._jsc.sc()
-        props, tags = jsc.getLocalProperties(), spark.getTags()
-
-        def unit_thread(unit: str, slice_df: DataFrame):
-            jsc.setLocalProperties(props.clone())
-            for tag in tags:
-                spark.addTag(tag)
-            return self._run_unit(unit, slice_df, spark, snapshot)
-
-        workers = min(len(pending), len(os.sched_getaffinity(0)))
-        with ThreadPoolExecutor(workers) as pool:
-            futures = [pool.submit(unit_thread, *p) for p in pending]
-            wait(futures, return_when=FIRST_EXCEPTION)
-            if failed := [f for f in futures if f.done() and f.exception()]:
-                pool.shutdown(cancel_futures=True)  # waits for running units
-                raise failed[0].exception()
-        return [f.result() for f in futures]
-
     def _run_unit(self, unit: str, slice_df: DataFrame, spark,
                   snapshot: str) -> tuple[dict, UnitResult, list[dict]]:
         """Write one unit's sinks, then commit its ledger entry."""
@@ -498,22 +475,44 @@ class CheckpointedRunner:
                    report: RunReport, lineage_rows: list) -> RunReport:
         scorecard_rows: list[dict] = []
         resumed_units: list[str] = []
-        pending: list[tuple[str, DataFrame]] = []
-        for unit, slice_df in self._units(df, snapshot):
-            rec = self._completed(unit, snapshot)
-            if rec is not None:
-                report.units.append(
-                    UnitResult(unit, rec["rows"], rec["verdicts"], rec["failed"],
-                               rec["violation_rows"], rec["elapsed_sec"], skipped=True)
-                )
-                resumed_units.append(unit)
-            else:
-                report.units.append(None)  # filled in unit order below
-                pending.append((unit, slice_df))
-        done = iter(self._run_pending(pending, spark, snapshot))
+        jsc = spark.sparkContext._jsc.sc()
+        props, tags = jsc.getLocalProperties(), spark.getTags()
+
+        def unit_thread(unit: str, slice_df: DataFrame):
+            # a fresh clone per unit: Spark writes per-job state (SQL
+            # execution ids) into the properties, so threads share none
+            jsc.setLocalProperties(props.clone())
+            for tag in tags:
+                spark.addTag(tag)
+            return self._run_unit(unit, slice_df, spark, snapshot)
+
+        # The pool starts a thread per submitted unit until it holds
+        # driver_cpus() of them, so it never outnumbers the pending units.
+        with ThreadPoolExecutor(driver_cpus()) as pool:
+            try:
+                for unit, slice_df in self._units(df, snapshot):
+                    rec = self._completed(unit, snapshot)
+                    if rec is None:
+                        report.units.append(pool.submit(unit_thread, unit, slice_df))
+                        continue
+                    report.units.append(
+                        UnitResult(unit, rec["rows"], rec["verdicts"], rec["failed"],
+                                   rec["violation_rows"], rec["elapsed_sec"],
+                                   skipped=True)
+                    )
+                    resumed_units.append(unit)
+                for f in as_completed(
+                        [u for u in report.units if isinstance(u, Future)]):
+                    f.result()  # raises the first unit error
+            except BaseException:
+                # a unit error or an interrupt: units not yet started
+                # never start; the running ones finish (each commits its
+                # ledger entry only after its sinks) before this raises
+                pool.shutdown(cancel_futures=True)
+                raise
         for i, u in enumerate(report.units):
-            if u is None:
-                payload, report.units[i], rows = next(done)
+            if isinstance(u, Future):
+                payload, report.units[i], rows = u.result()
                 lineage_rows.append(payload)
                 scorecard_rows.extend(rows)
         if resumed_units:

@@ -96,10 +96,13 @@ class Check(abc.ABC):
     keys: list[str] | None = None  # violation-row columns (None → all)
 
     def reset(self) -> None:
-        """Clear fitted state (model moments, cached result frames).
+        """Forget fitted state (model moments, cached result frames).
         ``ValidationSuite.run`` fits a shallow copy of each check and
         calls this on the copy first, so a model fitted by a standalone
-        ``violations(df)`` on the suite's own check never scores a run."""
+        ``violations(df)`` on the suite's own check never scores a run.
+        Never frees storage: the copy shares the frames it forgets with
+        the check it was copied from, which still owns them
+        (``release``)."""
         return None
 
     def release(self) -> None:

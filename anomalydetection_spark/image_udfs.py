@@ -152,7 +152,8 @@ class DecodeCheck(Check):
         self._results: DataFrame | None = None
 
     def reset(self) -> None:
-        self.release()
+        # forget, never unpersist: a run's copy shares the frame with the
+        # check it was copied from
         self._results = None
 
     def release(self) -> None:

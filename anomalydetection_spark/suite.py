@@ -62,7 +62,9 @@ class SuiteResult:
     def release(self) -> None:
         """Free the persisted intermediates this run's checks hold (the
         decode verdict cache) once ``violations`` has been
-        written/collected; otherwise the cache outlives the run."""
+        written/collected. Required after every run with violations:
+        nothing else frees them, so a reused suite whose caller skips
+        this keeps one decode cache per run."""
         for c in self.checks:
             c.release()
 

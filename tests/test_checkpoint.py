@@ -636,3 +636,29 @@ def test_unit_jobs_run_in_the_callers_job_group(spark, image_table, tmp_path):
         sc.setJobGroup(None, None)
     ran = job_ids() - before
     assert ran and ran <= set(sc.statusTracker().getJobIdsForGroup("ckpt_units"))
+
+
+def test_interrupt_stops_units_not_yet_started(spark, image_table, tmp_path,
+                                               monkeypatch):
+    """An interrupt while run() waits on its units cancels the units the
+    pool has not started: the running unit finishes and commits, the
+    rest never commit, and the interrupt reaches the caller."""
+    import anomalydetection_spark.checkpoint as ckpt
+
+    class Interrupt(BaseException):
+        pass
+
+    def interrupted(futures):
+        first = futures[0]
+        while not (first.running() or first.done()):
+            time.sleep(0.01)
+        raise Interrupt
+
+    monkeypatch.setattr(ckpt, "driver_cpus", lambda: 1)
+    monkeypatch.setattr(ckpt, "as_completed", interrupted)
+    out = str(tmp_path / "out")
+    with pytest.raises(Interrupt):
+        CheckpointedRunner(_suite(), out, bucket_key="image_id", n_buckets=4).run(
+            spark.read.parquet(image_table), input_path=image_table)
+    assert os.listdir(os.path.join(out, "_ledger")) == ["bucket=0000.json"]
+    assert os.listdir(os.path.join(out, "verdicts")) == ["unit=bucket=0000"]

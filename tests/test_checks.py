@@ -353,7 +353,12 @@ def test_decode_check_reset_clears_cached_results():
     c._results = fake
     c.reset()
     assert c._results is None
-    assert fake.unpersisted  # reset also frees the persisted decode cache
+    # reset only forgets: a suite run's copy shares the frame with the
+    # check it was copied from, which frees it with release()
+    assert not fake.unpersisted
+    c._results = fake
+    c.release()
+    assert fake.unpersisted
 
 
 def test_violations_carry_severity_tier(spark, images):

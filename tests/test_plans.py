@@ -243,6 +243,31 @@ def test_decode_runs_once_per_suite_run(spark, images_path):
     assert not check._results.storageLevel.useMemory  # released
 
 
+def test_suite_run_leaves_the_checks_own_decode_cache(spark, images_path):
+    """A run's copy of a check shares the frames the suite's own check
+    holds. The run forgets them on its copy and never frees them: a
+    decode cache built by a standalone call on the suite's own check
+    stays persisted through a run on another slice and its release().
+    (Spark keys caches by plan, so a run over the very frame the
+    standalone call decoded would reuse, and release, that one cache.)"""
+    from anomalydetection_spark.image_udfs import DecodeCheck
+
+    df = spark.read.parquet(images_path)
+    dec = DecodeCheck(max_violation_rate=1.0, max_caption_mismatch_rate=1.0)
+    dec.run_extra(df)  # standalone: caches on the suite's own check
+    own = dec._results
+    try:
+        res = ValidationSuite([dec], table_name="imgs").run(
+            df.filter(F.col("fmt") == "png"), spark)
+        (run_copy,) = res.checks
+        assert run_copy._results is not own
+        assert run_copy._results.storageLevel.useMemory
+        res.release()
+        assert dec._results is own and own.storageLevel.useMemory
+    finally:
+        dec.release()
+
+
 def test_salted_count_matches_plain_and_has_two_levels(spark, images_path):
     df = spark.read.parquet(images_path)
     plain = {tuple(r)[:-1]: r["count"]
